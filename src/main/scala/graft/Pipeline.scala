@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Manifest
 import graft.sink.{LocalFsStore, Uploader}
@@ -53,11 +53,21 @@ object Pipeline {
       .as[(Long, String, String)]
       .map { case (id, path, text) => (id, path, text.getBytes("UTF-8")) }
 
-    // 3. Provision container + upload via per-partition clients. Wall-time
-    //    around the materializing action gives the uploads/second the
-    //    reference's set_speed poll loop reports (bulkupload.py:363-387).
+    // 3. Provision container + upload via per-partition clients into a
+    //    scratch store that is deleted before returning (the report row
+    //    is a local frame, so nothing reads the store afterwards).
+    //    Wall-time around the materializing action gives the
+    //    uploads/second the reference's set_speed poll loop reports
+    //    (bulkupload.py:363-387).
     val storeRoot =
       java.nio.file.Files.createTempDirectory("graft-store").toString
+    try uploadAndReport(spark, m, pending, storeRoot)
+    finally graft.ops.SessionCleanup.deleteRecursively(storeRoot)
+  }
+
+  private def uploadAndReport(spark: SparkSession, m: DataFrame,
+      pending: Dataset[(Long, String, Array[Byte])], storeRoot: String): DataFrame = {
+    import spark.implicits._
     new LocalFsStore(storeRoot).ensureContainer()
     val counters = Uploader.mkCounters(spark)
     val t0 = System.nanoTime()

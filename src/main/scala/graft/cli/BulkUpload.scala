@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Manifest, PathFns}
 import graft.sink.{LocalFsStore, ManifestStore, ObjectStore, Reports, RetryingStore, Uploader}
@@ -16,6 +16,14 @@ import graft.sink.{LocalFsStore, ManifestStore, ObjectStore, Reports, RetryingSt
   * Object keys apply the documented cutoff-prefix + leading-slash rules
   * (bulkupload.py:48-56, both reference bugs fixed per SURVEY §2.8).
   * A re-run resumes: only still-pending rows upload (readme.md:42).
+  *
+  * Spark actions per run, one per output: one aggregate over the cached
+  * upload results (this is the action that uploads) gives attempted and
+  * ok; the snapshot write materialises the marked manifest before the
+  * rename; one aggregate over the swapped-in snapshot gives (total,
+  * uploaded) for both `.upload.out` and the summary; the error log is
+  * appended only when some row failed. `.upload.report.log` is written
+  * from the counts already in hand.
   */
 object BulkUpload {
 
@@ -38,12 +46,14 @@ object BulkUpload {
         .getOrElse(col("path"))
       PathFns.stripLeadingSlash(cut)
     }
+    // the listing's paths are not URI-escaped (`file:/a b/c d%.txt`):
+    // Hadoop's Path parses them as written, java.net.URI would throw.
     val pending = Manifest.filterPending(m)
       .select(col("id"), col("path"), keyCol.as("key"))
       .as[(Long, String, String)]
       .map { case (id, path, key) =>
         (id, key, java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-          new java.net.URI(path).getPath)))
+          new org.apache.hadoop.fs.Path(path).toUri.getPath)))
       } // open(path, 'rb'), bulkupload.py:39 — executor-side per file
 
     // Accumulators feed live progress only; authoritative counts come from
@@ -56,30 +66,35 @@ object BulkUpload {
     val results = Uploader.upload(pending, () => mkStore(storeRoot),
       parallelism, maxAttempts = 5, retrySleepMs = retrySleepMs,
       counters = Some(counters)).toDF().cache()
-    val attempted = results.count()
-    val okCount = results.filter(col("ok")).count()
+    val (attempted, okCount) = countOf(results.agg(count(lit(1)), countIf(col("ok"))))
     val elapsedSec = math.max((System.nanoTime() - t0) / 1e9, 1e-9)
     val ratePerSec = okCount / elapsedSec
 
-    val marked = Manifest.markUploaded(m, results.filter(col("ok"))).cache()
-    marked.count()
     // all post-swap reads go through the swapped-in snapshot, never the
     // pre-swap lineage (see ManifestStore.swap).
-    val current = ManifestStore.swap(marked, manifestRoot)
+    val current = ManifestStore.swap(
+      Manifest.markUploaded(m, results.filter(col("ok"))), manifestRoot)
+    val (total, totalUploaded) =
+      countOf(current.agg(count(lit(1)), countIf(col("uploaded"))))
 
-    Uploader.writeErrorLog(results, s"$manifestRoot/.upload.error.log")
-    Reports.writeProgress(current, s"$manifestRoot/.upload.out", ratePerSec)
-    Reports.writeReport(results, s"$manifestRoot/.upload.report.log")
-
-    val summary = Summary(
-      attempted = attempted,
-      uploaded = okCount,
-      failed = attempted - okCount,
-      totalUploaded = current.filter(col("uploaded")).count(),
-      total = current.count())
+    val failed = attempted - okCount
+    if (failed > 0)
+      Uploader.writeErrorLog(results, s"$manifestRoot/.upload.error.log")
+    Reports.overwrite(s"$manifestRoot/.upload.out",
+      Reports.progressLine(totalUploaded, total, ratePerSec))
+    Reports.overwrite(s"$manifestRoot/.upload.report.log",
+      Reports.reportText(attempted, okCount, failed))
     results.unpersist()
-    marked.unpersist()
-    summary
+    Summary(attempted = attempted, uploaded = okCount, failed = failed,
+      totalUploaded = totalUploaded, total = total)
+  }
+
+  private def countIf(c: Column): Column =
+    coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
+
+  private def countOf(agg: DataFrame): (Long, Long) = {
+    val r = agg.head()
+    (r.getLong(0), r.getLong(1))
   }
 
   def main(args: Array[String]): Unit = {

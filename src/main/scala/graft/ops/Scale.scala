@@ -38,10 +38,36 @@ object Scale {
     * materialized here and the intermediate sorted RDD is released
     * immediately — the data is never stored twice. With the default, the
     * intermediate stays pinned so the returned lazy frame stays cheap,
-    * and is released when the owning session ends ([[SessionCleanup]]).
+    * and is released when the owning session ends ([[SessionCleanup]]);
+    * callers that know when they are done use [[assignIdsByRangeCounted]]
+    * and release it themselves.
     */
   def assignIdsByRange(df: DataFrame, key: String, idCol: String = "id",
       partitions: Int = 0, cacheResult: Boolean = false): DataFrame = {
+    val AssignedIds(out, _, release) = assignIdsByRangeCounted(df, key, idCol, partitions)
+    val spark = df.sparkSession
+    if (cacheResult) {
+      out.cache()
+      out.count() // materialize the id'd frame, then drop the intermediate
+      release()
+      SessionCleanup.onEnd(spark) { out.unpersist(blocking = false) }
+    } else {
+      SessionCleanup.onEnd(spark) { release() }
+    }
+    out
+  }
+
+  /** An id-assigned frame, its row count, and `release`, which drops the
+    * persisted range-sorted partitions the frame reads from (later actions
+    * on `frame` recompute them). */
+  final case class AssignedIds(frame: DataFrame, rows: Long, release: () => Unit)
+
+  /** [[assignIdsByRange]]'s one implementation. The row count comes free
+    * from the per-partition counts the offsets are built from, and the
+    * caller owns the sorted intermediate: call `release()` once the frame
+    * has been written or materialized. */
+  def assignIdsByRangeCounted(df: DataFrame, key: String, idCol: String = "id",
+      partitions: Int = 0): AssignedIds = {
     val spark = df.sparkSession
     val n = if (partitions > 0) partitions
       else spark.conf.get("spark.sql.shuffle.partitions", "8").toInt
@@ -60,16 +86,8 @@ object Scale {
       var i = offsets(p)
       it.map { r => i += 1; Row.fromSeq(i +: r.toSeq) }
     }
-    val out = spark.createDataFrame(withIds, schema)
-    if (cacheResult) {
-      out.cache()
-      out.count() // materialize the id'd frame, then drop the intermediate
-      rdd.unpersist(blocking = false)
-      SessionCleanup.onEnd(spark) { out.unpersist(blocking = false) }
-    } else {
-      SessionCleanup.onEnd(spark) { rdd.unpersist(blocking = false) }
-    }
-    out
+    AssignedIds(spark.createDataFrame(withIds, schema), offsets.last,
+      () => { rdd.unpersist(blocking = false); () })
   }
 
   /** Salted equi-join for skewed keys: the large (skewed) side gets a

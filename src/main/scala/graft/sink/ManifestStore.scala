@@ -60,7 +60,9 @@ object ManifestStore {
     Files.move(tmp, cur, StandardCopyOption.ATOMIC_MOVE)
     if (retain > 0) vacuum(root, retain)
     else old.foreach(deleteRecursively)
-    read(m.sparkSession, root)
+    // the snapshot holds exactly `m`'s columns: reading it back with that
+    // schema skips parquet's footer-inference job
+    m.sparkSession.read.schema(m.schema).parquet(currentPath(root))
   }
 
   /** Sorted retained generations, newest first. */

@@ -67,11 +67,14 @@ object Reports {
       count(lit(1)),
       coalesce(sum(when(col("ok"), 1L).otherwise(0L)), lit(0L)),
       coalesce(sum(when(!col("ok"), 1L).otherwise(0L)), lit(0L))).head()
-    overwrite(path,
-      s"""Report: ${utcNow()} UTC
-         |Total attempted: $n
-         |Uploaded: $ok
-         |Failed: $failed
-         |""".stripMargin)
+    overwrite(path, reportText(n, ok, failed))
   }
+
+  /** The report file's text, from counts already known. */
+  def reportText(attempted: Long, ok: Long, failed: Long): String =
+    s"""Report: ${utcNow()} UTC
+       |Total attempted: $attempted
+       |Uploaded: $ok
+       |Failed: $failed
+       |""".stripMargin
 }

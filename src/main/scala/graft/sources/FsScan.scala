@@ -8,35 +8,39 @@ import graft.model.Tables
   *
   * Reference: the recursive `os.listdir`/`isfile` walk of
   * prepareupload.py:21-60 — one Python process, one stat per file, one
-  * MySQL INSERT+commit per file. Spark-native replacement: the
-  * `binaryFile` DataSource with `recursiveFileLookup` — directory
-  * listing is distributed, files become rows (path, modificationTime,
-  * length, content), directories are excluded by the source itself
-  * (predicate_isfile), and `content` is only materialized when the
-  * column is selected (scan pruning).
+  * MySQL INSERT+commit per file. Spark-native replacement: the listing
+  * Spark's own file index makes for a recursive `binaryFile` source —
+  * files become rows (path, length, modificationTime), directories and
+  * hidden `_x`/`.x` names are excluded by the index itself.
   */
 object FsScan {
 
-  /** Recursive scan of a directory tree; content column excluded so the
-    * scan reads metadata only — column pruning means no file is ever
-    * OPENED, the tasks just emit (path, length, mtime) from the
-    * listing. binaryFile still bin-packs splits per file with the 4 MB
-    * phantom open cost, so a tree of N tiny files plans ~N/32 tasks
-    * whose per-task scheduler constant dominates a zero-IO projection
-    * (measured: 50k files → ~1,600 tasks → 11.0 s at sf1, 19× the
-    * sf0.1 cost — the classic small-files pathology, r15). coalesce
-    * to machine parallelism merges splits WITHOUT a shuffle: the same
-    * listing emits through ~32 tasks. Correct at any scale for THIS
-    * projection because the per-row work is metadata-only; a scan
-    * that reads `content` should not coalesce (it wants the
-    * bin-packed parallelism) — which is why the coalesce lives here
-    * and not in a conf. */
-  def scanRecursive(spark: SparkSession, root: String): DataFrame =
-    spark.read.format("binaryFile")
+  /** Recursive scan of a directory tree as (path, length,
+    * modificationTime) rows, with no Spark job and no file opened.
+    *
+    * Building the `binaryFile` frame (`load(root)`) already lists the
+    * whole tree on the driver into an in-memory file index; a scan of
+    * that frame would then plan ~N/32 tasks that each stat every file
+    * again, and every later action over the scan would repeat that. Here
+    * the index's `FileStatus`es are taken as they are
+    * ([[org.apache.spark.sql.GraftBridge.listedFiles]]) and emitted over
+    * `defaultParallelism` slices. `path` is `getPath.toString` —
+    * byte-identical to binaryFile's `path` column, spaces and `%`
+    * included (`inputFiles` URI-escapes, which would miss the anti-join
+    * against manifests already on disk). Driver memory is O(files), as
+    * the file index's is. */
+  def scanRecursive(spark: SparkSession, root: String): DataFrame = {
+    import spark.implicits._
+    val index = spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true")
       .load(root)
-      .select(col("path"), col("length"), col("modificationTime"))
-      .coalesce(spark.sparkContext.defaultParallelism)
+    val files = org.apache.spark.sql.GraftBridge.listedFiles(index)
+      .getOrElse(sys.error(s"binaryFile over $root is not a file-index scan"))
+      .map(f => (f.getPath.toString, f.getLen,
+        new java.sql.Timestamp(f.getModificationTime)))
+    spark.sparkContext.parallelize(files, spark.sparkContext.defaultParallelism)
+      .toDF("path", "length", "modificationTime")
+  }
 
   /** Materialize the documents table as a real file tree
     * (root/<source>/doc_<id>.txt, UTF-8) — executor-side writes, one

@@ -33,4 +33,17 @@ object GraftBridge {
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed.collectFirst {
       case r: execution.LogicalRDD => r.rdd
     }
+
+  /** The files a file-source frame (`spark.read.format(...).load(...)`)
+    * would scan, as the driver's file index already listed them when the
+    * frame was built: the same `listFiles` call the scan plans its splits
+    * from, so hidden/underscore names and anything else the source drops
+    * are dropped here too. No job, no re-listing. None for any other plan
+    * shape. */
+  def listedFiles(df: Dataset[Row]): Option[Seq[org.apache.hadoop.fs.FileStatus]] =
+    df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed.collectFirst {
+      case execution.datasources.LogicalRelationWithTable(
+          r: execution.datasources.HadoopFsRelation, _) =>
+        r.location.listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus))
+    }
 }
