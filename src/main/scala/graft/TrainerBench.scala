@@ -3,14 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Diagnostic main for the SCALE_r10 trainer A/B: time the SEQUENTIAL
-  * BPE training loop (one Spark action per merge round) against the
-  * BATCHED loop (k lazy rounds per action, VERDICT r9 "Next round" #2)
-  * on the same corpus and rounds, and time the production-scale greedy
-  * encoder over the distinct vocabulary at synthetic merge depths the
-  * expression chain cannot express (it stack-overflows near 1,000
-  * nodes — measured in TermStatsSpec). Emits one JSON line per
-  * measurement; the tables land in SCALE_r10.md.
+/** Diagnostic main for the BPE trainer A/B: time the recount
+  * reference ([[graft.ops.TermStats.bpeLearnIter]], one Spark action
+  * per merge round) against both routes of
+  * [[graft.ops.TermStats.bpeLearnAuto]], each forced by its
+  * `driverMaxWords` dial — `1L` the distributed incremental loop,
+  * `Long.MaxValue` the driver-local in-memory loop — on the same corpus
+  * and rounds, requiring merge identity; and time the production-scale
+  * greedy encoder over the distinct vocabulary at synthetic merge
+  * depths the expression chain cannot express (it stack-overflows near
+  * 1,000 nodes — measured in TermStatsSpec). Emits one JSON line per
+  * measurement.
   *
   * Usage: runMain graft.TrainerBench [sfDir ...]
   * (defaults to the three driver SFs; rounds via SPARK_GRAFT_ROUNDS,
@@ -38,15 +41,15 @@ object TrainerBench {
     }
     // LONG-RUN mode (VERDICT r10 #2 / r11 #1's done-criteria): train
     // for SPARK_GRAFT_LONG_ROUNDS merges — the bounded-wall-time
-    // demonstration at a depth the recounting loops cannot reasonably
+    // demonstration at a depth the recount reference cannot reasonably
     // reach. The driver corpus EXHAUSTS at 89 merges at every SF (one
     // shared template vocabulary — every distinct word fully fuses;
     // measured: 89 merges in 23.2 s at sf0.01, 32.1 s at sf0.1), so
     // depth needs pair DIVERSITY: the deterministic wide-vocabulary
     // corpus (20,000 distinct pseudo-words, 5,000 docs × 60 draws —
-    // SynthCorpus.wideVocabDocs, shared with the specs). r12 times
-    // BOTH the distributed incremental loop and the DRIVER-LOCAL
-    // in-memory trainer on the same run and requires bit-identity —
+    // SynthCorpus.wideVocabDocs, shared with the specs). It times
+    // BOTH bpeLearnAuto routes (the dial forced each way) on the same
+    // run and requires bit-identity —
     // the "1,000 real merges" row now carries the local trainer's
     // wall-clock next to the 0.42 s/round scheduler-latency trajectory
     // it retires. SPARK_GRAFT_LONG_SKIP_DIST=1 skips the distributed
@@ -57,7 +60,7 @@ object TrainerBench {
     // trainer's real per-word state footprint (word frame + pair
     // counts + occurrence index + heap — the r12 dial's "~60 B/word"
     // counted only the (word, cnt) rows), time the local loop against
-    // the distributed incremental loop at the same depth on the SAME
+    // the forced distributed route at the same depth on the SAME
     // corpus with merge-identity required, and emit the numbers the
     // driverMaxWords dial derives from. Usage:
     //   SPARK_GRAFT_BIGVOCAB=<nWords> [SPARK_GRAFT_BIGVOCAB_ROUNDS=N]
@@ -92,16 +95,17 @@ object TrainerBench {
         graft.ops.TermStats.trainerStateFootprint(rows, eow))
       val (retained, words, pcN, occKeys, occIdx, heapN) = foot
       val bytesPerWord = retained.toDouble / math.max(1L, words)
-      // local loop at depth on the big corpus
+      // local loop at depth on the big corpus (the rows collected
+      // above, so the timing is the loop alone)
       val (mLoc, tLoc) = time(
         graft.ops.TermStats.bpeLearnInMemory(rows, bvRounds, eow))
-      // distributed incremental at a FRACTION of the depth (its
-      // steady ~2 s/round makes full depth pointless — that is the
-      // finding), merge-identity required on the shared prefix
+      // distributed route at a FRACTION of the depth (its steady
+      // ~2 s/round makes full depth pointless — that is the finding),
+      // merge-identity required on the shared prefix
       val distRounds = math.min(bvRounds, 5)
       val (mDist, tDist) = time(
-        graft.ops.TermStats.bpeLearnIterIncremental(docsB, distRounds,
-          eow = eow))
+        graft.ops.TermStats.bpeLearnAuto(docsB, distRounds,
+          driverMaxWords = 1L, eow = eow))
       require(mDist == mLoc.take(distRounds),
         "distributed incremental diverged from the local loop on the " +
           "big-vocabulary corpus")
@@ -209,12 +213,12 @@ object TrainerBench {
       val docsL = if (byteL) graft.ops.TermStats.byteDocs(docsL0)
         else docsL0
       docsL.count()
-      val (mLoc, tLoc) = time(graft.ops.TermStats.bpeLearnLocal(
-        docsL, lr.toInt, eow = eowL))
+      val (mLoc, tLoc) = time(graft.ops.TermStats.bpeLearnAuto(
+        docsL, lr.toInt, driverMaxWords = Long.MaxValue, eow = eowL))
       val dist = if (sys.env.contains("SPARK_GRAFT_LONG_SKIP_DIST")) None
         else {
-          val (m, t) = time(graft.ops.TermStats.bpeLearnIterIncremental(
-            docsL, lr.toInt, eow = eowL))
+          val (m, t) = time(graft.ops.TermStats.bpeLearnAuto(
+            docsL, lr.toInt, driverMaxWords = 1L, eow = eowL))
           require(m == mLoc,
             "driver-local trainer diverged from the distributed loop")
           Some(t)
@@ -232,37 +236,30 @@ object TrainerBench {
       val docs = graft.model.Tables.documents(spark, sf)
       docs.count() // warm the scan
       // JIT/codegen warm-up on the smallest corpus shape, then
-      // min-of-3 steady state for all three loops; equality asserted so
-      // the timing claim and the bit-identity claim are the same run.
+      // min-of-3 steady state for the reference and both routes;
+      // equality asserted so the timing claim and the bit-identity
+      // claim are the same run.
       val seqT = (1 to 3).map(_ =>
         time(graft.ops.TermStats.bpeLearnIter(docs, rounds))).minBy(_._2)
-      val batT = (1 to 3).map(_ =>
-        time(graft.ops.TermStats.bpeLearnIterBatched(docs, rounds,
-          batch = 5))).minBy(_._2)
       val incT = (1 to 3).map(_ =>
-        time(graft.ops.TermStats.bpeLearnIterIncremental(docs, rounds)))
-        .minBy(_._2)
+        time(graft.ops.TermStats.bpeLearnAuto(docs, rounds,
+          driverMaxWords = 1L))).minBy(_._2)
       val locT = (1 to 3).map(_ =>
-        time(graft.ops.TermStats.bpeLearnLocal(docs, rounds))).minBy(_._2)
-      require(seqT._1 == batT._1, "batched trainer diverged from sequential")
+        time(graft.ops.TermStats.bpeLearnAuto(docs, rounds,
+          driverMaxWords = Long.MaxValue))).minBy(_._2)
       require(seqT._1 == incT._1,
-        "incremental trainer diverged from sequential")
+        "distributed route diverged from the recount reference")
       require(seqT._1 == locT._1,
-        "driver-local trainer diverged from sequential")
+        "driver-local route diverged from the recount reference")
       println(s"""{"sf":"$sf","rounds":$rounds,""" +
-        s""""sequential_s":${r3(seqT._2)},"batched_s":${r3(batT._2)},""" +
+        s""""sequential_s":${r3(seqT._2)},""" +
         s""""incremental_s":${r3(incT._2)},"local_s":${r3(locT._2)},""" +
-        s""""speedup":${r3(seqT._2 / batT._2)},""" +
         s""""speedup_incr":${r3(seqT._2 / incT._2)},""" +
         s""""speedup_local":${r3(seqT._2 / locT._2)}}""")
     }
-    // r11 per-config table (VERDICT r10 #7 + #2): driver actions and
-    // recount-row volume per trainer/batch config on sf0.01 — the
-    // in-tree baseline the incremental trainer's win is measured
-    // against. Recount volume is batch-INDEPENDENT (each pick explodes
-    // once; batching amortizes actions and replace-chain map work), so
-    // the volume line prints once: full = Σ_r fullRows_r (every
-    // recounting trainer), incremental = fullRows_0 + Σ_r Δ-rows.
+    // recount-row volume on sf0.01 (VERDICT r10 #7): full = Σ_r
+    // fullRows_r (what the recount reference explodes), incremental =
+    // fullRows_0 + Σ_r Δ-rows (what the distributed route explodes).
     // sfs.lift: the documented single-argument invocation must not
     // throw after the per-SF loop (ADVICE r11 #5)
     val sfAcct = sfs.lift(1).getOrElse(sfs.head)
@@ -276,31 +273,6 @@ object TrainerBench {
       s""""recount_rows_full":$fullRows,""" +
       s""""recount_rows_incremental":$incrRows,""" +
       s""""volume_ratio":${r3(fullRows.toDouble / math.max(1L, incrRows))}}""")
-    for (b <- Seq(1, 5, 10)) {
-      // batched: 2 actions per batch. The incremental loop's batch
-      // dial is FOLDED AWAY (r12 — VERDICT r11 #6): the lazy
-      // within-batch delta chains re-executed their suffixes
-      // quadratically (measured 24.2 s at batch=10 vs 2.0 s at
-      // batch=1, SCALE_r11 §3), so the loop now always runs its
-      // measured best operating point — one merge, one checkpoint
-      // pair per round — and this table's incremental column must
-      // read FLAT across b (the done-criterion: batch=10 within
-      // 1.2× of batch=1).
-      val actions = 2 * ((rounds + b - 1) / b)
-      val actionsIncr = 3 * rounds
-      val batB = (1 to 3).map(_ =>
-        time(graft.ops.TermStats.bpeLearnIterBatched(docsAcct, rounds,
-          batch = b))).minBy(_._2)
-      val incB = (1 to 3).map(_ =>
-        time(graft.ops.TermStats.bpeLearnIterIncremental(docsAcct, rounds,
-          batch = b))).minBy(_._2)
-      require(batB._1 == table && incB._1 == table,
-        s"trainer diverged at batch=$b")
-      println(s"""{"sf":"$sfAcct","rounds":$rounds,"batch":$b,""" +
-        s""""actions_batched":$actions,"actions_incremental":$actionsIncr,""" +
-        s""""batched_s":${r3(batB._2)},""" +
-        s""""incremental_s":${r3(incB._2)}}""")
-    }
     // scaled greedy encoder at depths the expression chain cannot host:
     // encode the sf0.1 distinct vocabulary under 1,000 and 5,000
     // synthetic merges (plan size is O(1) in the merge count).

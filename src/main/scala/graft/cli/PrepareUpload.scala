@@ -58,6 +58,7 @@ object PrepareUpload {
   }
 
   def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: prepareupload <dir> <manifestRoot>")
     val Array(dir, manifestRoot) = args.take(2)
     val spark = Sessions.build()
     val s = run(spark, dir, manifestRoot)

@@ -344,47 +344,45 @@ object Sampling {
 
   /** RESERVED token ids of the packed-tensor layout (VERDICT r10
     * "Next round" #5 — the special-token contract every real trainer
-    * ships): 0 = padding / UNK / ignore (unchanged from r8–r10),
-    * 1 = BOS, 2 = EOS; REAL vocabulary ids start at 3 (the raw
-    * 1-based vocab/artifact ids shift by +2 at pack time — the
-    * reserved space is a property of the packed TRAINING layout; the
-    * tokenizer artifact's own id space stays 1-based and unshifted,
-    * which [[extendWithSpecials]] documents). */
+    * ships). Two layouts, selected by one `unkFaithful` flag wherever a
+    * pack is built:
+    *   - base: 0 = padding / UNK / ignore, 1 = BOS, 2 = EOS; REAL
+    *     vocabulary ids start at 3 (raw 1-based ids shift by +2);
+    *   - UNK-faithful (r12 — the inverse-completeness gap
+    *     [[unpackSequences]]' precondition documents, closed):
+    *     0 = padding ONLY, 1 = BOS, 2 = EOS, 3 = UNK, real ids ≥ 4
+    *     (shift +3). Reserving a separate UNK id is what makes an
+    *     INFERENCE pack information-complete — the base layout folds
+    *     UNK into the pad sentinel, so its unpack cannot tell a dropped
+    *     token from a trailing pad. An UNK target is still never
+    *     supervised: [[packOne]]'s loss mask excludes label =
+    *     [[UnkId]] under this layout.
+    * The reserved space is a property of the packed TRAINING layout;
+    * the tokenizer artifact's own id space stays 1-based and
+    * unshifted. */
   private[ops] val BosId = 1L
   private[ops] val EosId = 2L
   private[ops] val IdShift = 2L
-
-  /** [[BosId]] ++ (ids + [[IdShift]]) ++ [[EosId]] per document —
-    * id 0 (UNK from the inference path) stays 0, never shifted into
-    * the reserved range. Input: (doc_id, ids: array&lt;long&gt;) with
-    * raw 1-based ids; zero-token docs must already be absent (they
-    * contribute no BOS/EOS — the same drop rule as the encoders). */
-  private[ops] def extendWithSpecials(perDoc: DataFrame): DataFrame =
-    perDoc.select(col("doc_id"), concat(
-      array(lit(BosId)),
-      transform(col("ids"),
-        x => when(x === 0L, lit(0L)).otherwise(x + lit(IdShift))),
-      array(lit(EosId))).as("ids"))
-
-  /** UNK-FAITHFUL reserved ids (r12 — the inverse-completeness gap
-    * [[unpackSequences]]' precondition documents, closed): 0 = padding
-    * ONLY, 1 = BOS, 2 = EOS, 3 = UNK, real vocabulary ids ≥ 4 (raw
-    * ids shift by +3). Reserving a separate UNK id is what makes an
-    * INFERENCE pack information-complete — the base contract folds
-    * UNK into the pad sentinel, so its unpack cannot tell a dropped
-    * token from a trailing pad. Supervision semantics preserved: an
-    * UNK target is still never supervised — the loss mask excludes
-    * label = [[UnkId]] explicitly ([[assembleSequences]]' `unkId`
-    * parameter) instead of relying on UNK collapsing to 0. */
   private[graft] val UnkId = 3L
   private[ops] val IdShiftUnk = 3L
 
-  private[ops] def extendWithSpecialsUnk(perDoc: DataFrame): DataFrame =
-    perDoc.select(col("doc_id"), concat(
-      array(lit(BosId)),
-      transform(col("ids"),
-        x => when(x === 0L, lit(UnkId)).otherwise(x + lit(IdShiftUnk))),
-      array(lit(EosId))).as("ids"))
+  /** [[BosId]] ++ shifted `ids` ++ [[EosId]] for one document's RAW
+    * 1-based id array — the one wrap both packers apply (the batch
+    * [[wideFromPerDoc]] and the streaming
+    * [[graft.streaming.Streams.packStream]]). Raw id 0 (UNK from the
+    * inference path) maps to 0 under the base layout and to [[UnkId]]
+    * under the UNK-faithful one; it is never shifted into the reserved
+    * range. Zero-token docs must already be absent from a batch pack
+    * (they contribute no BOS/EOS — the same drop rule as the
+    * encoders). */
+  private[graft] def withSpecials(ids: Column,
+      unkFaithful: Boolean): Column = {
+    val (unk, shift) =
+      if (unkFaithful) (UnkId, IdShiftUnk) else (0L, IdShift)
+    concat(array(lit(BosId)),
+      transform(ids, x => when(x === 0L, lit(unk)).otherwise(x + lit(shift))),
+      array(lit(EosId)))
+  }
 
   /** (seq_id, spos, id, bnd, doc_id) grid from per-doc id ARRAYS with
     * the special-token contract applied — the single wide-frame
@@ -412,8 +410,8 @@ object Sampling {
     // (measured in the r11 closing capture: pack_segments 3.6 → 7.5 s
     // before this cut, 1 corpus pass + 3 checkpoint scans after).
     docOffsetsFromCounts(
-      (if (unkFaithful) extendWithSpecialsUnk(perDoc)
-       else extendWithSpecials(perDoc))
+      perDoc.select(col("doc_id"),
+          withSpecials(col("ids"), unkFaithful).as("ids"))
         .withColumn("n", size(col("ids")).cast("long"))
         .localCheckpoint(), buckets)
       .select(col("doc_id"), col("off"),
@@ -423,6 +421,16 @@ object Sampling {
       .withColumn("spos", expr(s"CAST(gpos % $window AS BIGINT)"))
       .withColumn("bnd",
         when(col("sp") === 0, lit(1L)).otherwise(lit(0L)))
+
+  /** Per-doc RAW id arrays → packed tensor sequences: [[wideFromPerDoc]]
+    * then [[assembleSequences]]. The one `unkFaithful` flag reaches
+    * both, so the grid's reserved-id layout and the loss mask's UNK
+    * rule cannot disagree. Every tensor packer ([[packSequencesTensor]]
+    * and TermStats' tensor/inference capstones) builds through here. */
+  private[graft] def packPerDoc(perDoc: DataFrame, window: Int,
+      buckets: Int, unkFaithful: Boolean = false): DataFrame =
+    assembleSequences(wideFromPerDoc(perDoc, window, buckets, unkFaithful),
+      window, unkFaithful)
 
   /** TRAINER-READY tensor form of sequence packing (VERDICT r8 "Next
     * round" #2; r10 #5 special tokens): where [[packSequences]]
@@ -448,8 +456,7 @@ object Sampling {
     * placement, zip-to-string). */
   def packSequencesTensor(docs: DataFrame, window: Int = 64,
       buckets: Int = 8): DataFrame =
-    assembleSequences(
-      wideFromPerDoc(wordPerDocIds(docs), window, buckets), window)
+    packPerDoc(wordPerDocIds(docs), window, buckets)
 
   /** The word-level (doc_id, ids) arrays behind [[packSequencesTensor]]:
     * alphabetic word ids in position order. Factored out (r17) so the
@@ -468,208 +475,114 @@ object Sampling {
         x => x.getField("id")).as("ids"))
   }
 
-  /** The per-sequence tensor assembly shared by [[packSequencesTensor]]
-    * and the BPE-symbol pipeline: one keyed collect of ≤ `window`
-    * elements per sequence, 0-padded arrays + loss mask. Input needs
-    * (seq_id, spos, id, bnd, doc_id).
+  /** One packed sequence: the eight columns every packer emits, in
+    * this order. The arrays are `window` long and 0-padded. Both the
+    * batch [[assembleSequences]] and the streaming
+    * [[graft.streaming.Streams.packStream]] build it through the one
+    * kernel [[packOne]]. The fields are primitive arrays so the encoder
+    * writes them as `ArrayType(LongType, containsNull = false)`
+    * without boxing. */
+  final case class PackedSeq(seq_id: Long, n_docs: Long, n_tokens: Long,
+    ids: Array[Long], doc_start: Array[Long], loss_mask: Array[Long],
+    segment_ids: Array[Long], labels: Array[Long])
+
+  /** THE pack kernel: one sequence from its first `n` real (id, bnd)
+    * positions, `bnd` = 1 on each document's BOS. Every array is built
+    * in one O(window) pass, and each rule below lives only here:
+    *   - labels (r10/r11 next-token targets): labels[k] = ids[k+1]
+    *     unless position k+1 opens a new document (its BOS is never a
+    *     target) or k is the last real position (the continuation lives
+    *     in the next sequence); 0 = ignore. With the BOS/EOS layout EOS
+    *     is supervised and BOS never is, with no extra cases;
+    *   - loss_mask (r11/r12): 1 exactly where labels carries a real
+    *     target — label 0 never, and under the UNK-faithful layout the
+    *     reserved [[UnkId]] never;
+    *   - segment_ids (r9, linear form r16): the prefix sum of bnd, +1
+    *     when the sequence opens mid-document, so the first real
+    *     position is always segment 1 and padding stays 0;
+    *   - n_docs: the last real segment id. Documents are contiguous and
+    *     each opens with a BOS, so this is the number of distinct
+    *     documents the sequence touches (SamplingSpec pins max(segment)
+    *     == n_docs). */
+  private[graft] def packOne(seqId: Long, ids: Array[Long],
+      bnds: Array[Long], n: Int, window: Int,
+      unkFaithful: Boolean): PackedSeq = {
+    val idsW = new Array[Long](window)
+    val dst = new Array[Long](window)
+    System.arraycopy(ids, 0, idsW, 0, n)
+    System.arraycopy(bnds, 0, dst, 0, n)
+    val seg = new Array[Long](window)
+    val lab = new Array[Long](window)
+    val mask = new Array[Long](window)
+    var run = 1L - bnds(0)
+    var k = 0
+    while (k < n) {
+      run += bnds(k)
+      seg(k) = run
+      if (k + 1 < n && bnds(k + 1) == 0L) {
+        lab(k) = ids(k + 1)
+        if (lab(k) != 0L && !(unkFaithful && lab(k) == UnkId)) mask(k) = 1L
+      }
+      k += 1
+    }
+    PackedSeq(seqId, run, n.toLong, idsW, dst, mask, seg, lab)
+  }
+
+  /** The batch packer shared by [[packSequencesTensor]] and the
+    * BPE-symbol pipeline. Input needs (seq_id, spos, id, bnd) — the
+    * [[wideFromPerDoc]] grid; `unkFaithful` must match the layout that
+    * grid was built with, which is why both take the same flag.
     *
-    * r17 (optimization round 2, VERDICT r16 "Next round" #1): assembly
-    * is ONE mapPartitions pass over the (seq_id, spos)-sorted rows —
-    * each task walks its sorted run once, building every output array
-    * (ids/doc_start/labels/loss_mask AND the boundary prefix sum behind
-    * segment_ids) in O(window) per sequence. This replaces the
-    * r16-era declarative form: a Window (the segment prefix sum), an
-    * Expand + two-phase aggregate (countDistinct(doc_id) beside the
-    * collect_lists), three collect_list(struct)+array_sort passes, and
-    * the per-array transform/concat/pad expression forest — all of it
-    * non-codegen object work over the same single exchange this form
-    * pays (hash by seq_id; the sort the Window needed anyway). The
-    * arithmetic is the same exact integer arithmetic position-for-
-    * position (the r16 label/mask/segment rules inlined below, each
-    * annotated with the rule it reproduces), so output is
-    * bit-identical — re-gated against the DuckDB oracle for every pack
-    * key, and SamplingSpec's array pins are unchanged. At 100 TB the
-    * win is the same shape: per-token work drops from
-    * O(log w) comparator calls + object churn to a primitive array
-    * write, and three aggregate evaluations collapse into one pass. */
+    * r17 (optimization round 2, VERDICT r16 "Next round" #1): ONE
+    * exchange (hash by seq_id) plus a sort, then one mapPartitions pass
+    * over the (seq_id, spos)-sorted rows — each task walks its sorted
+    * runs once and hands each run to [[packOne]]. This replaced the
+    * r16-era declarative form (a Window prefix sum, an Expand +
+    * countDistinct aggregate, three collect_list + array_sort passes
+    * and a transform/pad expression forest); SamplingSpec keeps that
+    * form as the executable spec and pins row identity against it. */
   private[graft] def assembleSequences(wide: DataFrame,
-      window: Int, unkId: Option[Long] = None): DataFrame = {
+      window: Int, unkFaithful: Boolean = false): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val outSchema = StructType(Seq(
-      StructField("seq_id", LongType, nullable = false),
-      StructField("n_docs", LongType, nullable = false),
-      StructField("n_tokens", LongType, nullable = false),
-      StructField("ids", ArrayType(LongType, containsNull = false)),
-      StructField("doc_start", ArrayType(LongType, containsNull = false)),
-      StructField("loss_mask", ArrayType(LongType, containsNull = false)),
-      StructField("segment_ids", ArrayType(LongType, containsNull = false)),
-      StructField("labels", ArrayType(LongType, containsNull = false))))
     val w = window
-    val unkOpt = unkId
-    val sorted = wide
+    wide
       .select(col("seq_id").cast("long"), col("spos").cast("long"),
-        col("id").cast("long"), col("bnd").cast("long"),
-        col("doc_id").cast("long"))
-      // one exchange (hash by seq_id) + one sort — exactly what the
-      // old Window/groupBy pair shared; every sequence's rows are then
-      // a contiguous sorted run inside one task
+        col("id").cast("long"), col("bnd").cast("long"))
+      // every sequence's rows become a contiguous sorted run in one task
       .repartition(col("seq_id"))
       .sortWithinPartitions("seq_id", "spos")
-    sorted.mapPartitions { it =>
-      new Iterator[Row] {
-        private var pending: Row = null
-        private def buildGroup(): Row = {
-          val first = if (pending != null) pending else it.next()
-          pending = null
-          val seqId = first.getLong(0)
-          val ids0 = new scala.collection.mutable.ArrayBuffer[Long](w)
-          val bnd0 = new scala.collection.mutable.ArrayBuffer[Long](w)
-          val docs = new java.util.HashSet[Long]()
-          var cur = first
-          var done = false
-          while (!done) {
-            ids0 += cur.getLong(2)
-            bnd0 += cur.getLong(3)
-            docs.add(cur.getLong(4))
-            if (it.hasNext) {
-              val nxt = it.next()
-              if (nxt.getLong(0) != seqId) { pending = nxt; done = true }
-              else cur = nxt
-            } else done = true
+      .mapPartitions { it =>
+        val ids = new Array[Long](w)
+        val bnds = new Array[Long](w)
+        new Iterator[PackedSeq] {
+          private var pending: Row = null
+          override def hasNext: Boolean = pending != null || it.hasNext
+          override def next(): PackedSeq = {
+            var cur = if (pending != null) pending else it.next()
+            pending = null
+            val seqId = cur.getLong(0)
+            var n = 0
+            while (cur != null) {
+              ids(n) = cur.getLong(2)
+              bnds(n) = cur.getLong(3)
+              n += 1
+              cur = null
+              if (it.hasNext) {
+                val nxt = it.next()
+                if (nxt.getLong(0) == seqId) cur = nxt else pending = nxt
+              }
+            }
+            packOne(seqId, ids, bnds, n, w, unkFaithful)
           }
-          val n = ids0.length
-          val ids = new Array[Long](w)
-          val dst = new Array[Long](w)
-          val seg = new Array[Long](w)
-          val lab = new Array[Long](w)
-          val mask = new Array[Long](w)
-          // segment rule (r16): prefix sum of bnd, +1 when the sequence
-          // opens mid-document (adj = 1 − bnd0[0]); padding stays 0
-          val adj = 1L - bnd0(0)
-          var run = 0L
-          var k = 0
-          while (k < n) {
-            ids(k) = ids0(k)
-            dst(k) = bnd0(k)
-            run += bnd0(k)
-            seg(k) = run + adj
-            // label rule (r10/r11): labels[k] = ids[k+1] unless k+1
-            // starts a new document or k is the last real position
-            if (k + 1 < n && bnd0(k + 1) == 0L) lab(k) = ids0(k + 1)
-            k += 1
-          }
-          // loss-mask rule (r11/r12): 1 exactly where labels carries a
-          // real target — label 0 (ignore/pad) and, under the
-          // UNK-faithful contract, the reserved UNK id are unsupervised
-          k = 0
-          while (k < w) {
-            if (lab(k) != 0L && unkOpt.forall(lab(k) != _)) mask(k) = 1L
-            k += 1
-          }
-          Row(seqId, docs.size.toLong, n.toLong, ids.toSeq, dst.toSeq,
-            mask.toSeq, seg.toSeq, lab.toSeq)
         }
-        override def hasNext: Boolean = pending != null || it.hasNext
-        override def next(): Row = buildGroup()
-      }
-    }(Encoders.row(outSchema))
+      }(Encoders.product[PackedSeq])
+      .toDF()
     // NO trailing global orderBy (r17, VERDICT r16 "Next round" #6):
     // every registered consumer re-establishes its own output order
     // (the tensor keys' final .orderBy("seq_id"), unpack's
-    // .orderBy("doc_n"), profile_pack_efficiency's global agg), so the
-    // declarative form's orderBy here was dead weight. Under the
-    // tensor keys the optimizer already eliminated it (sort-under-
-    // sort), but the round-trip keys materialize the packed frame
-    // through unpackSequences' eager localCheckpoint — there the sort
-    // + range exchange executed for nothing. unpackSequences reads
-    // positions from (seq_id, spos) arithmetic, never from row order.
-  }
-
-  /** The r16-era declarative assembly, kept (unregistered) as the
-    * executable spec the mapPartitions form above was proven against:
-    * SamplingSpec pins new ≡ old row-for-row on the gated window and
-    * on an 8-wide window where mid-sequence carries exercise every
-    * rule. */
-  private[graft] def assembleSequencesDeclarative(wide: DataFrame,
-      window: Int, unkId: Option[Long] = None): DataFrame = {
-    val pad = (n: Column) =>
-      array_repeat(lit(0L), (lit(window) - n).cast("int"))
-    // SEGMENT IDS (VERDICT r9 "Next round" #5; linear form r16): per-
-    // token document index within the sequence (1,1,1,2,2,…) — what a
-    // trainer that blocks cross-document attention consumes beside
-    // doc_start. The prefix sum of the boundary array, +1 when the
-    // sequence opens mid-document (the carried-over partial doc is
-    // segment 1 either way, so the first real position is ALWAYS 1
-    // and max equals n_docs — SamplingSpec pins both). Until r16 this
-    // was per-position slice-sums over the collected array —
-    // O(window²) per sequence = O(tokens × window) per corpus, fine
-    // at the gated window 64 but measured 3.6 → 15.7 → 43.3 s at
-    // 64/2048/8192 on sf0.1 (trainers pack at 2048–8192). Now the
-    // prefix is a CUMULATIVE window sum over the wide frame BEFORE
-    // assembly — the growing frame is the one shape Spark evaluates
-    // incrementally (the win_range_trailing_blocked finding), and the
-    // window's seq_id partitioning is the same key the assembly
-    // groupBy needs, so Catalyst reuses one exchange: O(window) per
-    // sequence, bit-identical output — re-measured FLAT 4.0 / 3.1 /
-    // 3.0 s at 64/2048/8192 (the ~0.4 s at the gated window 64 is the
-    // added per-partition sort; 14.5× at the production window).
-    val wSeq = Window.partitionBy(col("seq_id")).orderBy(col("spos"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val segAdj = (seg0: Column) => transform(seg0,
-      x => x + lit(1L) - element_at(col("bnd0"), 1))
-    // NEXT-TOKEN LABELS (r10; r11 special tokens): the causal-LM
-    // target array — labels[i] is ids[i+1] UNLESS position i+1 starts
-    // a new document (its BOS must never be a target: a packed trainer
-    // must not learn to predict doc 2's opening token from doc 1's
-    // closing context) or i is the sequence's last real position (the
-    // continuation lives in the NEXT sequence; 0 = ignore, the same
-    // sentinel as padding since real content ids are ≥ 2). With the
-    // BOS/EOS contract this rule needs NO new cases: the position
-    // after a last word holds EOS (bnd = 0) so EOS IS supervised, and
-    // the position after an EOS holds the next doc's BOS (bnd = 1) so
-    // BOS never is. Both element_at calls are short-circuit-guarded by
-    // i < size, so the bound never overruns under ANSI.
-    val labReal = transform(
-      sequence(lit(1), size(col("ids0"))),
-      i => when(i < size(col("ids0")) &&
-          element_at(col("bnd0"), i + 1) === 0L,
-        element_at(col("ids0"), i + 1)).otherwise(lit(0L)))
-    // LOSS MASK (r11): 1 exactly where `labels` carries a real target
-    // — the supervision mask a packed causal-LM trainer feeds its loss
-    // (label 0 = ignore; under the base contract an UNK target
-    // collapses to that sentinel, so UNK-target positions are
-    // unsupervised by construction; under the r12 UNK-FAITHFUL
-    // contract UNK keeps its own reserved id in `labels` — still
-    // information — and `unkId` excludes it from the mask explicitly,
-    // preserving the same supervision semantics). Derived from the
-    // PADDED labels array so padding is 0 by construction; before r11
-    // this was a plain real-token mask, which with reserved tokens
-    // would have claimed BOS-target and sequence-tail positions are
-    // supervised.
-    val labArr = concat(labReal, pad(size(col("ids0"))))
-    val supervised = (x: Column) =>
-      unkId.foldLeft(x =!= 0L)((c, u) => c && x =!= lit(u))
-    wide.withColumn("segp", sum(col("bnd")).over(wSeq))
-      .groupBy(col("seq_id"))
-      .agg(countDistinct(col("doc_id")).as("n_docs"),
-        count(lit(1)).as("n_tokens"),
-        transform(array_sort(collect_list(struct(col("spos"), col("id")))),
-          x => x.getField("id")).as("ids0"),
-        transform(array_sort(collect_list(struct(col("spos"), col("bnd")))),
-          x => x.getField("bnd")).as("bnd0"),
-        transform(array_sort(collect_list(struct(col("spos"), col("segp")))),
-          x => x.getField("segp")).as("seg0"))
-      .select(col("seq_id"), col("n_docs"), col("n_tokens"),
-        concat(col("ids0"), pad(size(col("ids0")))).as("ids"),
-        concat(col("bnd0"), pad(size(col("bnd0")))).as("doc_start"),
-        transform(labArr,
-          x => when(supervised(x), lit(1L)).otherwise(lit(0L)))
-          .as("loss_mask"),
-        concat(segAdj(col("seg0")), pad(size(col("bnd0"))))
-          .as("segment_ids"),
-        labArr.as("labels"))
-      .orderBy("seq_id")
+    // .orderBy("doc_n"), profile_pack_efficiency's global agg).
+    // unpackSequences reads positions from (seq_id, spos) arithmetic,
+    // never from row order.
   }
 
   /** UNPACK — the packer's inverse (r11): from the packed tensor frame
@@ -695,7 +608,7 @@ object Sampling {
     * UNK distinguishable from padding — not a smarter unpacker:
     * interior-vs-tail zero position is genuinely ambiguous at the
     * final sequence's tail. That inverse EXISTS as of r12:
-    * `unkFaithful = true` inverts the [[extendWithSpecialsUnk]] layout
+    * `unkFaithful = true` inverts the UNK-faithful [[withSpecials]] layout
     * (0 = padding only, 3 = UNK, real ids ≥ 4), mapping UNK back to
     * the raw stream's 0 sentinel — the registered
     * sample_pack_unk_roundtrip key gates pack → unpack ≡ identity on

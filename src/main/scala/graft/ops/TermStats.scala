@@ -311,7 +311,7 @@ object TermStats {
   // the public gpt-2 encoder.py bytes_to_unicode device). Every UTF-8
   // byte b maps INJECTIVELY to the single BMP char U+0100+b, so byte
   // sequences become char strings and the ENTIRE char-level family —
-  // double-space expression encoder, all four trainers, the greedy
+  // double-space expression encoder, every training route, the greedy
   // scaled encoder, ids, pack, decode — runs over the remapped corpus
   // VERBATIM: byte-level BPE IS char-level BPE over this alphabet.
   // The corpus pre-tokenizes with the GPT-2-form regex
@@ -502,8 +502,7 @@ object TermStats {
     * corpus runs out of adjacent pairs. */
   def bpeLearnIter(docs: DataFrame, rounds: Int = 10,
       eow: Boolean = false): Seq[(String, String, Long)] = {
-    val freq = tokens(docs).filter(length(col("word")) >= 2)
-      .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
+    val freq = wordFreq(docs)
     var enc: Column = concat(
       regexp_replace(col("word"), "(.)", "  $1"),
       lit((if (eow) EowMarker else "") + "  "))
@@ -527,9 +526,10 @@ object TermStats {
 
   /** Adjacent-pair recount over an encoded vocabulary frame
     * (cnt, enc) — the inner statistic of every BPE training round,
-    * shared verbatim by the sequential loop and the batched trainer so
-    * their counts can never drift. Overlapping-adjacency convention
-    * (the reference BPE's); one vocabulary-sized keyed sum. */
+    * shared verbatim by the recount reference and the distributed
+    * incremental loop (its P₀ and every Δ) so their counts can never
+    * drift. Overlapping-adjacency convention (the reference BPE's);
+    * one vocabulary-sized keyed sum. */
   private def pairCounts(v: DataFrame): DataFrame = {
     val syms = filter(split(col("enc"), "  "), x => length(x) > 0)
     v.select(col("cnt"), syms.as("s"))
@@ -543,97 +543,20 @@ object TermStats {
       .agg(sum(col("cnt")).as("n"))
   }
 
-  /** [[bpeLearnIter]] with the driver round-trips BATCHED (VERDICT r9
-    * "Next round" #2): the sequential loop pays one Spark action per
-    * merge — fine at 10 rounds, serial death at 30k. This trainer
-    * chains `batch` recount→argmax→apply rounds LAZILY inside one
-    * action: round r's argmax is a 1-row `pick` frame, and the merged
-    * stream for round r+1 applies it with a broadcast cross join and a
-    * COLUMN-operand `replace` (same literal-replace semantics as the
-    * sequential loop's literal — the operands just arrive as data
-    * instead of strings), so no round needs the previous round's
-    * result on the driver. The k picks union into ONE collect: jobs
-    * drop from R to ⌈R/batch⌉ with BIT-IDENTICAL output by
-    * construction — every round still recounts over the true round-
-    * (r−1) stream (TermStatsSpec asserts equality with the sequential
-    * loop; the registered learn_iter key gates it against the
-    * unrolled-CTE oracle that replays the recounts).
-    *
-    * DAG discipline (measured in r10, the hard way): NESTING persisted
-    * frames is a trap here — once a chained cache materializes, every
-    * later plan that touches it re-prints/re-plans the cached child's
-    * AQE tree (final + initial plan per level), so a k-deep chain of
-    * materialized InMemoryRelations costs O(2^k) planning/plan-string
-    * work per subsequent action; at k = 5 the second batch's first
-    * action burned 30+ min in `generateTreeString` before doing any
-    * work. The shape that scales is the graph-loop pattern
-    * ([[Graphs]]' localCheckpoint-per-round): the batch BASE is an
-    * eager localCheckpoint — lineage-free, plan = one RDD scan — and
-    * the k in-batch rounds stay completely LAZY (no persist). The k
-    * picks recompute shared prefixes of the replace chain
-    * (Σ ≤ k(k+1)/2 vocab-sized recounts per batch worst case; Spark's
-    * ReuseExchange dedupes the identical broadcast pick subplans
-    * within the one action), and the next batch's base is one more
-    * eager localCheckpoint of the final frame. Two actions per batch
-    * instead of the sequential loop's k, flat plans everywhere, no
-    * cache bookkeeping. Exhaustion composes: an empty pick annihilates
-    * the downstream cross joins, so the union simply comes back short
-    * and the loop stops at the same round the sequential form would. */
-  def bpeLearnIterBatched(docs: DataFrame, rounds: Int = 10,
-      batch: Int = 5): Seq[(String, String, Long)] = {
-    require(batch >= 1, s"batch must be >= 1, got $batch")
-    val freq = tokens(docs).filter(length(col("word")) >= 2)
+  /** The word-count frame every trainer starts from: one corpus-sized
+    * pass, (word, cnt) over distinct words of length ≥ 2. */
+  private def wordFreq(docs: DataFrame): DataFrame =
+    tokens(docs).filter(length(col("word")) >= 2)
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-    // eager: the one corpus-sized pass, materialized once, lineage cut
-    var v: DataFrame = freq.select(col("cnt"), concat(
-      regexp_replace(col("word"), "(.)", "  $1"), lit("  ")).as("enc"))
-      .localCheckpoint(true)
-    val learned = scala.collection.mutable.Buffer[(String, String, Long)]()
-    var exhausted = false
-    var r = 0
-    while (r < rounds && !exhausted) {
-      val k = math.min(batch, rounds - r)
-      var cur = v
-      val picks = (1 to k).map { i =>
-        val pick = pairCounts(cur)
-          .orderBy(col("n").desc, col("lhs"), col("rhs")).limit(1)
-          .select(lit(r + i).as("r"), col("lhs"), col("rhs"), col("n"))
-        cur = cur.crossJoin(broadcast(pick))
-          .select(col("cnt"), replace(col("enc"),
-            concat(lit(" "), col("lhs"), lit("  "), col("rhs"), lit(" ")),
-            concat(lit(" "), col("lhs"), col("rhs"), lit(" "))).as("enc"))
-        pick
-      }
-      // ONE action collects all k picks (lazy chain, flat base)
-      val got = picks.reduce(_ unionByName _).orderBy("r").collect()
-      got.foreach(row =>
-        learned += ((row.getString(1), row.getString(2), row.getLong(3))))
-      if (got.length < k) exhausted = true
-      else if (r + k < rounds) {
-        // batch boundary: truncate the k-round lineage so the next
-        // batch's plans start from a flat RDD scan — and RELEASE the
-        // superseded base's blocks explicitly (at thousands of batches,
-        // waiting for driver GC + ContextCleaner would stack
-        // MEMORY_AND_DISK copies of the vocab frame on the executors;
-        // nothing references the old base once the new one
-        // materializes, so unpersist is safe)
-        val prev = v
-        v = cur.localCheckpoint(true)
-        org.apache.spark.sql.GraftBridge.checkpointRdd(prev)
-          .foreach(_.unpersist(false))
-      }
-      r += k
-    }
-    learned.toSeq
-  }
 
-  /** [[bpeLearnIterBatched]] with INCREMENTAL pair-count maintenance
-    * (VERDICT r10 "Next round" #2 — what Sennrich's learn_bpe and HF
-    * tokenizers actually do): the batched loop still RECOUNTS every
-    * pair of every vocabulary word each round (Σ ≤ k(k+1)/2
-    * vocab-sized explodes per batch — at 30k merges, ~90M recount
-    * rows); but a merge only changes the pairs of words that CONTAIN
-    * it, so this trainer maintains the pair-count frame P by deltas:
+  /** The DISTRIBUTED training loop behind [[bpeLearnAuto]] (its route
+    * for vocabularies past the driver dial; `driverMaxWords = 1L`
+    * forces it): [[bpeLearnIter]] with INCREMENTAL pair-count
+    * maintenance (VERDICT r10 "Next round" #2 — what Sennrich's
+    * learn_bpe and HF tokenizers actually do). The recount reference
+    * explodes every pair of every vocabulary word each round; but a
+    * merge only changes the pairs of words that CONTAIN it, so this
+    * loop maintains the pair-count frame P by deltas:
     *
     *   P₀   = pairCounts(v₀)                      (the ONE full recount)
     *   Δᵣ   = pairCounts(matchedᵣ as-was, cnt NEGATED
@@ -643,8 +566,8 @@ object TermStats {
     * pairCounts is ADDITIVE over rows and unmatched words contribute
     * identical pairs before and after, so Pᵣ ≡ pairCounts(vᵣ) exactly,
     * every round — the argmax (same (n DESC, lhs, rhs) pin) is
-    * BIT-IDENTICAL to the recounting trainers by construction, and
-    * TermStatsSpec collect-asserts it against both. Zero-count pairs
+    * BIT-IDENTICAL to the recount by construction, and TermStatsSpec
+    * collect-asserts it against [[bpeLearnIter]]. Zero-count pairs
     * drop from P (filter n > 0), so exhaustion is still "P is empty",
     * matching the recount's no-pairs-left. Under Zipf, matchedᵣ
     * shrinks fast with rank: the per-round explode volume falls from
@@ -652,40 +575,20 @@ object TermStats {
     * between O(R · vocab) and O(vocab + Σ|matchedᵣ|) exploded rows
     * over an R = 30k run (TrainerBench records both).
     *
-    * DAG discipline — the batched loop's trick does NOT carry over
-    * (measured, the hard way): chaining the k picks lazily as
+    * DAG discipline (measured, the hard way): chaining picks lazily as
     * broadcast 1-row frames makes every pickᵢ a subplan referenced
     * from THREE downstream frames (vᵢ, Δᵢ old+new), so the logical
-    * tree multiplies ~4× per round — at k = 5 the analyzer burned
-    * 25+ min on one driver core before the first job. The pick
+    * tree multiplies ~4× per round — at 5 lazy rounds the analyzer
+    * burned 25+ min on one driver core before the first job. The pick
     * therefore COLLECTS each round (its operands become literals, so
-    * every frame references only its predecessor and plan growth is
-    * linear in k): one tiny P-argmax action per round — reading the
-    * MAINTAINED pair frame, not a recount — plus two checkpoint
-    * actions per round (v and P, superseded blocks released
-    * explicitly). The former `batch` dial (checkpoint cadence > 1,
-    * keeping the within-batch delta chains LAZY) re-executed each
-    * chain's ≤ batch-deep suffix per argmax — quadratic in the
-    * cadence, measured 24.2 s at batch=10 vs 2.0 s at batch=1 on the
-    * rounds=10 table (SCALE_r11 §3) — so the dial is FOLDED AWAY
-    * (VERDICT r11 "Next round" #6): the loop always applies one merge
-    * per round with a per-round checkpoint, its measured best
-    * operating point; the `batch` parameter remains only so existing
-    * call sites compile and is validated then ignored (every cadence
-    * produced a bit-identical table, so the fold is
-    * output-invisible). */
-  def bpeLearnIterIncremental(docs: DataFrame, rounds: Int = 10,
-      batch: Int = 1, eow: Boolean = false): Seq[(String, String, Long)] = {
-    require(batch >= 1, s"batch must be >= 1, got $batch")
-    bpeLearnIterIncrementalFromFreq(wordFreq(docs), rounds, eow)
-  }
-
-  /** The word-count frame every trainer starts from: one corpus-sized
-    * pass, (word, cnt) over distinct words of length ≥ 2. */
-  private def wordFreq(docs: DataFrame): DataFrame =
-    tokens(docs).filter(length(col("word")) >= 2)
-      .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-
+    * every frame references only its predecessor): one tiny P-argmax
+    * action per round — reading the MAINTAINED pair frame, not a
+    * recount — plus two checkpoint actions per round (v and P,
+    * superseded blocks released explicitly). A coarser checkpoint
+    * cadence re-executed each lazy delta chain's suffix per argmax —
+    * measured 24.2 s at every 10th round vs 2.0 s at every round on
+    * the rounds=10 table (SCALE_r11 §3) — so one merge, one
+    * checkpoint pair per round is the loop's only operating point. */
   private def bpeLearnIterIncrementalFromFreq(freq: DataFrame,
       rounds: Int, eow: Boolean = false): Seq[(String, String, Long)] = {
     var v: DataFrame = freq.select(col("cnt"), concat(
@@ -733,52 +636,6 @@ object TermStats {
     learned.toSeq
   }
 
-  /** DRIVER-LOCAL BPE training (VERDICT r11 "Next round" #1 — what
-    * Sennrich's learn_bpe and HF tokenizers actually do): the trainer's
-    * whole state is MODEL-sized — the distinct-word count frame plus
-    * the pair counts derived from it — so once the one corpus-sized
-    * pass (the word-count groupBy) has run, the merge loop itself has
-    * no business paying a Spark action per round. This collects the
-    * (word, cnt) frame under the repo's "the MODEL may live on the
-    * driver" license and runs the loop in memory:
-    *
-    *   - pair counts maintained by per-word deltas (subtract the
-    *     matched word's old adjacent pairs, merge, add the new ones) —
-    *     the same Δ algebra as [[bpeLearnIterIncremental]], just
-    *     applied to a hash map instead of a DataFrame;
-    *   - the argmax comes from a LAZY-DELETION HEAP: every pair-count
-    *     change pushes a (count, lhs, rhs) entry; pops whose count no
-    *     longer matches the live map are discarded. Total pushes =
-    *     total delta pairs, so the heap work is proportional to the
-    *     same merge-site volume the distributed delta explodes —
-    *     O(Δ log P) per round instead of a full-map scan;
-    *   - ties pin by (n DESC, lhs, rhs) under UTF-8 BYTE order — the
-    *     ordering Spark's UTF8String comparison gives the distributed
-    *     argmax (Java String compareTo is UTF-16 code-unit order,
-    *     which disagrees beyond the BMP, so the comparator compares
-    *     encoded bytes);
-    *   - symbols split per CODE POINT, matching what Java-regex `.`
-    *     matches in the distributed encoder's regexp_replace;
-    *   - merge application is the left-to-right NON-OVERLAPPING scan —
-    *     exactly Java `String.replace` over the double-space encoding.
-    *
-    * Bit-identical to [[bpeLearnIter]] / [[bpeLearnIterBatched]] /
-    * [[bpeLearnIterIncremental]] by construction (TermStatsSpec
-    * collect-asserts all of them, incl. at 1,000 real merges on the
-    * wide-vocabulary synthetic corpus); exhaustion is "no pairs left",
-    * the same stop the recount's empty argmax gives. The 30k-merge
-    * trajectory drops from ~3.5 h of per-round scheduler latency
-    * (0.42 s/round, SCALE_r11 §3) to in-memory minutes; TrainerBench
-    * records the measured wall-clock. For vocabularies that exceed
-    * driver memory, [[bpeLearnAuto]] routes to the distributed
-    * incremental loop instead. */
-  def bpeLearnLocal(docs: DataFrame, rounds: Int = 10,
-      eow: Boolean = false): Seq[(String, String, Long)] = {
-    val rows = wordFreq(docs).collect()
-    bpeLearnInMemory(
-      rows.map(r => (r.getString(0), r.getLong(1))), rounds, eow)
-  }
-
   /** MEASURED trainer-state footprint, worst mode (SCALE_r13 §2 +
     * SCALE_r14 §4, all on the same ~4.4M-distinct-word corpus): base
     * 1,118.7 B/word, eow 1,138.5 (+1.8 % — the marker forks
@@ -810,7 +667,10 @@ object TermStats {
     * 2.03 s/round against the distributed loop's 15.9 s/round
     * (TrainerBench big-vocabulary mode, merge-identity required), so
     * the distributed loop is strictly the out-of-driver-memory
-    * fallback. */
+    * fallback. An explicit dial forces a route: `Long.MaxValue` the
+    * in-memory loop, `1L` the distributed loop (for any vocabulary of
+    * two or more words) — how TermStatsSpec and TrainerBench hold both
+    * routes to the recount reference. */
   def bpeLearnAuto(docs: DataFrame, rounds: Int = 10,
       driverMaxWords: Long = 0L,
       eow: Boolean = false): Seq[(String, String, Long)] = {
@@ -935,8 +795,48 @@ object TermStats {
     out
   }
 
-  /** The in-memory merge loop behind [[bpeLearnLocal]] — pure
-    * Scala, no SparkSession, so the spec can drive it on raw arrays. */
+  /** DRIVER-LOCAL BPE training (VERDICT r11 "Next round" #1 — what
+    * Sennrich's learn_bpe and HF tokenizers actually do), the
+    * in-memory route of [[bpeLearnAuto]] (`driverMaxWords =
+    * Long.MaxValue` forces it): the trainer's whole state is
+    * MODEL-sized — the distinct-word count frame plus the pair counts
+    * derived from it — so once the one corpus-sized pass (the
+    * word-count groupBy) has run, the merge loop itself has no business
+    * paying a Spark action per round. [[bpeLearnAuto]] collects the
+    * (word, cnt) frame under the repo's "the MODEL may live on the
+    * driver" license and this runs the loop in memory — pure Scala, no
+    * SparkSession, so the spec can drive it on raw arrays:
+    *
+    *   - pair counts maintained by per-word deltas (subtract the
+    *     matched word's old adjacent pairs, merge, add the new ones) —
+    *     the same Δ algebra as the distributed incremental loop, just
+    *     applied to a hash map instead of a DataFrame;
+    *   - the argmax comes from a LAZY-DELETION HEAP: every pair-count
+    *     change pushes a (count, lhs, rhs) entry; pops whose count no
+    *     longer matches the live map are discarded. Total pushes =
+    *     total delta pairs, so the heap work is proportional to the
+    *     same merge-site volume the distributed delta explodes —
+    *     O(Δ log P) per round instead of a full-map scan;
+    *   - ties pin by (n DESC, lhs, rhs) under UTF-8 BYTE order — the
+    *     ordering Spark's UTF8String comparison gives the distributed
+    *     argmax (Java String compareTo is UTF-16 code-unit order,
+    *     which disagrees beyond the BMP, so the comparator compares
+    *     encoded bytes);
+    *   - symbols split per CODE POINT, matching what Java-regex `.`
+    *     matches in the distributed encoder's regexp_replace;
+    *   - merge application is the left-to-right NON-OVERLAPPING scan —
+    *     exactly Java `String.replace` over the double-space encoding.
+    *
+    * Bit-identical to [[bpeLearnIter]] and to the distributed loop by
+    * construction (TermStatsSpec collect-asserts both, and an
+    * independent full recount at 1,000 real merges on the
+    * wide-vocabulary synthetic corpus); exhaustion is "no pairs left",
+    * the same stop the recount's empty argmax gives. The 30k-merge
+    * trajectory drops from ~3.5 h of per-round scheduler latency
+    * (0.42 s/round, SCALE_r11 §3) to in-memory minutes; TrainerBench
+    * records the measured wall-clock. For vocabularies that exceed
+    * driver memory, [[bpeLearnAuto]] routes to the distributed
+    * incremental loop instead. */
   private[graft] def bpeLearnInMemory(words: Array[(String, Long)],
       rounds: Int, eow: Boolean = false): Seq[(String, String, Long)] = {
     import scala.collection.mutable
@@ -1020,8 +920,8 @@ object TermStats {
   /** Per-round RECOUNT-ROW volumes for the trainer A/B accounting
     * (VERDICT r10 "Next round" #7 — TrainerBench's table): for each
     * round r of a LEARNED merge table, (full, incremental) exploded
-    * pair-row counts over the distinct vocabulary — full = what every
-    * recounting trainer explodes that round (Σ_w symbols_r(w) − 1);
+    * pair-row counts over the distinct vocabulary — full = what the
+    * [[bpeLearnIter]] recount explodes that round (Σ_w symbols_r(w) − 1);
     * incremental = what the delta explodes (matched words only, both
     * their as-was and re-encoded forms). Diagnostic-only: one small
     * vocab aggregate per round, replace chains at gate depth. */
@@ -1052,8 +952,9 @@ object TermStats {
     * consumes it. Training runs [[bpeLearnAuto]] (r12): the
     * driver-local in-memory loop for model-sized vocabularies (this
     * corpus: ~19k distinct words), the distributed incremental loop
-    * beyond the driver threshold — all four trainers bit-identical
-    * (TermStatsSpec collect-asserts them); the learn_iter gate's
+    * beyond the driver threshold — both routes bit-identical to the
+    * [[bpeLearnIter]] recount reference (TermStatsSpec collect-asserts
+    * each route forced by `driverMaxWords`); the learn_iter gate's
     * unrolled-recount oracle validates the output directly — the gate
     * is the proof that neither maintenance nor the driver-local loop
     * ever drifts from the recount they replace. */
@@ -1081,9 +982,9 @@ object TermStats {
   /** The BYTE-LEVEL model, memoized like [[trainedIterMerges]]: the
     * UNCHANGED [[bpeLearnAuto]] router trained over the byte-char
     * corpus — byte mode is a corpus transform, not a trainer fork, so
-    * the whole family (sequential, batched, incremental, driver-local)
-    * serves it as-is and bit-identity across the four inherits from
-    * the base family's (TermStatsSpec pins it in byte mode too). */
+    * both routes and the recount reference serve it as-is and their
+    * bit-identity inherits from the base mode's (TermStatsSpec pins it
+    * in byte mode too). */
   private val byteMergeMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, Int), Seq[(String, String, Long)]]()
   private def trainedByteMerges(s: SparkSession, d: String,
@@ -1510,9 +1411,8 @@ object TermStats {
     // wraps each doc BOS … EOS and shifts artifact ids past the
     // reserved range — UNK id 0 stays 0 by the builder's shift rule,
     // so the UNK and padding sentinels remain one value.
-    Sampling.assembleSequences(
-      Sampling.wideFromPerDoc(inferencePerDocIds(docs, merges, symVocab,
-        suffix), window, buckets), window)
+    Sampling.packPerDoc(inferencePerDocIds(docs, merges, symVocab, suffix),
+      window, buckets)
 
   /** The per-doc UNK-resolved id arrays both inference packers share:
     * (doc_id, ids) in (token pos, symbol pos) order, OOV → 0. */
@@ -1546,10 +1446,8 @@ object TermStats {
       symVocab: DataFrame, suffix: String = unkSuffix,
       window: Int = 64, buckets: Int = 8,
       eow: Boolean = false): DataFrame =
-    Sampling.assembleSequences(
-      Sampling.wideFromPerDoc(inferencePerDocIds(docs, merges, symVocab,
-        suffix, eow), window, buckets, unkFaithful = true),
-      window, unkId = Some(Sampling.UnkId))
+    Sampling.packPerDoc(inferencePerDocIds(docs, merges, symVocab, suffix,
+      eow), window, buckets, unkFaithful = true)
 
   /** FULL-CIRCLE decode capstone (r12): text → greedy encode (loaded
     * merges) → UNK-resolve (loaded vocab) → UNK-FAITHFUL pack →
@@ -1681,10 +1579,9 @@ object TermStats {
     // Special-token contract (r11): the SHARED wide-frame builder
     // wraps each doc BOS … EOS and shifts the tokenizer's 1-based
     // symbol ids past the reserved range (0=pad, 1=BOS, 2=EOS).
-    Sampling.assembleSequences(
-      Sampling.wideFromPerDoc(
-        bpeIdsTensor(docs, merges).select(col("doc_id"), col("ids")),
-        window, buckets), window)
+    Sampling.packPerDoc(
+      bpeIdsTensor(docs, merges).select(col("doc_id"), col("ids")),
+      window, buckets)
 
   /** The learned tokenizer's VOCABULARY table (id, sym, n) — the other
     * half of a shippable tokenizer artifact beside the merge list:
@@ -1868,10 +1765,7 @@ object TermStats {
       .agg(flatten(transform(
         array_sort(collect_list(struct(col("pos"), col("wids")))),
         x => x.getField("wids"))).as("ids"))
-    Sampling.assembleSequences(
-      Sampling.wideFromPerDoc(perDoc, window, buckets,
-        unkFaithful = true),
-      window, unkId = Some(Sampling.UnkId))
+    Sampling.packPerDoc(perDoc, window, buckets, unkFaithful = true)
   }
 
   def decodeRoundtripByte(docs: DataFrame, merges: Seq[(String, String)],

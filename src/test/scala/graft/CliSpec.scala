@@ -139,6 +139,16 @@ class CliSpec extends AnyFunSuite {
     assert(ids.toSeq == Seq(1L, 2L))
   }
 
+  test("prepareupload with fewer than two arguments fails with its usage, " +
+      "not a MatchError") {
+    // the check runs before any session is built, so the shared test
+    // session stays up for the suites after this one
+    val e = intercept[IllegalArgumentException](
+      PrepareUpload.main(Array("only-one")))
+    assert(e.getMessage.contains("usage: prepareupload"))
+    assert(!spark.sparkContext.isStopped)
+  }
+
   test("flagship pipeline with NOTHING pending reports zeros, not an NPE") {
     // every doc_id % 3 == 0 ⇒ the derived manifest is fully uploaded, so
     // the upload stage sees zero rows and every sum/max aggregate in the

@@ -724,20 +724,74 @@ class SamplingSpec extends AnyFunSuite {
     // this is still a full row-for-row identity
     def render(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.orderBy("seq_id").collect().map(_.toString).toSeq
-    for (w <- Seq(8, 64)) {
-      // base contract
-      val wideB = Sampling.wideFromPerDoc(perDoc, w, 8)
-      assert(render(Sampling.assembleSequences(wideB, w)) ==
-        render(Sampling.assembleSequencesDeclarative(wideB, w)),
-        s"window $w base contract diverged")
-      // UNK-faithful contract (reserved UNK id excluded from the mask)
-      val wideU = Sampling.wideFromPerDoc(perDoc, w, 8,
-        unkFaithful = true)
-      assert(render(Sampling.assembleSequences(wideU, w,
-          unkId = Some(Sampling.UnkId))) ==
-        render(Sampling.assembleSequencesDeclarative(wideU, w,
-          unkId = Some(Sampling.UnkId))),
-        s"window $w UNK-faithful contract diverged")
+    // raw id 0 (UNK) on every 7th word id, so the UNK-faithful layout's
+    // mask exclusion and the base layout's 0 sentinel are both exercised
+    val perDocUnk = perDoc.select(col("doc_id"),
+      transform(col("ids"), x => when(x % 7 === 0L, lit(0L)).otherwise(x))
+        .as("ids"))
+    for (w <- Seq(8, 64); unk <- Seq(false, true);
+         (in, label) <- Seq((perDoc, "word ids"), (perDocUnk, "with UNKs"))) {
+      val wide = Sampling.wideFromPerDoc(in, w, 8, unkFaithful = unk)
+      assert(render(Sampling.assembleSequences(wide, w, unkFaithful = unk)) ==
+        render(assembleSequencesDeclarative(wide, w, unkFaithful = unk)),
+        s"window $w unkFaithful=$unk ($label) diverged")
     }
+  }
+
+  /** The r16-era declarative assembly, the executable spec the pack
+    * kernel ([[Sampling.packOne]] behind [[Sampling.assembleSequences]])
+    * is pinned against. It shares no code with the kernel: segment ids
+    * are a Window prefix sum, n_docs a countDistinct over doc_id, and
+    * the arrays come from collect_list + array_sort + pad expressions.
+    * Input: the (seq_id, spos, id, bnd, doc_id) grid of
+    * [[Sampling.wideFromPerDoc]] built under the same `unkFaithful`. */
+  private def assembleSequencesDeclarative(
+      wide: org.apache.spark.sql.DataFrame, window: Int,
+      unkFaithful: Boolean): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.expressions.Window
+    val pad = (n: Column) =>
+      array_repeat(lit(0L), (lit(window) - n).cast("int"))
+    // segment ids: cumulative bnd sum over the sequence, +1 when the
+    // sequence opens mid-document (the carried partial doc is
+    // segment 1 either way)
+    val wSeq = Window.partitionBy(col("seq_id")).orderBy(col("spos"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val segAdj = (seg0: Column) => transform(seg0,
+      x => x + lit(1L) - element_at(col("bnd0"), 1))
+    // next-token labels: ids[i+1] unless position i+1 opens a new
+    // document or i is the last real position; 0 = ignore. Both
+    // element_at calls are guarded by i < size, so the bound never
+    // overruns under ANSI.
+    val labReal = transform(
+      sequence(lit(1), size(col("ids0"))),
+      i => when(i < size(col("ids0")) &&
+          element_at(col("bnd0"), i + 1) === 0L,
+        element_at(col("ids0"), i + 1)).otherwise(lit(0L)))
+    // loss mask: 1 exactly where the PADDED labels carry a real target;
+    // under the UNK-faithful layout the reserved UNK id is excluded
+    val labArr = concat(labReal, pad(size(col("ids0"))))
+    val supervised = (x: Column) =>
+      if (unkFaithful) x =!= 0L && x =!= lit(Sampling.UnkId) else x =!= 0L
+    wide.withColumn("segp", sum(col("bnd")).over(wSeq))
+      .groupBy(col("seq_id"))
+      .agg(countDistinct(col("doc_id")).as("n_docs"),
+        count(lit(1)).as("n_tokens"),
+        transform(array_sort(collect_list(struct(col("spos"), col("id")))),
+          x => x.getField("id")).as("ids0"),
+        transform(array_sort(collect_list(struct(col("spos"), col("bnd")))),
+          x => x.getField("bnd")).as("bnd0"),
+        transform(array_sort(collect_list(struct(col("spos"), col("segp")))),
+          x => x.getField("segp")).as("seg0"))
+      .select(col("seq_id"), col("n_docs"), col("n_tokens"),
+        concat(col("ids0"), pad(size(col("ids0")))).as("ids"),
+        concat(col("bnd0"), pad(size(col("bnd0")))).as("doc_start"),
+        transform(labArr,
+          x => when(supervised(x), lit(1L)).otherwise(lit(0L)))
+          .as("loss_mask"),
+        concat(segAdj(col("seg0")), pad(size(col("bnd0"))))
+          .as("segment_ids"),
+        labArr.as("labels"))
+      .orderBy("seq_id")
   }
 }

@@ -70,13 +70,10 @@ class StreamsSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docs = Tables.documents(spark, TestSpark.sf0001)
-    // batch truth: the gated tensor packer over the full corpus
     def arrs(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getSeq[Long](3),
         r.getSeq[Long](4), r.getSeq[Long](5), r.getSeq[Long](6),
         r.getSeq[Long](7))
-    val want = graft.ops.Sampling.packSequencesTensor(docs)
-      .collect().map(arrs).toSeq
     // the encode-stage output the packer consumes: per-doc RAW word-id
     // arrays under the same alphabetic 1-based vocabulary the batch
     // packer derives
@@ -86,35 +83,54 @@ class StreamsSpec extends AnyFunSuite {
     val vocab = words.select("word").distinct().orderBy("word")
       .collect().map(_.getString(0)).zipWithIndex
       .map { case (w, i) => w -> (i + 1L) }.toMap
-    val perDoc = words.collect()
+    val perDocWords = words.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (id, rs) =>
         (id, rs.sortBy(_._2).map(t => vocab(t._3)).toSeq)
       }
-    val third = perDoc.size / 3
-    val (b1, rest) = perDoc.splitAt(third)
-    val (b2, b3) = rest.splitAt(third)
-    val mem = MemoryStream[(Long, Seq[Long])]
-    val q = Streams.packStream(mem.toDF().toDF("doc_id", "ids"))
-      .writeStream.outputMode(OutputMode.Append()).format("memory")
-      .queryName("pack_stream_out").start()
-    try {
-      mem.addData(b1: _*); q.processAllAvailable()
-      // the carry is real: batch 1's token count is not a multiple of
-      // 64, so only the completed prefix was emitted and a partial
-      // sequence (with its mid-sequence doc) is waiting in state
-      val toks1 = b1.map(_._2.size.toLong + 2L).sum
-      assert(toks1 % 64 != 0, "fixture must leave a partial sequence")
-      assert(spark.table("pack_stream_out").count() == toks1 / 64)
-      mem.addData(b2: _*); q.processAllAvailable()
-      mem.addData(b3: _*); q.processAllAvailable()
-      // end-of-stream flush: emit the final padded partial
-      mem.addData((-1L, Seq.empty[Long])); q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("pack_stream_out").collect().map(arrs)
-      .toSeq.sortBy(_._1)
-    assert(got == want)
+    // UNK-faithful input: every 7th vocabulary id arrives as raw 0
+    // (UNK), so the reserved UNK id and its mask exclusion are exercised
+    val perDocUnk = perDocWords.map { case (id, ids) =>
+      (id, ids.map(x => if (x % 7 == 0L) 0L else x))
+    }
+    // window 8 makes every label/mask/segment rule cross a sequence
+    // boundary; window 64 is the gated registry window
+    for (w <- Seq(64, 8); unk <- Seq(false, true)) {
+      val perDoc = if (unk) perDocUnk else perDocWords
+      // batch truth: the gated tensor packer over the full corpus for the
+      // base layout; the same batch packer over the UNK-bearing per-doc
+      // arrays for the UNK-faithful one
+      val want = (if (!unk)
+          graft.ops.Sampling.packSequencesTensor(docs, window = w)
+        else graft.ops.Sampling.packPerDoc(perDoc.toDF("doc_id", "ids"),
+          w, 8, unkFaithful = true))
+        .orderBy("seq_id").collect().map(arrs).toSeq
+      val third = perDoc.size / 3
+      val (b1, rest) = perDoc.splitAt(third)
+      val (b2, b3) = rest.splitAt(third)
+      val mem = MemoryStream[(Long, Seq[Long])]
+      val name = s"pack_stream_out_w${w}_unk$unk"
+      val q = Streams.packStream(mem.toDF().toDF("doc_id", "ids"),
+          window = w, unkFaithful = unk)
+        .writeStream.outputMode(OutputMode.Append()).format("memory")
+        .queryName(name).start()
+      try {
+        mem.addData(b1: _*); q.processAllAvailable()
+        // the carry is real: batch 1's token count is not a multiple of
+        // the window, so only the completed prefix was emitted and a
+        // partial sequence (with its mid-sequence doc) waits in state
+        val toks1 = b1.map(_._2.size.toLong + 2L).sum
+        assert(toks1 % w != 0, s"window $w: fixture must leave a partial")
+        assert(spark.table(name).count() == toks1 / w)
+        mem.addData(b2: _*); q.processAllAvailable()
+        mem.addData(b3: _*); q.processAllAvailable()
+        // end-of-stream flush: emit the final padded partial
+        mem.addData((-1L, Seq.empty[Long])); q.processAllAvailable()
+      } finally q.stop()
+      val got = spark.table(name).collect().map(arrs).toSeq.sortBy(_._1)
+      assert(got == want, s"window $w unkFaithful=$unk")
+    }
   }
 
   test("SHARD-PARALLEL streaming packer (N=4): each shard's sequences " +

@@ -236,21 +236,19 @@ class TermStatsSpec extends AnyFunSuite {
   }
 
   test("bpeGreedyEncode (scaled encoder) equals the expression chain " +
-      "on the learned table, and the batched trainer is bit-identical " +
-      "to the sequential loop") {
+      "on the learned table, and both bpeLearnAuto routes are " +
+      "bit-identical to the sequential loop") {
     val docs = Tables.documents(spark, TestSpark.sf0001)
-    // batched == sequential at production settings (rounds=10, batch=5),
-    // and the r11 incremental-pair-count trainer matches both — the
-    // maintained P frame never drifts from the recount it replaces
+    // both routes match the recount at production settings (rounds=10):
+    // the distributed incremental loop (dial forced to 1) — its
+    // maintained P frame never drifts from the recount it replaces —
+    // and the driver-local loop (dial forced open), which the default
+    // dial also picks on this model-sized vocab
     val seqM = TermStats.bpeLearnIter(docs, 10)
-    assert(TermStats.bpeLearnIterBatched(docs, 10, batch = 5) == seqM)
-    assert(TermStats.bpeLearnIterIncremental(docs, 10, batch = 5) == seqM)
-    // r12 driver-local trainer: bit-identical to the whole family, and
-    // the auto router takes the local path on this model-sized vocab
-    // AND the distributed path when the threshold forces it over
-    assert(TermStats.bpeLearnLocal(docs, 10) == seqM)
-    assert(TermStats.bpeLearnAuto(docs, 10) == seqM)
     assert(TermStats.bpeLearnAuto(docs, 10, driverMaxWords = 1L) == seqM)
+    assert(TermStats.bpeLearnAuto(docs, 10,
+      driverMaxWords = Long.MaxValue) == seqM)
+    assert(TermStats.bpeLearnAuto(docs, 10) == seqM)
     // scaled apply == expression-chain apply on the learned table
     val pairs = seqM.map { case (a, b, _) => (a, b) }
     val want = TermStats.bpeApplyPairs(docs, pairs).collect()
@@ -354,11 +352,11 @@ class TermStatsSpec extends AnyFunSuite {
       "symbol stream alone, through the packed tensors") {
     val docs = Tables.documents(spark, TestSpark.sf0001)
     val seqM = TermStats.bpeLearnIter(docs, 10, eow = true)
-    assert(TermStats.bpeLearnIterIncremental(docs, 10, eow = true) == seqM)
-    assert(TermStats.bpeLearnLocal(docs, 10, eow = true) == seqM)
-    assert(TermStats.bpeLearnAuto(docs, 10, eow = true) == seqM)
     assert(TermStats.bpeLearnAuto(docs, 10, driverMaxWords = 1L,
       eow = true) == seqM)
+    assert(TermStats.bpeLearnAuto(docs, 10, driverMaxWords = Long.MaxValue,
+      eow = true) == seqM)
+    assert(TermStats.bpeLearnAuto(docs, 10, eow = true) == seqM)
     // marker mode must actually CHANGE the model — guards against the
     // flag being a silent no-op (the non-marker family's own equality
     // suite is unchanged above)
@@ -426,13 +424,13 @@ class TermStatsSpec extends AnyFunSuite {
       "verbatim with zero UNKs, through the packed tensors too") {
     val docs = Tables.documents(spark, TestSpark.sf0001)
     val bdocs = TermStats.byteDocs(docs)
-    // trainer-family bit-identity in byte mode: byte mode is a corpus
-    // transform, so the four trainers take the SAME frame
+    // trainer bit-identity in byte mode: byte mode is a corpus
+    // transform, so the reference and both routes take the SAME frame
     val seqM = TermStats.bpeLearnIter(bdocs, 10)
-    assert(TermStats.bpeLearnIterIncremental(bdocs, 10) == seqM)
-    assert(TermStats.bpeLearnLocal(bdocs, 10) == seqM)
-    assert(TermStats.bpeLearnAuto(bdocs, 10) == seqM)
     assert(TermStats.bpeLearnAuto(bdocs, 10, driverMaxWords = 1L) == seqM)
+    assert(TermStats.bpeLearnAuto(bdocs, 10,
+      driverMaxWords = Long.MaxValue) == seqM)
+    assert(TermStats.bpeLearnAuto(bdocs, 10) == seqM)
     // byte mode genuinely changes the model (operands live in the
     // remapped alphabet, disjoint from the char-mode operands)
     val baseM = TermStats.bpeLearnIter(docs, 10)
@@ -853,27 +851,24 @@ class TermStatsSpec extends AnyFunSuite {
       "base contract drops exactly the UNK positions")
   }
 
-  test("batched trainer: exhaustion composes across batch boundaries " +
-      "and every batch size gives the same table") {
-    // tiny corpus exhausts after 4 merges: he, t+he, (space-free "the"
+  test("trainer exhaustion: both bpeLearnAuto routes stop at the same " +
+      "merge as the sequential loop, with the same table") {
+    // tiny corpus exhausts after 2 merges: he, t+he (space-free "the"
     // fully fused), then cross-word pairs can't exist — requesting 8
-    // rounds must stop where the sequential loop stops, for EVERY
-    // batch size (an empty pick annihilates the downstream chain).
+    // rounds must stop where the sequential loop stops
     val tiny = Seq((1L, "the the the"), (2L, "he he"))
       .toDF("doc_id", "text")
       .withColumn("n_chars", length(col("text")))
     val seqM = TermStats.bpeLearnIter(tiny, 8)
-    for (b <- Seq(1, 2, 3, 8)) {
-      assert(TermStats.bpeLearnIterBatched(tiny, 8, batch = b) == seqM,
-        s"batch=$b")
-      // incremental maintenance exhausts identically: P runs dry at
-      // the same round the recount does, for every batch size
-      assert(TermStats.bpeLearnIterIncremental(tiny, 8, batch = b) == seqM,
-        s"incremental batch=$b")
-    }
+    assert(seqM.size < 8, "fixture must exhaust before 8 rounds")
+    // incremental maintenance exhausts identically: P runs dry at the
+    // same round the recount does (two distinct words > the dial of 1)
+    assert(TermStats.bpeLearnAuto(tiny, 8, driverMaxWords = 1L) == seqM,
+      "distributed route")
     // the driver-local loop exhausts at the same merge with the same
     // table: its heap running dry IS the recount's empty argmax
-    assert(TermStats.bpeLearnLocal(tiny, 8) == seqM)
+    assert(TermStats.bpeLearnAuto(tiny, 8,
+      driverMaxWords = Long.MaxValue) == seqM, "driver-local route")
   }
 
   /** Independent full-RECOUNT reference trainer, entirely in-memory:
@@ -953,7 +948,8 @@ class TermStatsSpec extends AnyFunSuite {
     val engine = TermStats.bpeLearnIter(docs, 2)
     assert(engine.head._1 == bmp && engine.head._3 == 2L,
       "fixture: the engine itself must pick the UTF-8-smaller lhs")
-    assert(TermStats.bpeLearnLocal(docs, 2) == engine)
+    assert(TermStats.bpeLearnAuto(docs, 2,
+      driverMaxWords = Long.MaxValue) == engine)
     // and compareTo really would have chosen the other side — the
     // comparator is load-bearing, not decorative
     assert(supp.compareTo(bmp) < 0 && bmp.compareTo(supp) > 0)
@@ -966,10 +962,10 @@ class TermStatsSpec extends AnyFunSuite {
     val docs = SynthCorpus.wideVocabDocs(spark, 30000, 2000L, 60)
     val auto = TermStats.bpeLearnAuto(docs, 12)
     assert(auto.size == 12)
-    assert(auto == TermStats.bpeLearnLocal(docs, 12))
+    assert(auto == TermStats.bpeLearnAuto(docs, 12,
+      driverMaxWords = Long.MaxValue))
     // shared-prefix identity against the distributed incremental loop
-    // (the big-corpus route) and against the dial forced over
-    assert(TermStats.bpeLearnIterIncremental(docs, 6) == auto.take(6))
+    // (the big-corpus route), reached by forcing the dial over
     assert(TermStats.bpeLearnAuto(docs, 6, driverMaxWords = 1L)
       == auto.take(6))
     // the footprint probe's structural sizes on a hand corpus:
@@ -1001,13 +997,15 @@ class TermStatsSpec extends AnyFunSuite {
     val want = refRecountTrain(refWords, 1000)
     assert(want.size == 1000, s"corpus must sustain 1,000 real merges " +
       s"(got ${want.size})")
-    val local = TermStats.bpeLearnLocal(docs, 1000)
+    val local = TermStats.bpeLearnAuto(docs, 1000,
+      driverMaxWords = Long.MaxValue)
     assert(local == want,
       "delta/lazy-heap maintenance drifted from the full recount")
     // distributed incremental ≡ local at 40 rounds (0.4 s/round of
     // scheduler latency bounds what a spec should spend — TrainerBench
     // long-run mode carries the full-depth distributed equality)
-    assert(TermStats.bpeLearnIterIncremental(docs, 40) == want.take(40))
+    assert(TermStats.bpeLearnAuto(docs, 40, driverMaxWords = 1L)
+      == want.take(40))
   }
 
   /** The literal string-replace twin of [[TermStats.bpeEncodePairsExpr]]
