@@ -23,7 +23,7 @@ import graft.sink.{LocalFsStore, Uploader}
 object Pipeline {
 
   /** Manifest + payload, joined by EQUI-join on the reconstructed path
-    * (exposed for the plan assertion in PipelineSpec: this must never
+    * (exposed for the plan assertion in CliSpec: this must never
     * degrade to a nested-loop join). */
   private[graft] def attachPayload(spark: SparkSession, dir: String): DataFrame = {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
@@ -80,10 +80,6 @@ object Pipeline {
 
     // 4. Mark uploaded (snapshot semantics; see ManifestStore for swap).
     val marked = Manifest.markUploaded(m, results.filter(col("ok")).toDF())
-
-    // 4b. Progress + report files (sink_progress_file / end_reporting).
-    graft.sink.Reports.writeProgress(marked, s"$storeRoot/.upload.out", ratePerSec)
-    graft.sink.Reports.writeReport(results.toDF(), s"$storeRoot/.upload.report.log")
 
     // 5. Report (end_reporting): totals + percent + rate fields. Computed
     //    eagerly (one tiny row) so the upload stage's cache can be released

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.ops.TermStats.BpeMode
 
 /** Diagnostic main for the BPE trainer A/B: time the recount
   * reference ([[graft.ops.TermStats.bpeLearnIter]], one Spark action
@@ -166,7 +167,7 @@ object TrainerBench {
       val merges = graft.ops.TermStats.syntheticMerges(n)
         .map { case (a, b) => (toByteAlpha(a), toByteAlpha(b)) }
       // closed vocab: 256 base byte-chars ∪ each merge's fused symbol
-      // (the bpeVocabByte shape, synthetic ids)
+      // (the byte-mode bpeVocab shape, synthetic ids)
       val vocab = (graft.ops.TermStats.ByteAlphabet.map(_.toString) ++
         merges.map { case (a, b) => a + b }).distinct
         .zipWithIndex.map { case (s, i) => (s, i.toLong) }
@@ -175,22 +176,25 @@ object TrainerBench {
       try {
         val (_, tWrite) = time(graft.ops.TermStats
           .writeTokenizerInterchange(spark, merges,
-            vocab.toDF("sym", "id"), dir))
+            vocab.toDF("sym", "id"), dir, BpeMode.Byte))
         val (loaded, tMerges) = time(
-          graft.ops.TermStats.loadInterchangeMerges(spark, dir))
+          graft.ops.TermStats.loadInterchangeMerges(spark, dir, BpeMode.Byte))
         require(loaded == merges,
           "interchange merges diverged at depth")
         val (nVocab, tVocab) = time(
-          graft.ops.TermStats.loadInterchangeVocab(spark, dir).count())
+          graft.ops.TermStats.loadInterchangeVocab(spark, dir, BpeMode.Byte)
+            .count())
         require(nVocab == vocab.size.toLong,
           "interchange vocab diverged at depth")
         val sfD = if (args.nonEmpty) args.head else "/root/testdata/sf0.1"
         // byteDocs is already eagerly checkpointed internally (r16) —
-        // no second materialization (ADVICE r16 #2)
+        // no second materialization (ADVICE r16 #2). The remap stays
+        // outside the timed apply, so the apply runs the char rule over
+        // the byte corpus (Byte would remap it again inside the timing).
         val docsB = graft.ops.TermStats.byteDocs(
           graft.model.Tables.documents(spark, sfD))
         val tApply = (1 to 3).map(_ => time(
-          graft.ops.TermStats.bpeApplyScaled(docsB, loaded)
+          graft.ops.TermStats.bpeApplyScaled(docsB, loaded, BpeMode.Char)
             .queryExecution.toRdd.count())).map(_._2).min
         println(s"""{"mode":"interchange-depth","sf":"$sfD",""" +
           s""""merges":$n,"vocab":$nVocab,""" +
@@ -280,7 +284,7 @@ object TrainerBench {
     for (n <- Seq(1000, 5000)) {
       val merges = graft.ops.TermStats.syntheticMerges(n)
       val t = (1 to 3).map(_ => time(
-        graft.ops.TermStats.bpeApplyScaled(docs01, merges)
+        graft.ops.TermStats.bpeApplyScaled(docs01, merges, BpeMode.Char)
           .queryExecution.toRdd.count())).map(_._2).min
       println(s"""{"sf":"${sfs.last}","scaled_encode_merges":$n,""" +
         s""""apply_s":${r3(t)}}""")

@@ -172,16 +172,16 @@ object EventWindows {
   private def dailyAggBase(s: SparkSession, d: String): String =
     baseAggMemo.getOrElseUpdate((s, d), {
       val tmp = java.nio.file.Files.createTempDirectory("graft-inc").toString
+      SessionCleanup.onEnd(s) {
+        baseAggMemo.remove((s, d))
+        SessionCleanup.deleteRecursively(tmp)
+      }
       val ev = Tables.events(s, d)
       val maxDay = ev.agg(max(to_date(col("ts")))).head().getDate(0)
       ev.filter(to_date(col("ts")) < lit(maxDay))
         .groupBy(to_date(col("ts")).as("day"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"))
         .write.mode("overwrite").parquet(tmp)
-      SessionCleanup.onEnd(s) {
-        baseAggMemo.remove((s, d))
-        SessionCleanup.deleteRecursively(tmp)
-      }
       tmp
     })
 

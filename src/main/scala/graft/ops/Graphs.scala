@@ -446,13 +446,13 @@ object Graphs {
   private def ranksAfter5(s: SparkSession, d: String): String =
     resumeMemo.getOrElseUpdate((s, d), {
       val tmp = java.nio.file.Files.createTempDirectory("graft-pr5").toString
-      pagerankFrom(Tables.documents(s, d), 5, init = None)
-        .select(col("doc_id"), col("rank_fp").as("r"))
-        .write.mode("overwrite").parquet(tmp)
       SessionCleanup.onEnd(s) {
         resumeMemo.remove((s, d))
         SessionCleanup.deleteRecursively(tmp)
       }
+      pagerankFrom(Tables.documents(s, d), 5, init = None)
+        .select(col("doc_id"), col("rank_fp").as("r"))
+        .write.mode("overwrite").parquet(tmp)
       tmp
     })
 
@@ -461,13 +461,13 @@ object Graphs {
   private def pprAfter5(s: SparkSession, d: String): String =
     resumeMemo.getOrElseUpdate((s, d + "#ppr"), {
       val tmp = java.nio.file.Files.createTempDirectory("graft-ppr5").toString
-      pagerankPersonalized(Tables.documents(s, d), iters = 5)
-        .select(col("doc_id"), col("rank_fp").as("r"))
-        .write.mode("overwrite").parquet(tmp)
       SessionCleanup.onEnd(s) {
         resumeMemo.remove((s, d + "#ppr"))
         SessionCleanup.deleteRecursively(tmp)
       }
+      pagerankPersonalized(Tables.documents(s, d), iters = 5)
+        .select(col("doc_id"), col("rank_fp").as("r"))
+        .write.mode("overwrite").parquet(tmp)
       tmp
     })
 

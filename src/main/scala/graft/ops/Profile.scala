@@ -78,12 +78,12 @@ object Profile {
   private[graft] def partitionedCopy(s: SparkSession, d: String): String =
     memo.getOrElseUpdate((s, d), {
       val tmp = java.nio.file.Files.createTempDirectory("graft-part").toString
-      Tables.documents(s, d).write.mode("overwrite")
-        .partitionBy("lang").parquet(tmp)
       SessionCleanup.onEnd(s) {
         memo.remove((s, d))
         SessionCleanup.deleteRecursively(tmp)
       }
+      Tables.documents(s, d).write.mode("overwrite")
+        .partitionBy("lang").parquet(tmp)
       tmp
     })
 
@@ -100,14 +100,14 @@ object Profile {
   private[graft] def sortedCopy(s: SparkSession, d: String): String =
     sortedMemo.getOrElseUpdate((s, d), {
       val tmp = java.nio.file.Files.createTempDirectory("graft-sorted").toString
-      Tables.documents(s, d)
-        .repartitionByRange(4, col("n_chars"))
-        .sortWithinPartitions("n_chars")
-        .write.mode("overwrite").parquet(tmp)
       SessionCleanup.onEnd(s) {
         sortedMemo.remove((s, d))
         SessionCleanup.deleteRecursively(tmp)
       }
+      Tables.documents(s, d)
+        .repartitionByRange(4, col("n_chars"))
+        .sortWithinPartitions("n_chars")
+        .write.mode("overwrite").parquet(tmp)
       tmp
     })
 
@@ -149,6 +149,10 @@ object Profile {
   private[graft] def zorderCopy(s: SparkSession, d: String): String =
     zorderMemo.getOrElseUpdate((s, d), {
       val tmp = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+      SessionCleanup.onEnd(s) {
+        zorderMemo.remove((s, d))
+        SessionCleanup.deleteRecursively(tmp)
+      }
       val zday = expr("unix_micros(ts) div 86400000000").bitwiseAND(lit(1023L))
       Tables.events(s, d)
         .select(col("event_id"), col("user_id"),
@@ -158,10 +162,6 @@ object Profile {
         .repartitionByRange(8, col("zkey"))
         .sortWithinPartitions("zkey")
         .write.mode("overwrite").parquet(tmp)
-      SessionCleanup.onEnd(s) {
-        zorderMemo.remove((s, d))
-        SessionCleanup.deleteRecursively(tmp)
-      }
       tmp
     })
 
@@ -175,14 +175,14 @@ object Profile {
   private[graft] def dppDims(s: SparkSession, d: String): String =
     dppDimMemo.getOrElseUpdate((s, d), {
       val tmp = java.nio.file.Files.createTempDirectory("graft-dppdim").toString
-      Tables.documents(s, d).select(col("lang")).distinct()
-        .withColumn("tier",
-          when(col("lang").isin("en", "zh"), "major").otherwise("minor"))
-        .write.mode("overwrite").parquet(tmp)
       SessionCleanup.onEnd(s) {
         dppDimMemo.remove((s, d))
         SessionCleanup.deleteRecursively(tmp)
       }
+      Tables.documents(s, d).select(col("lang")).distinct()
+        .withColumn("tier",
+          when(col("lang").isin("en", "zh"), "major").otherwise("minor"))
+        .write.mode("overwrite").parquet(tmp)
       tmp
     })
 
@@ -195,16 +195,16 @@ object Profile {
   private[graft] def jsonlCopy(s: SparkSession, d: String, shards: Int): String =
     jsonlMemo.getOrElseUpdate((s, d, shards), {
       val tmp = java.nio.file.Files.createTempDirectory("graft-jsonl").toString
+      SessionCleanup.onEnd(s) {
+        jsonlMemo.remove((s, d, shards))
+        SessionCleanup.deleteRecursively(tmp)
+      }
       // range-repartition on the sort key → shards hold contiguous id
       // ranges (the layout a training loader reads sequentially), and
       // the shard count is the explicit dial (at 100 TB: total/512 MB).
       Tables.documents(s, d)
         .repartitionByRange(shards, col("doc_id"))
         .write.mode("overwrite").json(tmp)
-      SessionCleanup.onEnd(s) {
-        jsonlMemo.remove((s, d, shards))
-        SessionCleanup.deleteRecursively(tmp)
-      }
       tmp
     })
 
@@ -229,6 +229,10 @@ object Profile {
   private[graft] def compactCopy(s: SparkSession, d: String): (String, Int) =
     compactMemo.getOrElseUpdate((s, d), {
       val root = java.nio.file.Files.createTempDirectory("graft-compact").toString
+      SessionCleanup.onEnd(s) {
+        compactMemo.remove((s, d))
+        SessionCleanup.deleteRecursively(root)
+      }
       Tables.documents(s, d).repartition(64)
         .write.mode("overwrite").parquet(s"$root/small")
       val smallBytes = new java.io.File(s"$root/small").listFiles()
@@ -237,10 +241,6 @@ object Profile {
       val nOut = math.max(1, math.ceil(smallBytes.toDouble / targetBytes).toInt)
       s.read.parquet(s"$root/small").coalesce(nOut)
         .write.mode("overwrite").parquet(s"$root/compact")
-      SessionCleanup.onEnd(s) {
-        compactMemo.remove((s, d))
-        SessionCleanup.deleteRecursively(root)
-      }
       (root, nOut)
     })
 
@@ -397,6 +397,10 @@ object Profile {
   private[graft] def overwriteCopy(s: SparkSession, d: String): String =
     overwriteMemo.getOrElseUpdate((s, d), {
       val tmp = java.nio.file.Files.createTempDirectory("graft-ovw").toString
+      SessionCleanup.onEnd(s) {
+        overwriteMemo.remove((s, d))
+        SessionCleanup.deleteRecursively(tmp)
+      }
       val docs = Tables.documents(s, d)
       docs.write.mode("overwrite").partitionBy("lang").parquet(tmp)
       docs.filter(col("lang") === "en")
@@ -404,10 +408,6 @@ object Profile {
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("lang").parquet(tmp)
-      SessionCleanup.onEnd(s) {
-        overwriteMemo.remove((s, d))
-        SessionCleanup.deleteRecursively(tmp)
-      }
       tmp
     })
 

@@ -1317,12 +1317,12 @@ object Similarity {
       // never write the same artifact concurrently.
       val out = java.nio.file.Files
         .createTempDirectory("graft-annindex").toString
-      writeIvfPqIndex(Tables.embeddings(sp, dir),
-        trainedCentroids(sp, dir, 16, 0), out)
       SessionCleanup.onEnd(sp) {
         indexDirMemo.remove((sp, dir))
         SessionCleanup.deleteRecursively(out)
       }
+      writeIvfPqIndex(Tables.embeddings(sp, dir),
+        trainedCentroids(sp, dir, 16, 0), out)
       out
     })
 
@@ -1343,14 +1343,14 @@ object Similarity {
     appendIndexMemo.computeIfAbsent((s, d), { case (sp, dir) =>
       val out = java.nio.file.Files
         .createTempDirectory("graft-annappend").toString
-      val emb = Tables.embeddings(sp, dir)
-      writeIvfPqIndex(emb.filter(col("vec_id") % 5 =!= 0),
-        trainedCentroids(sp, dir, 16, 0), out, writeResiduals = false)
-      appendToIvfPqIndex(sp, out, emb.filter(col("vec_id") % 5 === 0))
       SessionCleanup.onEnd(sp) {
         appendIndexMemo.remove((sp, dir))
         SessionCleanup.deleteRecursively(out)
       }
+      val emb = Tables.embeddings(sp, dir)
+      writeIvfPqIndex(emb.filter(col("vec_id") % 5 =!= 0),
+        trainedCentroids(sp, dir, 16, 0), out, writeResiduals = false)
+      appendToIvfPqIndex(sp, out, emb.filter(col("vec_id") % 5 === 0))
       out
     })
 
@@ -1368,16 +1368,16 @@ object Similarity {
     compactIndexMemo.computeIfAbsent((s, d), { case (sp, dir) =>
       val out = java.nio.file.Files
         .createTempDirectory("graft-anncompact").toString
+      SessionCleanup.onEnd(sp) {
+        compactIndexMemo.remove((sp, dir))
+        SessionCleanup.deleteRecursively(out)
+      }
       val emb = Tables.embeddings(sp, dir)
       writeIvfPqIndex(emb.filter(col("vec_id") % 5 =!= 0),
         trainedCentroids(sp, dir, 16, 0), out, writeResiduals = false)
       appendToIvfPqIndex(sp, out, emb.filter(col("vec_id") % 10 === 0))
       appendToIvfPqIndex(sp, out, emb.filter(col("vec_id") % 10 === 5))
       compactIvfPqIndexCodes(sp, out)
-      SessionCleanup.onEnd(sp) {
-        compactIndexMemo.remove((sp, dir))
-        SessionCleanup.deleteRecursively(out)
-      }
       out
     })
 
@@ -1398,6 +1398,10 @@ object Similarity {
     rebuildIndexMemo.computeIfAbsent((s, d), { case (sp, dir) =>
       val out = java.nio.file.Files
         .createTempDirectory("graft-annrebuild").toString
+      SessionCleanup.onEnd(sp) {
+        rebuildIndexMemo.remove((sp, dir))
+        SessionCleanup.deleteRecursively(out)
+      }
       val emb = Tables.embeddings(sp, dir)
       val base = emb.filter(col("vec_id") % 5 =!= 0)
       // the drift starting point: a DIFFERENT model (8 coarse lists,
@@ -1405,10 +1409,6 @@ object Similarity {
       writeIvfPqIndex(base, ivfCentroids(emb, 8, 0), out,
         writeResiduals = false)
       rebuildIvfPqIndex(sp, out, emb, trainedCentroids(sp, dir, 16, 0))
-      SessionCleanup.onEnd(sp) {
-        rebuildIndexMemo.remove((sp, dir))
-        SessionCleanup.deleteRecursively(out)
-      }
       out
     })
 
@@ -1431,14 +1431,14 @@ object Similarity {
     deleteIndexMemo.computeIfAbsent((s, d), { case (sp, dir) =>
       val out = java.nio.file.Files
         .createTempDirectory("graft-anndelete").toString
-      val emb = Tables.embeddings(sp, dir)
-      writeIvfPqIndex(emb, trainedCentroids(sp, dir, 16, 0), out,
-        writeResiduals = false)
-      deleteFromIvfPqIndex(sp, out, emb.filter(deletePred))
       SessionCleanup.onEnd(sp) {
         deleteIndexMemo.remove((sp, dir))
         SessionCleanup.deleteRecursively(out)
       }
+      val emb = Tables.embeddings(sp, dir)
+      writeIvfPqIndex(emb, trainedCentroids(sp, dir, 16, 0), out,
+        writeResiduals = false)
+      deleteFromIvfPqIndex(sp, out, emb.filter(deletePred))
       out
     })
 

@@ -32,6 +32,10 @@ object FileFormats {
   private def ensureWritten(s: SparkSession, d: String): String =
     memo.computeIfAbsent((s, d), { case (spark, dir) =>
       val root = java.nio.file.Files.createTempDirectory("graft-fmt").toString
+      graft.ops.SessionCleanup.onEnd(spark) {
+        memo.remove((spark, dir))
+        graft.ops.SessionCleanup.deleteRecursively(root)
+      }
       val m = Manifest.fromDocuments(spark, dir)
       m.write.mode("overwrite").option("header", "true").csv(s"$root/csv")
       m.write.mode("overwrite").json(s"$root/json")
@@ -49,10 +53,6 @@ object FileFormats {
       m.select(concat(col("id"), lit("\t"), col("path"),
           lit("\t"), col("uploaded")).as("value"))
         .write.mode("overwrite").text(s"$root/lines")
-      graft.ops.SessionCleanup.onEnd(spark) {
-        memo.remove((spark, dir))
-        graft.ops.SessionCleanup.deleteRecursively(root)
-      }
       root
     })
 
@@ -124,6 +124,10 @@ object FileFormats {
   private def ensureEvolved(s: SparkSession, d: String): String =
     evoMemo.computeIfAbsent((s, d), { case (spark, dir) =>
       val root = java.nio.file.Files.createTempDirectory("graft-evo").toString
+      graft.ops.SessionCleanup.onEnd(spark) {
+        evoMemo.remove((spark, dir))
+        graft.ops.SessionCleanup.deleteRecursively(root)
+      }
       val docs = graft.model.Tables.documents(spark, dir)
       docs.filter(col("doc_id") % 2 === 0)
         .select("doc_id", "text", "lang")
@@ -131,10 +135,6 @@ object FileFormats {
       docs.filter(col("doc_id") % 2 === 1)
         .select("doc_id", "text", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$root/v2")
-      graft.ops.SessionCleanup.onEnd(spark) {
-        evoMemo.remove((spark, dir))
-        graft.ops.SessionCleanup.deleteRecursively(root)
-      }
       root
     })
 

@@ -73,13 +73,13 @@ object FsScan {
     "scan_fs_recursive" -> ((s, d) => {
       val root = treeMemo.computeIfAbsent(d, { dir =>
         val r = java.nio.file.Files.createTempDirectory("graft-fsscan").toString
-        writeDocsAsFiles(s, dir, r)
         // keyed by dir (not session): evict + delete when the session that
         // materialized the tree ends — one session per JVM outside tests.
         graft.ops.SessionCleanup.onEnd(s) {
           treeMemo.remove(dir)
           graft.ops.SessionCleanup.deleteRecursively(r)
         }
+        writeDocsAsFiles(s, dir, r)
         r
       })
       scanRecursive(s, root)

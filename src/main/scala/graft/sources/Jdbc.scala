@@ -101,8 +101,6 @@ object Jdbc {
     memo.computeIfAbsent((s, d), { case (spark, dir) =>
       val tmp = java.nio.file.Files.createTempDirectory("graft-derby")
       val dbDir = tmp.resolve("manifestdb").toString
-      val url = derbyUrl(dbDir)
-      writeManifest(Manifest.fromDocuments(spark, dir), url)
       graft.ops.SessionCleanup.onEnd(spark) {
         memo.remove((spark, dir))
         // clean Derby shutdown (throws SQLException on success by contract)
@@ -111,6 +109,8 @@ object Jdbc {
         catch { case _: java.sql.SQLException => () }
         graft.ops.SessionCleanup.deleteRecursively(tmp.toString)
       }
+      val url = derbyUrl(dbDir)
+      writeManifest(Manifest.fromDocuments(spark, dir), url)
       url
     })
 

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import graft.ops.{EventWindows, Sampling}
+import graft.ops.{EventWindows, Sampling, TermStats}
+import graft.ops.TermStats.BpeMode
 import graft.ops.Sampling.PackedSeq
 
 /** Structured Streaming runners (SURVEY §2.12).
@@ -461,27 +462,21 @@ object Streams {
     * exploiting the Zipf repetition inside a batch without carrying
     * unbounded state across batches. The model (merge table) rides a
     * broadcast; works unchanged on a batch frame (the spec's equality
-    * harness runs it both ways). */
+    * harness runs it both ways). In every [[BpeMode]] it is the live
+    * twin of the batch scaled apply in that mode: the mode splits the
+    * words ([[BpeMode.streamWords]]) and sets the greedy encoder's
+    * marker, nothing else changes. */
   def encodeStream(docs: DataFrame,
-      merges: Seq[(String, String)], eow: Boolean = false,
-      byteLevel: Boolean = false): DataFrame = {
+      merges: Seq[(String, String)], mode: BpeMode): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    require(!(eow && byteLevel),
-      "eow and byteLevel are distinct tokenizer modes — pick one")
     val bc = spark.sparkContext.broadcast(merges.toArray)
-    // END-OF-WORD-MARKER mode (r13): the live twin of the marker-mode
-    // scaled apply — the marker rides the greedy encoder's probe
-    // (bpeGreedyEncode's eowMarker param), nothing else changes.
-    val marker = if (eow) graft.ops.TermStats.EowMarker else ""
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { it =>
-        val fused = bc.value.map { case (a, b) => (a, b, a + b) }
-        val maxSymLen = fused.foldLeft(0)((m, f) =>
-          math.max(m, f._3.length))
+        val enc = TermStats.greedyEncoder(bc.value, mode)
         val memo = new java.util.HashMap[String, String]()
         it.flatMap { case (id, text) =>
-          val words = streamWords(text, byteLevel)
+          val words = mode.streamWords(text)
           // Empty/whitespace-only docs are DROPPED, matching the batch
           // twin exactly: bpeApplyScaled's inner join + groupBy over
           // the exploded token stream never produces a row for a doc
@@ -493,8 +488,7 @@ object Streams {
             val encs = words.map { w =>
               var e = memo.get(w)
               if (e == null) {
-                e = graft.ops.TermStats.bpeGreedyEncode(w, fused,
-                  maxSymLen, marker)
+                e = enc(w)
                 memo.put(w, e)
               }
               e
@@ -506,23 +500,6 @@ object Streams {
         }
       }
       .toDF("doc_id", "n_tokens", "n_symbols", "syms")
-  }
-
-  /** The stream encoders' word stream. Char/eow modes: a space split
-    * (their documented corpus convention). BYTE-LEVEL mode (r15):
-    * GPT-2-form regex PRE-TOKENS ([[graft.ops.TermStats.PreTokPattern]]
-    * via the compiled local twin) remapped to byte-chars — leading
-    * spaces ride inside the pre-tokens and whitespace runs are tokens
-    * of their own, exactly the batch `byteDocs` convention, so the
-    * stream twins equal the batch keys row-for-row on ARBITRARY text.
-    * The memo upstream keys on the REMAPPED pre-token: space-prefixed
-    * and bare occurrences encode differently and are distinct entries,
-    * as in the batch distinct-vocabulary encode. */
-  private def streamWords(text: String,
-      byteLevel: Boolean): Array[String] = {
-    if (!byteLevel) text.split(" ").filter(_.nonEmpty)
-    else graft.ops.TermStats.preTokensLocal(text)
-      .map(graft.ops.TermStats.toByteCharsLocal)
   }
 
   /** Carry state of the STREAMING packer: the next sequence id to
@@ -645,43 +622,34 @@ object Streams {
     * stream ≡ batch [[graft.ops.TermStats.inferencePrep]] row-for-row
     * across micro-batches. `shards` passes through to [[packStream]]:
     * shards = 1 reproduces the batch packer's single global stream;
-    * N > 1 runs N parallel packers with shard-local sequence ids. */
+    * N > 1 runs N parallel packers with shard-local sequence ids. In
+    * every [[BpeMode]] it is the live twin of the batch
+    * [[graft.ops.TermStats.inferencePrepUnk]] in that mode (with
+    * `unkFaithful`): the pack layer is id-agnostic, so only the encode
+    * leg follows the mode — and against byte mode's CLOSED vocabulary
+    * UNKs cannot occur by construction. */
   def inferenceStream(docs: DataFrame, merges: Seq[(String, String)],
-      vocab: Map[String, Long], window: Int = 64,
-      shards: Int = 1, unkFaithful: Boolean = false,
-      eow: Boolean = false, byteLevel: Boolean = false): DataFrame = {
+      vocab: Map[String, Long], mode: BpeMode, window: Int = 64,
+      shards: Int = 1, unkFaithful: Boolean = false): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    require(!(eow && byteLevel),
-      "eow and byteLevel are distinct tokenizer modes — pick one")
     val bcM = spark.sparkContext.broadcast(merges.toArray)
     val bcV = spark.sparkContext.broadcast(vocab)
-    // END-OF-WORD-MARKER mode (r13): marker-mode encode against the
-    // eow vocabulary — the live twin of inferencePrepUnk(eow = true);
-    // the pack layer is id-agnostic, so only the encode leg changes.
-    // BYTE-LEVEL mode (r14): byte-char remap + Ġ prefixes before the
-    // greedy encode, against the CLOSED byte vocabulary — the live
-    // twin of inferencePrepByte; UNKs cannot occur by construction.
-    val marker = if (eow) graft.ops.TermStats.EowMarker else ""
     val ids = docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { it =>
-        val fused = bcM.value.map { case (a, b) => (a, b, a + b) }
-        val maxSymLen = fused.foldLeft(0)((m, f) =>
-          math.max(m, f._3.length))
+        val enc = TermStats.greedyEncoder(bcM.value, mode)
         val memo = new java.util.HashMap[String, Array[Long]]()
         val v = bcV.value
         it.flatMap { case (id, text) =>
           // the packStream flush marker passes through untouched
           if (id < 0L) Some((id, Seq.empty[Long]))
           else {
-            val words = streamWords(text, byteLevel)
+            val words = mode.streamWords(text)
             if (words.isEmpty) None
             else Some((id, words.flatMap { w =>
               var e = memo.get(w)
               if (e == null) {
-                e = graft.ops.TermStats
-                  .bpeGreedyEncode(w, fused, maxSymLen, marker)
-                  .split(" ").map(s => v.getOrElse(s, 0L))
+                e = enc(w).split(" ").map(s => v.getOrElse(s, 0L))
                 memo.put(w, e)
               }
               e

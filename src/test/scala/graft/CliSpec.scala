@@ -158,7 +158,11 @@ class CliSpec extends AnyFunSuite {
     Seq((0L, "s1", "alpha", 5L), (3L, "s1", "beta", 4L), (6L, "s2", "gamma", 5L))
       .toDF("doc_id", "source", "text", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rep = Pipeline.run(spark, dir).head()
+    // upper bound = the count measured when it was set: a change that
+    // adds an action back to the flagship pipeline fails here
+    val (rep, jobs) = JobCount.of(spark)(Pipeline.run(spark, dir).head())
+    info(s"flagship pipeline: ${jobs.mkString(", ")}")
+    assert(jobs.size <= 17, jobs)
     assert(rep.getLong(0) == 3)     // total
     assert(rep.getLong(1) == 3)     // uploaded
     assert(rep.getDouble(2) == 100.0)

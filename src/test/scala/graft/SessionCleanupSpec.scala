@@ -41,4 +41,24 @@ class SessionCleanupSpec extends AnyFunSuite {
     assert(after == before)
     assert(graft.ops.Manifest.fromDocuments(spark, TestSpark.sf0001).count() == before)
   }
+
+  test("an artifact build that throws leaves no temp dir behind once " +
+      "the registry drains") {
+    def residue(): Set[String] =
+      new java.io.File(System.getProperty("java.io.tmpdir")).list()
+        .filter(n => n.startsWith("graft-tokenizer") ||
+          n.startsWith("graft-ann")).toSet
+    val before = residue()
+    val missing = java.nio.file.Files.createTempDirectory("graft-no-sf")
+      .resolve("absent").toString
+    // each key's artifact memo creates its temp dir first, then the
+    // build reads the (missing) corpus and throws
+    for (key <- Seq("tokenize_bpe_ids_unk", "sim_ann_index_persist")) {
+      intercept[Exception](SparkEntry.queries(key)(spark, missing))
+    }
+    SessionCleanup.drain(spark.sparkContext)
+    assert(residue().diff(before).isEmpty, residue().diff(before))
+    SessionCleanup.deleteRecursively(
+      java.nio.file.Paths.get(missing).getParent.toString)
+  }
 }

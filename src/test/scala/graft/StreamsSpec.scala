@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.streaming.Streams
 import graft.ops.EventWindows
+import graft.ops.TermStats.BpeMode
 import graft.model.Tables
 import java.nio.file.Files
 
@@ -33,7 +34,8 @@ class StreamsSpec extends AnyFunSuite {
     val merges = graft.ops.TermStats.bpeLearnIter(base, 10)
       .map { case (a, b, _) => (a, b) }
     // the batch truth: the gated scaled-encode key's machinery
-    val want = graft.ops.TermStats.bpeApplyScaled(docs, merges).collect()
+    val want = graft.ops.TermStats.bpeApplyScaled(docs, merges, BpeMode.Char)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getString(3))).toSeq
     assert(!want.exists(r => r._1 == 900001L || r._1 == 900002L),
@@ -45,7 +47,7 @@ class StreamsSpec extends AnyFunSuite {
     val (b1, b2) = (h1 :+ (900001L, ""), h2 :+ (900002L, "   "))
     val mem = MemoryStream[(Long, String)]
     val q = Streams.encodeStream(
-        mem.toDF().toDF("doc_id", "text"), merges)
+        mem.toDF().toDF("doc_id", "text"), merges, BpeMode.Char)
       .writeStream.outputMode(OutputMode.Append()).format("memory")
       .queryName("encode_stream_out").start()
     try {
@@ -58,7 +60,7 @@ class StreamsSpec extends AnyFunSuite {
     assert(got == want)
     // and the same function over the BATCH frame agrees too (one code
     // path, two execution modes)
-    val gotBatch = Streams.encodeStream(docs, merges).collect()
+    val gotBatch = Streams.encodeStream(docs, merges, BpeMode.Char).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getString(3))).toSeq.sortBy(_._1)
     assert(gotBatch == want)
@@ -223,7 +225,7 @@ class StreamsSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, TestSpark.sf0001)
     val pairs = graft.ops.TermStats.bpeLearnIter(docs, 10)
       .map { case (a, b, _) => (a, b) }
-    val vocabDf = graft.ops.TermStats.bpeVocab(docs, pairs)
+    val vocabDf = graft.ops.TermStats.bpeVocab(docs, pairs, BpeMode.Char)
       .select("sym", "id")
     def arrs(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getSeq[Long](3),
@@ -246,7 +248,7 @@ class StreamsSpec extends AnyFunSuite {
     val (c2, c3) = rest.splitAt(third)
     val mem = MemoryStream[(Long, String)]
     val q = Streams.inferenceStream(
-        mem.toDF().toDF("doc_id", "text"), pairs, vocab)
+        mem.toDF().toDF("doc_id", "text"), pairs, vocab, BpeMode.Char)
       .writeStream.outputMode(OutputMode.Append()).format("memory")
       .queryName("inference_stream_out").start()
     try {
@@ -266,11 +268,12 @@ class StreamsSpec extends AnyFunSuite {
     // reserved-UNK layout equals batch inferencePrepUnk row-for-row —
     // no in-window zeros, UNKs on id 3, UNK targets carried in labels
     // but masked out
-    val wantU = graft.ops.TermStats.inferencePrepUnk(docs, pairs, vocabDf)
+    val wantU = graft.ops.TermStats.inferencePrepUnk(docs, pairs, vocabDf,
+        BpeMode.Char, graft.ops.TermStats.unkSuffix)
       .collect().map(arrs).toSeq
     val memU = MemoryStream[(Long, String)]
     val qU = Streams.inferenceStream(
-        memU.toDF().toDF("doc_id", "text"), pairs, vocab,
+        memU.toDF().toDF("doc_id", "text"), pairs, vocab, BpeMode.Char,
         unkFaithful = true)
       .writeStream.outputMode(OutputMode.Append()).format("memory")
       .queryName("inference_unk_out").start()
@@ -378,7 +381,7 @@ class StreamsSpec extends AnyFunSuite {
       .map { case (a, b, _) => (a, b) }
     // encode twin: stream ≡ the batch marker-mode scaled apply
     val wantEnc = graft.ops.TermStats
-      .bpeApplyScaled(docs, pairs, eow = true)
+      .bpeApplyScaled(docs, pairs, BpeMode.Eow)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getString(3))).toSeq
     val rows = docs.select("doc_id", "text").as[(Long, String)]
@@ -386,7 +389,7 @@ class StreamsSpec extends AnyFunSuite {
     val (h1, h2) = rows.splitAt(rows.length / 2)
     val mem = MemoryStream[(Long, String)]
     val q = Streams.encodeStream(
-        mem.toDF().toDF("doc_id", "text"), pairs, eow = true)
+        mem.toDF().toDF("doc_id", "text"), pairs, BpeMode.Eow)
       .writeStream.outputMode(OutputMode.Append()).format("memory")
       .queryName("encode_eow_out").start()
     try {
@@ -404,14 +407,15 @@ class StreamsSpec extends AnyFunSuite {
     }
     // inference twin: stream(eow, unkFaithful) ≡ batch
     // inferencePrepUnk(eow) on the enriched held split
-    val vocabDf = graft.ops.TermStats.bpeVocab(docs, pairs, eow = true)
+    val vocabDf = graft.ops.TermStats.bpeVocab(docs, pairs, BpeMode.Eow)
       .select("sym", "id")
     def arrs(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getSeq[Long](3),
         r.getSeq[Long](4), r.getSeq[Long](5), r.getSeq[Long](6),
         r.getSeq[Long](7))
     val wantU = graft.ops.TermStats
-      .inferencePrepUnk(docs, pairs, vocabDf, eow = true)
+      .inferencePrepUnk(docs, pairs, vocabDf, BpeMode.Eow,
+        graft.ops.TermStats.unkSuffix)
       .collect().map(arrs).toSeq
     val vocab = vocabDf.collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -422,8 +426,8 @@ class StreamsSpec extends AnyFunSuite {
     val (c1, c2) = held.splitAt(held.length / 2)
     val memU = MemoryStream[(Long, String)]
     val qU = Streams.inferenceStream(
-        memU.toDF().toDF("doc_id", "text"), pairs, vocab,
-        unkFaithful = true, eow = true)
+        memU.toDF().toDF("doc_id", "text"), pairs, vocab, BpeMode.Eow,
+        unkFaithful = true)
       .writeStream.outputMode(OutputMode.Append()).format("memory")
       .queryName("inference_eow_out").start()
     try {
@@ -444,11 +448,11 @@ class StreamsSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docs = Tables.documents(spark, TestSpark.sf0001)
-    val bdocs = graft.ops.TermStats.byteDocs(docs)
-    val pairs = graft.ops.TermStats.bpeLearnIter(bdocs, 10)
+    val pairs = graft.ops.TermStats
+      .bpeLearnIter(graft.ops.TermStats.byteDocs(docs), 10)
       .map { case (a, b, _) => (a, b) }
     // encode twin: the STREAM takes raw text and does the remap itself
-    val wantEnc = graft.ops.TermStats.bpeApplyScaled(bdocs, pairs)
+    val wantEnc = graft.ops.TermStats.bpeApplyScaled(docs, pairs, BpeMode.Byte)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getString(3))).toSeq
     val rows = docs.select("doc_id", "text").as[(Long, String)]
@@ -456,7 +460,7 @@ class StreamsSpec extends AnyFunSuite {
     val (h1, h2) = rows.splitAt(rows.length / 2)
     val mem = MemoryStream[(Long, String)]
     val q = Streams.encodeStream(
-        mem.toDF().toDF("doc_id", "text"), pairs, byteLevel = true)
+        mem.toDF().toDF("doc_id", "text"), pairs, BpeMode.Byte)
       .writeStream.outputMode(OutputMode.Append()).format("memory")
       .queryName("encode_byte_out").start()
     try {
@@ -473,16 +477,17 @@ class StreamsSpec extends AnyFunSuite {
         .forall(c => c >= 0x100 && c <= 0x1ff), syms.take(40))
     }
     // inference twin: stream(byte, unkFaithful) ≡ batch
-    // inferencePrepByte on the enriched held split — and the closed
+    // inferencePrepUnk(Byte) on the enriched held split — and the closed
     // vocabulary means the reserved UNK id (3) never appears
-    val vocabDf = graft.ops.TermStats.bpeVocabByte(docs, pairs)
+    val vocabDf = graft.ops.TermStats.bpeVocab(docs, pairs, BpeMode.Byte)
       .select("sym", "id")
     def arrs(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getSeq[Long](3),
         r.getSeq[Long](4), r.getSeq[Long](5), r.getSeq[Long](6),
         r.getSeq[Long](7))
     val wantU = graft.ops.TermStats
-      .inferencePrepByte(docs, pairs, vocabDf)
+      .inferencePrepUnk(docs, pairs, vocabDf, BpeMode.Byte,
+        graft.ops.TermStats.byteSuffix)
       .collect().map(arrs).toSeq
     val vocab = vocabDf.collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -496,8 +501,8 @@ class StreamsSpec extends AnyFunSuite {
     val (c1, c2) = held.splitAt(held.length / 2)
     val memU = MemoryStream[(Long, String)]
     val qU = Streams.inferenceStream(
-        memU.toDF().toDF("doc_id", "text"), pairs, vocab,
-        unkFaithful = true, byteLevel = true)
+        memU.toDF().toDF("doc_id", "text"), pairs, vocab, BpeMode.Byte,
+        unkFaithful = true)
       .writeStream.outputMode(OutputMode.Append()).format("memory")
       .queryName("inference_byte_out").start()
     try {

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ops.TermStats
+import graft.ops.TermStats.BpeMode
 import graft.model.Tables
 
 class TermStatsSpec extends AnyFunSuite {
@@ -211,7 +212,7 @@ class TermStatsSpec extends AnyFunSuite {
     for (r <- 0 until 4) {
       val prefix = learned.take(r).map { case (a, b, _) => (a, b) }
       val syms = split(
-        TermStats.bpeEncodePairsExpr(col("word"), prefix), " ")
+        TermStats.bpeEncodePairsExpr(col("word"), prefix, BpeMode.Char), " ")
       val top = freq.select(col("cnt"), syms.as("s"))
         .filter(size(col("s")) >= 2)
         .select(col("cnt"), explode(transform(
@@ -231,7 +232,7 @@ class TermStatsSpec extends AnyFunSuite {
     val vocab = docs.select(explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0).distinct()
     assert(vocab.filter(regexp_replace(
-      TermStats.bpeEncodePairsExpr(col("word"), full), " ", "")
+      TermStats.bpeEncodePairsExpr(col("word"), full, BpeMode.Char), " ", "")
         =!= col("word")).count() == 0L)
   }
 
@@ -251,10 +252,10 @@ class TermStatsSpec extends AnyFunSuite {
     assert(TermStats.bpeLearnAuto(docs, 10) == seqM)
     // scaled apply == expression-chain apply on the learned table
     val pairs = seqM.map { case (a, b, _) => (a, b) }
-    val want = TermStats.bpeApplyPairs(docs, pairs).collect()
+    val want = TermStats.bpeApplyPairs(docs, pairs, BpeMode.Char).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
       .toSeq
-    val got = TermStats.bpeApplyScaled(docs, pairs).collect()
+    val got = TermStats.bpeApplyScaled(docs, pairs, BpeMode.Char).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
       .toSeq
     assert(got == want)
@@ -263,7 +264,8 @@ class TermStatsSpec extends AnyFunSuite {
     // pair whole) — a code-UNIT split would emit 4 symbols here
     val emoji = "a😀b"
     val viaExpr = Seq(Tuple1(emoji)).toDF("word")
-      .select(TermStats.bpeEncodePairsExpr(col("word"), Seq.empty).as("e"))
+      .select(TermStats.bpeEncodePairsExpr(col("word"), Seq.empty,
+        BpeMode.Char).as("e"))
       .collect().head.getString(0)
     assert(viaExpr.split(" ").length == 3)
     assert(TermStats.bpeGreedyEncode(emoji, Array.empty, 0) == viaExpr)
@@ -276,7 +278,8 @@ class TermStatsSpec extends AnyFunSuite {
     val pairs = TermStats.bpeLearnIter(docs, 10)
       .map { case (a, b, _) => (a, b) }
     // the frozen vocabulary half, exactly as the artifact persists it
-    val vocab = TermStats.bpeVocab(docs, pairs).select("sym", "id")
+    val vocab = TermStats.bpeVocab(docs, pairs, BpeMode.Char)
+      .select("sym", "id")
     val out = TermStats.bpeIdsUnk(docs, pairs, vocab).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
     assert(out.nonEmpty && out.forall(_._1 % 7 == 0))
@@ -303,13 +306,15 @@ class TermStatsSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, TestSpark.sf0001)
     val pairs = TermStats.bpeLearnIter(docs, 10)
       .map { case (a, b, _) => (a, b) }
-    val vocabDf = TermStats.bpeVocab(docs, pairs).select("sym", "id")
+    val vocabDf = TermStats.bpeVocab(docs, pairs, BpeMode.Char)
+      .select("sym", "id")
     val vocabSet = vocabDf.collect().map(_.getString(0)).toSet
     val src = docs.filter(col("doc_id") % 7 === 0)
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).toMap
     // identity: in-vocab ids decode back to the source text verbatim
-    val dec = TermStats.bpeDecode(docs, pairs, vocabDf).collect()
+    val dec = TermStats.bpeDecode(docs, pairs, vocabDf, BpeMode.Char, "")
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     assert(dec.nonEmpty && dec.map(_._1).toSet == src.keySet)
     dec.foreach { case (id, nUnk, text) =>
@@ -327,8 +332,8 @@ class TermStatsSpec extends AnyFunSuite {
     }
     val unkCounts = TermStats.bpeIdsUnk(docs, pairs, vocabDf).collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val decU = TermStats.bpeDecode(docs, pairs, vocabDf,
-        suffix = TermStats.unkSuffix).collect()
+    val decU = TermStats.bpeDecode(docs, pairs, vocabDf, BpeMode.Char,
+        TermStats.unkSuffix).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     assert(decU.nonEmpty)
     decU.foreach { case (id, nUnk, text) =>
@@ -367,7 +372,8 @@ class TermStatsSpec extends AnyFunSuite {
     val enc = docs.select(explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0).distinct().limit(200)
       .select(col("word"),
-        TermStats.bpeEncodePairsEowExpr(col("word"), pairs).as("enc"))
+        TermStats.bpeEncodePairsExpr(col("word"), pairs, BpeMode.Eow)
+          .as("enc"))
       .collect().map(r => (r.getString(0), r.getString(1)))
     assert(enc.nonEmpty)
     enc.foreach { case (w, e) =>
@@ -384,12 +390,13 @@ class TermStatsSpec extends AnyFunSuite {
         eowMarker = TermStats.EowMarker) == e, w)
     }
     // decode with IN-BAND boundaries is the exact text, spaces included
-    val vocabDf = TermStats.bpeVocab(docs, pairs, eow = true)
+    val vocabDf = TermStats.bpeVocab(docs, pairs, BpeMode.Eow)
       .select("sym", "id")
     val src = docs.filter(col("doc_id") % 7 === 0)
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).toMap
-    val dec = TermStats.bpeDecodeEow(docs, pairs, vocabDf).collect()
+    val dec = TermStats.bpeDecode(docs, pairs, vocabDf, BpeMode.Eow, "")
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     assert(dec.nonEmpty && dec.length == src.size)
     dec.foreach { case (id, nUnk, text) =>
@@ -398,16 +405,16 @@ class TermStatsSpec extends AnyFunSuite {
     }
     // ...and through the packed tensors: the full circle closes on the
     // exact source text
-    val rt = TermStats.decodeRoundtripEow(docs, pairs, vocabDf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+    val rt = TermStats.decodeRoundtrip(docs, pairs, vocabDf, BpeMode.Eow, "")
+      .collect().map(r => (r.getLong(0), r.getLong(2), r.getString(3)))
     assert(rt.map(_._3).toSeq == src.toSeq.sortBy(_._1).map(_._2))
     assert(rt.forall(_._2 == 0L))
     // enriched batch: OOV symbols surface as U+FFFD (the OOV word's
     // boundary is genuinely unknowable — its marker rides the lost
     // symbol), the known prefix survives intact, and every enriched
     // doc counts at least one UNK
-    val decU = TermStats.bpeDecodeEow(docs, pairs, vocabDf,
-      suffix = TermStats.unkSuffix).collect()
+    val decU = TermStats.bpeDecode(docs, pairs, vocabDf, BpeMode.Eow,
+      TermStats.unkSuffix).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     assert(decU.nonEmpty && decU.forall(_._2 >= 1L))
     decU.foreach { case (id, _, text) =>
@@ -443,7 +450,8 @@ class TermStatsSpec extends AnyFunSuite {
     val enc = bdocs.select(explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0).distinct().limit(200)
       .select(col("word"),
-        TermStats.bpeEncodePairsExpr(col("word"), pairs).as("enc"))
+        TermStats.bpeEncodePairsExpr(col("word"), pairs, BpeMode.Byte)
+          .as("enc"))
       .collect().map(r => (r.getString(0), r.getString(1)))
     assert(enc.nonEmpty)
     val fused = pairs.map { case (a, b) => (a, b, a + b) }.toArray
@@ -454,7 +462,7 @@ class TermStatsSpec extends AnyFunSuite {
     }
     // the CLOSED vocabulary: exactly 256 base byte-chars plus one row
     // per distinct fused symbol, and every emitted symbol is a member
-    val vocab = TermStats.bpeVocabByte(docs, pairs)
+    val vocab = TermStats.bpeVocab(docs, pairs, BpeMode.Byte)
     val vrows = vocab.collect().map(r =>
       (r.getLong(0), r.getString(1), r.getLong(2)))
     val fusedSet = pairs.map { case (a, b) => a + b }.distinct
@@ -476,7 +484,8 @@ class TermStatsSpec extends AnyFunSuite {
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1) + TermStats.byteSuffix))
       .toMap
-    val dec = TermStats.bpeDecodeByte(docs, pairs, vocabDf).collect()
+    val dec = TermStats.bpeDecode(docs, pairs, vocabDf, BpeMode.Byte,
+      TermStats.byteSuffix).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     assert(dec.nonEmpty && dec.length == src.size)
     dec.foreach { case (id, nUnk, text) =>
@@ -484,8 +493,9 @@ class TermStatsSpec extends AnyFunSuite {
       assert(text == src(id), s"doc $id")
     }
     // ...and the full circle through the packed tensors
-    val rt = TermStats.decodeRoundtripByte(docs, pairs, vocabDf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+    val rt = TermStats.decodeRoundtrip(docs, pairs, vocabDf, BpeMode.Byte,
+        TermStats.byteSuffix)
+      .collect().map(r => (r.getLong(0), r.getLong(2), r.getString(3)))
     assert(rt.map(_._3).toSeq == src.toSeq.sortBy(_._1).map(_._2))
     assert(rt.forall(_._2 == 0L))
   }
@@ -517,14 +527,15 @@ class TermStatsSpec extends AnyFunSuite {
     val merges = TermStats.bpeLearnIter(TermStats.byteDocs(train), 10)
       .map { case (a, b, _) => (a, b) }
     assert(merges.nonEmpty)
-    val vocabDf = TermStats.bpeVocabByte(train, merges).select("sym", "id")
+    val vocabDf = TermStats.bpeVocab(train, merges, BpeMode.Byte)
+      .select("sym", "id")
     // suffix = "" — the wild doc is enrichment enough
-    val dec = TermStats.bpeDecodeByte(docs, merges, vocabDf, suffix = "")
+    val dec = TermStats.bpeDecode(docs, merges, vocabDf, BpeMode.Byte, "")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     assert(dec.toSeq == Seq((0L, 0L, wild)))
-    val rt = TermStats.decodeRoundtripByte(docs, merges, vocabDf,
-      suffix = "").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+    val rt = TermStats.decodeRoundtrip(docs, merges, vocabDf,
+      BpeMode.Byte, "").collect()
+      .map(r => (r.getLong(0), r.getLong(2), r.getString(3)))
     assert(rt.toSeq == Seq((1L, 0L, wild)))
   }
 
@@ -574,13 +585,14 @@ class TermStatsSpec extends AnyFunSuite {
     val train = docs.filter(col("doc_id") > 0)
     val merges = TermStats.bpeLearnIter(TermStats.byteDocs(train), 10)
       .map { case (a, b, _) => (a, b) }
-    val vocabDf = TermStats.bpeVocabByte(train, merges).select("sym", "id")
-    val dec = TermStats.bpeDecodeByte(docs, merges, vocabDf, suffix = "")
+    val vocabDf = TermStats.bpeVocab(train, merges, BpeMode.Byte)
+      .select("sym", "id")
+    val dec = TermStats.bpeDecode(docs, merges, vocabDf, BpeMode.Byte, "")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     assert(dec.toSeq == Seq((0L, 0L, nasty)))
-    val rt = TermStats.decodeRoundtripByte(docs, merges, vocabDf,
-      suffix = "").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+    val rt = TermStats.decodeRoundtrip(docs, merges, vocabDf,
+      BpeMode.Byte, "").collect()
+      .map(r => (r.getLong(0), r.getLong(2), r.getString(3)))
     assert(rt.toSeq == Seq((1L, 0L, nasty)))
   }
 
@@ -596,23 +608,26 @@ class TermStatsSpec extends AnyFunSuite {
     val train = docs.filter(col("doc_id") > 0)
     val merges = TermStats.bpeLearnIter(TermStats.byteDocs(train), 10)
       .map { case (a, b, _) => (a, b) }
-    val vocabDf = TermStats.bpeVocabByte(train, merges)
+    val vocabDf = TermStats.bpeVocab(train, merges, BpeMode.Byte)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-interchange-spec").toString
     try {
       TermStats.writeTokenizerInterchange(spark, merges,
-        vocabDf.select("sym", "id"), dir)
+        vocabDf.select("sym", "id"), dir, BpeMode.Byte)
       // identity: parsed files == source model, ranks and ids intact
-      assert(TermStats.loadInterchangeMerges(spark, dir) == merges)
+      assert(TermStats.loadInterchangeMerges(spark, dir, BpeMode.Byte)
+        == merges)
       val v0 = vocabDf.select("sym", "id").collect()
         .map(r => (r.getString(0), r.getLong(1))).sortBy(_._2)
-      val v1 = TermStats.loadInterchangeVocab(spark, dir).collect()
+      val v1 = TermStats.loadInterchangeVocab(spark, dir, BpeMode.Byte)
+        .collect()
         .map(r => (r.getString(0), r.getLong(1))).sortBy(_._2)
       assert(v1.toSeq == v0.toSeq)
       // the circle through the external format alone
-      val dec = TermStats.bpeDecodeByte(docs,
-        TermStats.loadInterchangeMerges(spark, dir),
-        TermStats.loadInterchangeVocab(spark, dir), suffix = "")
+      val dec = TermStats.bpeDecode(docs,
+        TermStats.loadInterchangeMerges(spark, dir, BpeMode.Byte),
+        TermStats.loadInterchangeVocab(spark, dir, BpeMode.Byte),
+        BpeMode.Byte, "")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
       assert(dec.toSeq ==
         Seq((0L, 0L, "weird  spacing\tand ø tokens — held out")))
@@ -620,8 +635,9 @@ class TermStatsSpec extends AnyFunSuite {
       // symbols in GPT-2's own bytes_to_unicode image, so a stock
       // external loader can invert every symbol to bytes — printable
       // bytes are themselves ("e" is `e`), the space device is Ġ.
+      // (read identity-mapped: the char mode's spelling is the raw file)
       val rawVocab = TermStats
-        .loadInterchangeVocab(spark, dir, byteMode = false)
+        .loadInterchangeVocab(spark, dir, BpeMode.Char)
         .collect().map(_.getString(0))
       assert(rawVocab.forall(_.forall(TermStats.Gpt2CharToByte.contains)),
         "every exported symbol char must sit in the bytes_to_unicode image")
@@ -645,7 +661,7 @@ class TermStatsSpec extends AnyFunSuite {
     val train = docs.filter(col("doc_id") > 0)
     val merges = TermStats.bpeLearnIter(train, 10, eow = true)
       .map { case (a, b, _) => (a, b) }
-    val vocabDf = TermStats.bpeVocab(train, merges, eow = true)
+    val vocabDf = TermStats.bpeVocab(train, merges, BpeMode.Eow)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-interchange-eow").toString
     try {
@@ -653,25 +669,26 @@ class TermStatsSpec extends AnyFunSuite {
       // CONSTRUCTION (words are space-split before the marker is
       // appended) — and the writer now ASSERTS it at the boundary
       TermStats.writeTokenizerInterchange(spark, merges,
-        vocabDf.select("sym", "id"), dir, byteMode = false)
+        vocabDf.select("sym", "id"), dir, BpeMode.Eow)
       assert(TermStats.loadInterchangeMerges(spark, dir,
-        byteMode = false) == merges)
+        BpeMode.Eow) == merges)
       val v0 = vocabDf.select("sym", "id").collect()
         .map(r => (r.getString(0), r.getLong(1))).sortBy(_._2)
       val v1 = TermStats.loadInterchangeVocab(spark, dir,
-          byteMode = false).collect()
+          BpeMode.Eow).collect()
         .map(r => (r.getString(0), r.getLong(1))).sortBy(_._2)
       assert(v1.toSeq == v0.toSeq)
       assert(v1.exists(_._1.endsWith("</w>")),
         "the marker shape must survive the file pair")
       // the decode circle through the EXTERNAL format equals the
       // in-session artifacts' decode
-      val viaFiles = TermStats.bpeDecodeEow(docs,
-        TermStats.loadInterchangeMerges(spark, dir, byteMode = false),
-        TermStats.loadInterchangeVocab(spark, dir, byteMode = false))
+      val viaFiles = TermStats.bpeDecode(docs,
+        TermStats.loadInterchangeMerges(spark, dir, BpeMode.Eow),
+        TermStats.loadInterchangeVocab(spark, dir, BpeMode.Eow),
+        BpeMode.Eow, "")
         .collect().map(_.toString).toSeq
-      val inSession = TermStats.bpeDecodeEow(docs, merges,
-        vocabDf.select("sym", "id"))
+      val inSession = TermStats.bpeDecode(docs, merges,
+        vocabDf.select("sym", "id"), BpeMode.Eow, "")
         .collect().map(_.toString).toSeq
       assert(viaFiles.nonEmpty && viaFiles == inSession)
       // '#'-initial data lines parse (only the header is skipped)
@@ -681,13 +698,13 @@ class TermStatsSpec extends AnyFunSuite {
         val hashMerges = Seq(("#", "!!"), ("a", "b"))
         TermStats.writeTokenizerInterchange(spark, hashMerges,
           Seq(("#!!", 0L), ("ab", 1L)).toDF("sym", "id"), dir2,
-          byteMode = false)
+          BpeMode.Eow)
         assert(TermStats.loadInterchangeMerges(spark, dir2,
-          byteMode = false) == hashMerges)
+          BpeMode.Eow) == hashMerges)
         // a space inside a symbol would break the line format — loud
         intercept[IllegalArgumentException] {
           TermStats.writeTokenizerInterchange(spark, Seq(("a b", "c")),
-            Seq(("a bc", 0L)).toDF("sym", "id"), dir2, byteMode = false)
+            Seq(("a bc", 0L)).toDF("sym", "id"), dir2, BpeMode.Eow)
         }
         // a merges.txt without the #version header is rejected
         java.nio.file.Files.deleteIfExists(
@@ -696,7 +713,7 @@ class TermStatsSpec extends AnyFunSuite {
           java.nio.file.Paths.get(s"$dir2/merges.txt"),
           "a b\n".getBytes("UTF-8"))
         val e = intercept[IllegalArgumentException] {
-          TermStats.loadInterchangeMerges(spark, dir2, byteMode = false)
+          TermStats.loadInterchangeMerges(spark, dir2, BpeMode.Eow)
         }
         assert(e.getMessage.contains("#version"))
       } finally graft.ops.SessionCleanup.deleteRecursively(dir2)
@@ -713,12 +730,12 @@ class TermStatsSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val merges = TermStats.bpeLearnIter(TermStats.byteDocs(docs), 6)
       .map { case (a, b, _) => (a, b) }
-    val vocabDf = TermStats.bpeVocabByte(docs, merges)
+    val vocabDf = TermStats.bpeVocab(docs, merges, BpeMode.Byte)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-interchange-corrupt").toString
     try {
       TermStats.writeTokenizerInterchange(spark, merges,
-        vocabDf.select("sym", "id"), dir)
+        vocabDf.select("sym", "id"), dir, BpeMode.Byte)
       val enc = java.nio.file.Paths.get(s"$dir/encoder.json")
       val valid = new String(java.nio.file.Files.readAllBytes(enc), "UTF-8")
       def put(content: String): Unit = {
@@ -732,7 +749,7 @@ class TermStatsSpec extends AnyFunSuite {
       def mustFail(content: String, clue: String): Unit = {
         put(content)
         val e = intercept[IllegalArgumentException] {
-          TermStats.loadInterchangeVocab(spark, dir)
+          TermStats.loadInterchangeVocab(spark, dir, BpeMode.Byte)
         }
         assert(e.getMessage.contains("encoder.json malformed"),
           s"$clue: got '${e.getMessage}'")
@@ -752,7 +769,8 @@ class TermStatsSpec extends AnyFunSuite {
       mustFail(t.replaceFirst("""\\u""", """\\x"""), "unsupported escape")
       mustFail("{}", "empty vocabulary object")
       put(valid)
-      assert(TermStats.loadInterchangeVocab(spark, dir).count() ==
+      assert(TermStats.loadInterchangeVocab(spark, dir, BpeMode.Byte)
+        .count() ==
         vocabDf.count())
     } finally graft.ops.SessionCleanup.deleteRecursively(dir)
   }
@@ -763,7 +781,8 @@ class TermStatsSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, TestSpark.sf0001)
     val pairs = TermStats.bpeLearnIter(docs, 10)
       .map { case (a, b, _) => (a, b) }
-    val vocab = TermStats.bpeVocab(docs, pairs).select("sym", "id")
+    val vocab = TermStats.bpeVocab(docs, pairs, BpeMode.Char)
+      .select("sym", "id")
     // the flat reference stream: per-doc UNK-resolved ids in doc
     // order, each doc wrapped in the r11 special-token contract (BOS
     // prepended, EOS appended, vocab ids shifted past the reserved
@@ -797,14 +816,16 @@ class TermStatsSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, TestSpark.sf0001)
     val pairs = TermStats.bpeLearnIter(docs, 10)
       .map { case (a, b, _) => (a, b) }
-    val vocabDf = TermStats.bpeVocab(docs, pairs).select("sym", "id")
+    val vocabDf = TermStats.bpeVocab(docs, pairs, BpeMode.Char)
+      .select("sym", "id")
     // the reference stream: per-doc UNK-resolved raw ids (0 at OOV)
     val flat = TermStats.bpeIdsUnk(docs, pairs, vocabDf).collect()
       .sortBy(_.getLong(0))
       .map(r => (r.getLong(0), r.getString(3).split(" ").map(_.toLong).toSeq))
     val nUnkTotal = flat.map(_._2.count(_ == 0L)).sum
     assert(nUnkTotal >= 1)
-    val seqs = TermStats.inferencePrepUnk(docs, pairs, vocabDf).collect()
+    val seqs = TermStats.inferencePrepUnk(docs, pairs, vocabDf,
+        BpeMode.Char, TermStats.unkSuffix).collect()
       .sortBy(_.getLong(0))
       .map(r => (r.getLong(2), r.getSeq[Long](3), r.getSeq[Long](5),
         r.getSeq[Long](7)))
@@ -837,7 +858,8 @@ class TermStatsSpec extends AnyFunSuite {
     // data (packed without the reserved id) would lose exactly the
     // UNK positions, which is the gap this layout closes
     val unpacked = graft.ops.Sampling.unpackSequences(
-        TermStats.inferencePrepUnk(docs, pairs, vocabDf),
+        TermStats.inferencePrepUnk(docs, pairs, vocabDf, BpeMode.Char,
+          TermStats.unkSuffix),
         unkFaithful = true)
       .collect().map(r => (r.getLong(0),
         r.getString(2).split(" ").map(_.toLong).toSeq))
@@ -1037,7 +1059,8 @@ class TermStatsSpec extends AnyFunSuite {
     val vocab = docs.select(explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0).distinct()
     vocab.select(col("word"),
-        TermStats.bpeEncodePairsExpr(col("word"), m10).as("enc"))
+        TermStats.bpeEncodePairsExpr(col("word"), m10, BpeMode.Char)
+          .as("enc"))
       .collect().foreach(r =>
         assert(refStringEncode(r.getString(0), m10) == r.getString(1),
           r.getString(0)))
@@ -1059,9 +1082,9 @@ class TermStatsSpec extends AnyFunSuite {
     // the full DISTRIBUTED path at 5,000 merges: one mapPartitions node
     // regardless of merge count — completes, deterministic, lossless.
     val m5k = TermStats.syntheticMerges(5000)
-    val rows = TermStats.bpeApplyScaled(docs, m5k).collect()
+    val rows = TermStats.bpeApplyScaled(docs, m5k, BpeMode.Char).collect()
     assert(rows.nonEmpty)
-    val again = TermStats.bpeApplyScaled(docs, m5k).collect()
+    val again = TermStats.bpeApplyScaled(docs, m5k, BpeMode.Char).collect()
     assert(rows.map(_.toString).toSeq == again.map(_.toString).toSeq)
     val docText = docs.collect().map(r =>
       r.getAs[Long]("doc_id") -> r.getAs[String]("text")).toMap
@@ -1141,35 +1164,47 @@ class TermStatsSpec extends AnyFunSuite {
       "from the parquet artifact, and the vocab table covers exactly " +
       "the encoded symbols") {
     val docs = Tables.documents(spark, TestSpark.sf0001)
-    val learned = TermStats.bpeLearnIter(docs, 4)
-    val pairs = learned.map { case (a, b, _) => (a, b) }
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-tok-spec").toString
-    try {
-      TermStats.writeTokenizer(docs, learned, dir)
-      val s2 = spark.newSession()
-      // merges reload in rank order and a fresh session's re-encode
-      // equals the in-session apply row-for-row
-      val loaded = TermStats.loadTokenizerMerges(s2, dir)
-      assert(loaded == pairs)
-      val want = TermStats.bpeApplyPairs(docs, pairs).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getString(3))).toSeq
-      val got = TermStats.bpeApplyPairs(
-          Tables.documents(s2, TestSpark.sf0001), loaded).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getString(3))).toSeq
-      assert(got == want)
-      // the vocab artifact is exactly the encoded symbol set, ids
-      // dense alphabetic, counts = corpus symbol occurrences
-      val vocab = s2.read.parquet(s"$dir/vocab").orderBy("id").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-      assert(vocab.map(_._1).toSeq == (1L to vocab.length).toSeq)
-      assert(vocab.map(_._2).toSeq == vocab.map(_._2).sorted.toSeq)
-      val symCount = want.flatMap(_._4.split(" "))
-        .groupBy(identity).map { case (s, xs) => s -> xs.length.toLong }
-      assert(vocab.map(v => v._2 -> v._3).toMap == symCount)
-    } finally graft.ops.SessionCleanup.deleteRecursively(dir)
+    for (mode <- Seq(BpeMode.Char, BpeMode.Eow, BpeMode.Byte)) {
+      val learned = TermStats.bpeLearnIter(mode.corpus(docs), 4, mode.eow)
+      val pairs = learned.map { case (a, b, _) => (a, b) }
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-tok-spec").toString
+      try {
+        TermStats.writeTokenizer(docs, learned, dir, mode)
+        val s2 = spark.newSession()
+        // merges reload in rank order and a fresh session's re-encode
+        // equals the in-session apply row-for-row
+        val loaded = TermStats.loadTokenizerMerges(s2, dir)
+        assert(loaded == pairs, s"$mode")
+        val want = TermStats.bpeApplyPairs(docs, pairs, mode).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getString(3))).toSeq
+        val got = TermStats.bpeApplyPairs(
+            Tables.documents(s2, TestSpark.sf0001), loaded, mode).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getString(3))).toSeq
+        assert(got == want, s"$mode")
+        // the vocab artifact: ids dense alphabetic, counts = corpus
+        // symbol occurrences; char and eow cover exactly the encoded
+        // symbol set, byte the CLOSED 256 + merges alphabet (members
+        // the corpus never emits count 0)
+        val vocab = s2.read.parquet(s"$dir/vocab").orderBy("id").collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+        assert(vocab.map(_._1).toSeq == (1L to vocab.length).toSeq, s"$mode")
+        assert(vocab.map(_._2).toSeq == vocab.map(_._2).sorted.toSeq,
+          s"$mode")
+        val symCount = want.flatMap(_._4.split(" "))
+          .groupBy(identity).map { case (s, xs) => s -> xs.length.toLong }
+        if (mode == BpeMode.Byte) {
+          val closed = (TermStats.ByteAlphabet.map(_.toString) ++
+            pairs.map { case (a, b) => a + b }).toSet
+          assert(vocab.map(_._2).toSeq == closed.toSeq.sorted)
+          assert(vocab.filter(_._3 > 0L).map(v => v._2 -> v._3).toMap
+            == symCount)
+        } else assert(vocab.map(v => v._2 -> v._3).toMap == symCount,
+          s"$mode")
+      } finally graft.ops.SessionCleanup.deleteRecursively(dir)
+    }
   }
 
   test("tensorPrep packs the BPE symbol stream: fixed-64 arrays, mask " +
