@@ -762,17 +762,15 @@ object Dedup {
     * of which re-ran the banded join + verify + CC loop before this).
     * First computation lands in the bench build pass; DedupSpec pins
     * memo ≡ definitional [[nearDupClusters]]. */
-  private val docClusterMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Double, Int, Int), DataFrame]()
+  private val docClusterMemo =
+    new SessionMemo[(String, Double, Int, Int), DataFrame]
 
   private[graft] def docClusterLabels(s: SparkSession, d: String,
       jacThreshold: Double = 0.5, k: Int = 8, bands: Int = 4): DataFrame =
-    docClusterMemo.computeIfAbsent((s, d, jacThreshold, k, bands),
-      { case (sp, dir, t, kk, b) =>
-        SessionCleanup.onEnd(sp) { docClusterMemo.remove((sp, dir, t, kk, b)) }
-        nearDupClusters(Tables.documents(sp, dir), t, kk, b)
-          .localCheckpoint(true)
-      })
+    docClusterMemo(s, (d, jacThreshold, k, bands)) {
+      nearDupClusters(Tables.documents(s, d), jacThreshold, k, bands)
+        .localCheckpoint(true)
+    }
 
   /** KEEP-BEST dedup: one surviving document per near-dup cluster, chosen
     * by LENGTH (longest copy, ties to the smaller doc_id) instead of the

@@ -159,8 +159,7 @@ object EventWindows {
       .orderBy("click_day")
   }
 
-  private val baseAggMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), String]
+  private val baseAggMemo = new SessionMemo[String, String]
 
   /** The MATERIALIZED daily-aggregate base table: per-(day, event_type)
     * count and RAW (unrounded) value sum over every day but the last,
@@ -170,12 +169,7 @@ object EventWindows {
     * rounding happens only at the FINAL merge (round-then-add would
     * drift from a direct recompute). */
   private def dailyAggBase(s: SparkSession, d: String): String =
-    baseAggMemo.getOrElseUpdate((s, d), {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-inc").toString
-      SessionCleanup.onEnd(s) {
-        baseAggMemo.remove((s, d))
-        SessionCleanup.deleteRecursively(tmp)
-      }
+    baseAggMemo.inTempDir(s, d, "graft-inc") { tmp =>
       val ev = Tables.events(s, d)
       val maxDay = ev.agg(max(to_date(col("ts")))).head().getDate(0)
       ev.filter(to_date(col("ts")) < lit(maxDay))
@@ -183,7 +177,7 @@ object EventWindows {
         .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"))
         .write.mode("overwrite").parquet(tmp)
       tmp
-    })
+    }
 
   /** INCREMENTAL AGGREGATE MAINTENANCE — the warehouse pattern that
     * keeps a 100 TB rollup fresh without re-touching history: count and

@@ -439,37 +439,26 @@ object Graphs {
 
   // ---------------------------------------------------------------------
 
-  private val resumeMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), String]
+  private val resumeMemo = new SessionMemo[String, String]
 
   /** Rank snapshot after 5 rounds, written once per (session, sfDir). */
   private def ranksAfter5(s: SparkSession, d: String): String =
-    resumeMemo.getOrElseUpdate((s, d), {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-pr5").toString
-      SessionCleanup.onEnd(s) {
-        resumeMemo.remove((s, d))
-        SessionCleanup.deleteRecursively(tmp)
-      }
+    resumeMemo.inTempDir(s, d, "graft-pr5") { tmp =>
       pagerankFrom(Tables.documents(s, d), 5, init = None)
         .select(col("doc_id"), col("rank_fp").as("r"))
         .write.mode("overwrite").parquet(tmp)
       tmp
-    })
+    }
 
   /** The personalized twin's 5-round snapshot (same exact-integer
     * restartability theorem — the teleport form changes nothing). */
   private def pprAfter5(s: SparkSession, d: String): String =
-    resumeMemo.getOrElseUpdate((s, d + "#ppr"), {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-ppr5").toString
-      SessionCleanup.onEnd(s) {
-        resumeMemo.remove((s, d + "#ppr"))
-        SessionCleanup.deleteRecursively(tmp)
-      }
+    resumeMemo.inTempDir(s, d + "#ppr", "graft-ppr5") { tmp =>
       pagerankPersonalized(Tables.documents(s, d), iters = 5)
         .select(col("doc_id"), col("rank_fp").as("r"))
         .write.mode("overwrite").parquet(tmp)
       tmp
-    })
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // 10 fixed-point iterations; exact BIGINT ranks (1e-12 units).

@@ -30,16 +30,15 @@ import graft.model.Tables
   */
 object Manifest {
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val memo = new SessionMemo[String, DataFrame]
 
   /** Deterministic manifest derived from `documents`: the Spark equivalent
     * of `prepare_upload` + `create_table` (id assignment = AUTO_INCREMENT,
     * olrcdb.py:40, dense ids in path order — SURVEY §2.1
     * `manifest_create`). */
   def fromDocuments(spark: SparkSession, dir: String): DataFrame =
-    memo.computeIfAbsent((spark, dir), { case (s, d) =>
-      val docs = Tables.documents(s, d)
+    memo(spark, dir) {
+      val docs = Tables.documents(spark, dir)
       val paths = docs.select(
         concat(col("source"), lit("/doc_"), col("doc_id"), lit(".txt")).as("path"),
         (col("doc_id") % 3 === 0).as("uploaded"))
@@ -47,11 +46,9 @@ object Manifest {
       // assignIdsByRange and the intermediate sorted RDD released there —
       // the manifest is stored once, not twice (unpersist of the cached
       // frame is registered there too).
-      val withIds = Scale.assignIdsByRange(paths, "path", cacheResult = true)
+      Scale.assignIdsByRange(paths, "path", cacheResult = true)
         .select(col("id"), col("path"), col("uploaded"))
-      SessionCleanup.onEnd(s) { memo.remove((s, d)) }
-      withIds
-    })
+    }
 
   /** Full scan (`get_all_entries_to_upload`'s SELECT *, bulkupload.py:354-360). */
   def scan(spark: SparkSession, dir: String): DataFrame =

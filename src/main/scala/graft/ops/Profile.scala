@@ -72,24 +72,17 @@ object Profile {
   }
 
   // one partitioned copy per (session, sfDir), cleaned up with the session
-  private val memo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), String]
+  private val memo = new SessionMemo[String, String]
 
   private[graft] def partitionedCopy(s: SparkSession, d: String): String =
-    memo.getOrElseUpdate((s, d), {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-part").toString
-      SessionCleanup.onEnd(s) {
-        memo.remove((s, d))
-        SessionCleanup.deleteRecursively(tmp)
-      }
+    memo.inTempDir(s, d, "graft-part") { tmp =>
       Tables.documents(s, d).write.mode("overwrite")
         .partitionBy("lang").parquet(tmp)
       tmp
-    })
+    }
 
   // one range-sorted copy per (session, sfDir), cleaned with the session
-  private val sortedMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), String]
+  private val sortedMemo = new SessionMemo[String, String]
 
   /** Range-clustered parquet layout: repartitionByRange on the scan key
     * + sortWithinPartitions, so every file owns a DISJOINT n_chars range
@@ -98,18 +91,13 @@ object Profile {
     * [[compactCopy]]). ProfileSpec asserts the per-file ranges really
     * are disjoint; the registered key gates the round trip. */
   private[graft] def sortedCopy(s: SparkSession, d: String): String =
-    sortedMemo.getOrElseUpdate((s, d), {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-sorted").toString
-      SessionCleanup.onEnd(s) {
-        sortedMemo.remove((s, d))
-        SessionCleanup.deleteRecursively(tmp)
-      }
+    sortedMemo.inTempDir(s, d, "graft-sorted") { tmp =>
       Tables.documents(s, d)
         .repartitionByRange(4, col("n_chars"))
         .sortWithinPartitions("n_chars")
         .write.mode("overwrite").parquet(tmp)
       tmp
-    })
+    }
 
   /** 20-bit Morton interleave of two 10-bit values: bit b of x lands at
     * position 2b, bit b of y at 2b+1. Pure shift/mask arithmetic —
@@ -126,8 +114,7 @@ object Profile {
       s"(((($x) >> $b) & 1) << ${2 * b}) | (((($y) >> $b) & 1) << ${2 * b + 1})")
       .mkString(" | ")
 
-  private val zorderMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), String]
+  private val zorderMemo = new SessionMemo[String, String]
 
   /** Z-ORDER (Morton-curve) clustered rewrite of the events table on
     * (user_id, day): interleave the low 10 bits of each dimension into a
@@ -147,12 +134,7 @@ object Profile {
     * 1024², the right granularity for file-level (not row-level)
     * skipping. */
   private[graft] def zorderCopy(s: SparkSession, d: String): String =
-    zorderMemo.getOrElseUpdate((s, d), {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-      SessionCleanup.onEnd(s) {
-        zorderMemo.remove((s, d))
-        SessionCleanup.deleteRecursively(tmp)
-      }
+    zorderMemo.inTempDir(s, d, "graft-zorder") { tmp =>
       val zday = expr("unix_micros(ts) div 86400000000").bitwiseAND(lit(1023L))
       Tables.events(s, d)
         .select(col("event_id"), col("user_id"),
@@ -163,42 +145,30 @@ object Profile {
         .sortWithinPartitions("zkey")
         .write.mode("overwrite").parquet(tmp)
       tmp
-    })
+    }
 
-  private val dppDimMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), String]
+  private val dppDimMemo = new SessionMemo[String, String]
 
   /** Tiny lang→tier dimension written as parquet — the filter side of
     * the dynamic-partition-pruning join. Which langs are 'major' is only
     * discoverable by READING the dim, which is what forces the runtime
     * pruning subquery instead of static predicate pushdown. */
   private[graft] def dppDims(s: SparkSession, d: String): String =
-    dppDimMemo.getOrElseUpdate((s, d), {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-dppdim").toString
-      SessionCleanup.onEnd(s) {
-        dppDimMemo.remove((s, d))
-        SessionCleanup.deleteRecursively(tmp)
-      }
+    dppDimMemo.inTempDir(s, d, "graft-dppdim") { tmp =>
       Tables.documents(s, d).select(col("lang")).distinct()
         .withColumn("tier",
           when(col("lang").isin("en", "zh"), "major").otherwise("minor"))
         .write.mode("overwrite").parquet(tmp)
       tmp
-    })
+    }
 
   // one JSONL copy per (session, sfDir, shards), cleaned up with the
   // session — shards is part of the key so a different shard count never
   // silently reuses an old layout
-  private val jsonlMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String, Int), String]
+  private val jsonlMemo = new SessionMemo[(String, Int), String]
 
   private[graft] def jsonlCopy(s: SparkSession, d: String, shards: Int): String =
-    jsonlMemo.getOrElseUpdate((s, d, shards), {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-jsonl").toString
-      SessionCleanup.onEnd(s) {
-        jsonlMemo.remove((s, d, shards))
-        SessionCleanup.deleteRecursively(tmp)
-      }
+    jsonlMemo.inTempDir(s, (d, shards), "graft-jsonl") { tmp =>
       // range-repartition on the sort key → shards hold contiguous id
       // ranges (the layout a training loader reads sequentially), and
       // the shard count is the explicit dial (at 100 TB: total/512 MB).
@@ -206,12 +176,11 @@ object Profile {
         .repartitionByRange(shards, col("doc_id"))
         .write.mode("overwrite").json(tmp)
       tmp
-    })
+    }
 
   // one compacted copy per (session, sfDir): a deliberately fragmented
   // 64-file write, then the size-targeted compaction rewrite
-  private val compactMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), (String, Int)]
+  private val compactMemo = new SessionMemo[String, (String, Int)]
 
   /** Small-file COMPACTION — the table-maintenance pass every long-lived
     * lake table needs: streaming appends and per-task writes fragment a
@@ -227,12 +196,7 @@ object Profile {
     * reads the compacted table back — compaction must be row-invisible,
     * which is exactly what the oracle checks. */
   private[graft] def compactCopy(s: SparkSession, d: String): (String, Int) =
-    compactMemo.getOrElseUpdate((s, d), {
-      val root = java.nio.file.Files.createTempDirectory("graft-compact").toString
-      SessionCleanup.onEnd(s) {
-        compactMemo.remove((s, d))
-        SessionCleanup.deleteRecursively(root)
-      }
+    compactMemo.inTempDir(s, d, "graft-compact") { root =>
       Tables.documents(s, d).repartition(64)
         .write.mode("overwrite").parquet(s"$root/small")
       val smallBytes = new java.io.File(s"$root/small").listFiles()
@@ -242,7 +206,7 @@ object Profile {
       s.read.parquet(s"$root/small").coalesce(nOut)
         .write.mode("overwrite").parquet(s"$root/compact")
       (root, nOut)
-    })
+    }
 
   /** Per-source distribution-drift score: the two-sample KS statistic
     * of each source's length distribution against the whole corpus —
@@ -383,8 +347,7 @@ object Profile {
   }
 
   // one dynamic-partition-overwrite copy per (session, sfDir)
-  private val overwriteMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), String]
+  private val overwriteMemo = new SessionMemo[String, String]
 
   /** Dynamic partition overwrite — the lakehouse backfill primitive
     * (INSERT OVERWRITE ... PARTITION): rewrite ONLY the partitions
@@ -395,12 +358,7 @@ object Profile {
     * physically identical). At 100 TB this is the difference between
     * rewriting one day and rewriting the table. */
   private[graft] def overwriteCopy(s: SparkSession, d: String): String =
-    overwriteMemo.getOrElseUpdate((s, d), {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-ovw").toString
-      SessionCleanup.onEnd(s) {
-        overwriteMemo.remove((s, d))
-        SessionCleanup.deleteRecursively(tmp)
-      }
+    overwriteMemo.inTempDir(s, d, "graft-ovw") { tmp =>
       val docs = Tables.documents(s, d)
       docs.write.mode("overwrite").partitionBy("lang").parquet(tmp)
       docs.filter(col("lang") === "en")
@@ -409,7 +367,7 @@ object Profile {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("lang").parquet(tmp)
       tmp
-    })
+    }
 
   /** Per-dimension distribution profile of the embedding column —
     * mean / sample-stddev / min / max for each of the 64 components,

@@ -138,8 +138,19 @@ object Scale {
   /** Bucketed tables are written once per (session, sf dir) — the whole
     * point of bucketing is paying the clustered write once and skipping
     * the exchange in every later join. */
-  private val bucketMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String)]()
+  private val bucketMemo = new SessionMemo[String, (String, String)](
+    release = { case (sp, (o, c)) =>
+      // the SQL path can silently no-op mid-shutdown, so also delete the
+      // table directories directly
+      val warehouse = sp.conf.get("spark.sql.warehouse.dir", "")
+        .stripPrefix("file:")
+      Seq(o, c).foreach { t =>
+        try sp.sql(s"DROP TABLE IF EXISTS $t")
+        catch { case _: Throwable => () }
+        if (warehouse.nonEmpty)
+          SessionCleanup.deleteRecursively(s"$warehouse/$t")
+      }
+    })
 
   /** One conf-isolated child session per parent for join_bloom_prune,
     * memoized (ADVICE r8 #4: newSession-per-invocation accumulated a
@@ -147,12 +158,10 @@ object Scale {
     * COPIED from the parent instead of hardcoded, so the child cannot
     * drift silently if the shared session's init changes; the bloom
     * confs themselves stay child-only by construction. */
-  private val bloomSessionMemo = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, SparkSession]()
+  private val bloomSessionMemo = new SessionMemo[Unit, SparkSession]
 
-  private def bloomSession(s0: SparkSession): SparkSession =
-    bloomSessionMemo.computeIfAbsent(s0, { parent =>
-      SessionCleanup.onEnd(parent) { bloomSessionMemo.remove(parent) }
+  private def bloomSession(parent: SparkSession): SparkSession =
+    bloomSessionMemo(parent, ()) {
       val s = parent.newSession()
       Seq("spark.sql.legacy.parquet.nanosAsLong",
         "spark.sql.session.timeZone").foreach { k =>
@@ -163,7 +172,7 @@ object Scale {
         "applicationSideScanSizeThreshold", "0")
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       s
-    })
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Pathologically skewed equi-join through the explicit salting
@@ -190,32 +199,18 @@ object Scale {
     // ScaleSpec asserts the exchange-free plan; here the RESULT is
     // oracle-gated against DuckDB's plain join.
     "join_bucketed_colocated" -> ((s, d) => {
-      val (ot, ct) = bucketMemo.computeIfAbsent((s, d), { case (sp, dir) =>
+      val (ot, ct) = bucketMemo(s, d) {
         val suffix = java.lang.Long.toHexString(
-          java.util.UUID.nameUUIDFromBytes(dir.getBytes("UTF-8"))
+          java.util.UUID.nameUUIDFromBytes(d.getBytes("UTF-8"))
             .getMostSignificantBits & Long.MaxValue)
         val o = s"orders_bkt_$suffix"
         val c = s"customer_bkt_$suffix"
-        writeBucketed(Tables.orders(sp, dir)
+        writeBucketed(Tables.orders(s, d)
           .select(col("o_custkey"), col("o_totalprice")), o, "o_custkey", 8)
-        writeBucketed(Tables.customer(sp, dir)
+        writeBucketed(Tables.customer(s, d)
           .select(col("c_custkey"), col("c_mktsegment")), c, "c_custkey", 8)
-        // capture the table locations NOW: at application end the SQL
-        // path can silently no-op mid-shutdown, so fall back to deleting
-        // the table directories directly.
-        val warehouse = sp.conf.get("spark.sql.warehouse.dir", "")
-          .stripPrefix("file:")
-        SessionCleanup.onEnd(sp) {
-          bucketMemo.remove((sp, dir))
-          Seq(o, c).foreach { t =>
-            try sp.sql(s"DROP TABLE IF EXISTS $t")
-            catch { case _: Throwable => () }
-            if (warehouse.nonEmpty)
-              SessionCleanup.deleteRecursively(s"$warehouse/$t")
-          }
-        }
         (o, c)
-      })
+      }
       s.table(ot).join(s.table(ct), col("o_custkey") === col("c_custkey"))
         .groupBy("c_mktsegment")
         .agg(round(sum(col("o_totalprice")), 2).as("sum_price"),

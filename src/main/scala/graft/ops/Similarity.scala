@@ -1307,24 +1307,14 @@ object Similarity {
   /** Index artifact written once per (session, sf dir) — billed to the
     * bench build pass like every model artifact; the steady-state run
     * pays the honest RELOAD cost (parquet scans of the artifact). */
-  private val indexDirMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val indexDirMemo = new SessionMemo[String, String]
 
   private def persistedIndexDir(s: SparkSession, d: String): String =
-    indexDirMemo.computeIfAbsent((s, d), { case (sp, dir) =>
-      // createTempDirectory (the ranksAfter5 pattern), NOT a
-      // deterministic path: two sessions/JVMs sharing an sf dir must
-      // never write the same artifact concurrently.
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-annindex").toString
-      SessionCleanup.onEnd(sp) {
-        indexDirMemo.remove((sp, dir))
-        SessionCleanup.deleteRecursively(out)
-      }
-      writeIvfPqIndex(Tables.embeddings(sp, dir),
-        trainedCentroids(sp, dir, 16, 0), out)
+    indexDirMemo.inTempDir(s, d, "graft-annindex") { out =>
+      writeIvfPqIndex(Tables.embeddings(s, d),
+        trainedCentroids(s, d, 16, 0), out)
       out
-    })
+    }
 
   /** The APPEND-MAINTAINED index memoized per (session, sf dir) — the
     * gate setup for sim_ann_index_append: the artifact is built from
@@ -1336,23 +1326,16 @@ object Similarity {
     * append must equal rebuild given the same model — FAISS add());
     * SimilaritySpec proves the same identity with a model trained on
     * the base corpus alone, the strict nightly-ingest setup. */
-  private val appendIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val appendIndexMemo = new SessionMemo[String, String]
 
   private def appendedIndexDir(s: SparkSession, d: String): String =
-    appendIndexMemo.computeIfAbsent((s, d), { case (sp, dir) =>
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-annappend").toString
-      SessionCleanup.onEnd(sp) {
-        appendIndexMemo.remove((sp, dir))
-        SessionCleanup.deleteRecursively(out)
-      }
-      val emb = Tables.embeddings(sp, dir)
+    appendIndexMemo.inTempDir(s, d, "graft-annappend") { out =>
+      val emb = Tables.embeddings(s, d)
       writeIvfPqIndex(emb.filter(col("vec_id") % 5 =!= 0),
-        trainedCentroids(sp, dir, 16, 0), out, writeResiduals = false)
-      appendToIvfPqIndex(sp, out, emb.filter(col("vec_id") % 5 === 0))
+        trainedCentroids(s, d, 16, 0), out, writeResiduals = false)
+      appendToIvfPqIndex(s, out, emb.filter(col("vec_id") % 5 === 0))
       out
-    })
+    }
 
   /** The COMPACTED lifecycle artifact for sim_ann_index_compact: base
     * build (no residuals), TWO nightly appends (the held-out split in
@@ -1361,25 +1344,18 @@ object Similarity {
     * from the swapped-in sized file. Model = the full-corpus seeded
     * centroids so the key shares the full-rebuild oracle verbatim
     * (compaction must not change one row). */
-  private val compactIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val compactIndexMemo = new SessionMemo[String, String]
 
   private def compactedIndexDir(s: SparkSession, d: String): String =
-    compactIndexMemo.computeIfAbsent((s, d), { case (sp, dir) =>
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-anncompact").toString
-      SessionCleanup.onEnd(sp) {
-        compactIndexMemo.remove((sp, dir))
-        SessionCleanup.deleteRecursively(out)
-      }
-      val emb = Tables.embeddings(sp, dir)
+    compactIndexMemo.inTempDir(s, d, "graft-anncompact") { out =>
+      val emb = Tables.embeddings(s, d)
       writeIvfPqIndex(emb.filter(col("vec_id") % 5 =!= 0),
-        trainedCentroids(sp, dir, 16, 0), out, writeResiduals = false)
-      appendToIvfPqIndex(sp, out, emb.filter(col("vec_id") % 10 === 0))
-      appendToIvfPqIndex(sp, out, emb.filter(col("vec_id") % 10 === 5))
-      compactIvfPqIndexCodes(sp, out)
+        trainedCentroids(s, d, 16, 0), out, writeResiduals = false)
+      appendToIvfPqIndex(s, out, emb.filter(col("vec_id") % 10 === 0))
+      appendToIvfPqIndex(s, out, emb.filter(col("vec_id") % 10 === 5))
+      compactIvfPqIndexCodes(s, out)
       out
-    })
+    }
 
   /** The REBUILT lifecycle artifact for sim_ann_index_rebuild (r13):
     * the index is first built on the BASE corpus with a model trained
@@ -1391,26 +1367,19 @@ object Similarity {
     * sim_ann_ivfpq oracle VERBATIM: after a rebuild, the index must
     * answer exactly as an index built from scratch on the new corpus
     * with the new model. */
-  private val rebuildIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val rebuildIndexMemo = new SessionMemo[String, String]
 
   private def rebuiltIndexDir(s: SparkSession, d: String): String =
-    rebuildIndexMemo.computeIfAbsent((s, d), { case (sp, dir) =>
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-annrebuild").toString
-      SessionCleanup.onEnd(sp) {
-        rebuildIndexMemo.remove((sp, dir))
-        SessionCleanup.deleteRecursively(out)
-      }
-      val emb = Tables.embeddings(sp, dir)
+    rebuildIndexMemo.inTempDir(s, d, "graft-annrebuild") { out =>
+      val emb = Tables.embeddings(s, d)
       val base = emb.filter(col("vec_id") % 5 =!= 0)
       // the drift starting point: a DIFFERENT model (8 coarse lists,
       // stride-seeded) — rebuild must genuinely retrain, not reuse
       writeIvfPqIndex(base, ivfCentroids(emb, 8, 0), out,
         writeResiduals = false)
-      rebuildIvfPqIndex(sp, out, emb, trainedCentroids(sp, dir, 16, 0))
+      rebuildIvfPqIndex(s, out, emb, trainedCentroids(s, d, 16, 0))
       out
-    })
+    }
 
   /** The TOMBSTONED lifecycle artifact for sim_ann_index_delete: full
     * build (full-corpus seeded model, no residuals), then the
@@ -1422,25 +1391,18 @@ object Similarity {
     * MINUS the deleted split with the model still derived from the
     * FULL corpus — exactly FAISS remove_ids: deletion never retrains
     * the model. */
-  private val deleteIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val deleteIndexMemo = new SessionMemo[String, String]
 
   private[graft] val deletePred: Column = col("vec_id") % 7 === 3
 
   private def deletedIndexDir(s: SparkSession, d: String): String =
-    deleteIndexMemo.computeIfAbsent((s, d), { case (sp, dir) =>
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-anndelete").toString
-      SessionCleanup.onEnd(sp) {
-        deleteIndexMemo.remove((sp, dir))
-        SessionCleanup.deleteRecursively(out)
-      }
-      val emb = Tables.embeddings(sp, dir)
-      writeIvfPqIndex(emb, trainedCentroids(sp, dir, 16, 0), out,
+    deleteIndexMemo.inTempDir(s, d, "graft-anndelete") { out =>
+      val emb = Tables.embeddings(s, d)
+      writeIvfPqIndex(emb, trainedCentroids(s, d, 16, 0), out,
         writeResiduals = false)
-      deleteFromIvfPqIndex(sp, out, emb.filter(deletePred))
+      deleteFromIvfPqIndex(s, out, emb.filter(deletePred))
       out
-    })
+    }
 
   /** Residual codebooks for [[ivfPqResidualTopK]] — the model half of
     * true IVFPQ: codewords are the RESIDUALS (unit vector − its
@@ -1787,30 +1749,28 @@ object Similarity {
     * training is part of the operator but amortized in any real
     * deployment (the model is built once, probed many times) — and the
     * bench reports build vs steady-state separately because of this. */
-  private val centroidMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), Array[Array[Double]]]()
+  private val centroidMemo =
+    new SessionMemo[(String, Int, Int), Array[Array[Double]]]
 
   private def trainedCentroids(s: SparkSession, d: String, nlist: Int,
       iters: Int): Array[Array[Double]] =
-    centroidMemo.computeIfAbsent((s, d, nlist, iters), { case (sp, dir, nl, it) =>
-      SessionCleanup.onEnd(sp) { centroidMemo.remove((sp, dir, nl, it)) }
-      ivfCentroids(Tables.embeddings(sp, dir), nl, it)
-    })
+    centroidMemo(s, (d, nlist, iters)) {
+      ivfCentroids(Tables.embeddings(s, d), nlist, iters)
+    }
 
   /** Residual codebooks memoized per (session, dir, nlist, m) — same
     * model-artifact contract as [[trainedCentroids]]: built once in the
     * bench build pass, reused by every timed run (the r8 ADVICE flagged
     * the un-memoized re-derivation inside the timed region). */
-  private val booksMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), Array[Array[Array[Double]]]]()
+  private val booksMemo =
+    new SessionMemo[(String, Int, Int), Array[Array[Array[Double]]]]
 
   private def trainedResidualBooks(s: SparkSession, d: String, nlist: Int,
       m: Int): Array[Array[Array[Double]]] =
-    booksMemo.computeIfAbsent((s, d, nlist, m), { case (sp, dir, nl, mm) =>
-      SessionCleanup.onEnd(sp) { booksMemo.remove((sp, dir, nl, mm)) }
-      residualCodebooks(Tables.embeddings(sp, dir),
-        trainedCentroids(sp, dir, nl, 0), mm)
-    })
+    booksMemo(s, (d, nlist, m)) {
+      residualCodebooks(Tables.embeddings(s, d),
+        trainedCentroids(s, d, nlist, 0), m)
+    }
 
   /** Embedding-cosine near-dup DROP (north star: "embedding-cosine
     * near-dup") — keep-first dedup over the WHOLE corpus: a vector is
@@ -1889,16 +1849,14 @@ object Similarity {
     * the result, not the iteration. First computation lands in the
     * bench BUILD pass like the IVF-centroid and bucketed-table memos;
     * SimilaritySpec pins memo ≡ definitional [[embeddingClusters]]. */
-  private val clusterMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Double, Int), DataFrame]()
+  private val clusterMemo = new SessionMemo[(String, Double, Int), DataFrame]
 
   private[graft] def clusterLabels(s: SparkSession, d: String,
       threshold: Double = 0.35, blocks: Int = 8): DataFrame =
-    clusterMemo.computeIfAbsent((s, d, threshold, blocks), { case (sp, dir, t, b) =>
-      SessionCleanup.onEnd(sp) { clusterMemo.remove((sp, dir, t, b)) }
-      embeddingClusters(Tables.embeddings(sp, dir), t, b)
+    clusterMemo(s, (d, threshold, blocks)) {
+      embeddingClusters(Tables.embeddings(s, d), threshold, blocks)
         .localCheckpoint(true)
-    })
+    }
 
   /** Symmetric int8 scalar-quantization quality report, per vector:
     * the compression step every billion-vector ANN index runs before

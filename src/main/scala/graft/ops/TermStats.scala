@@ -229,14 +229,10 @@ object TermStats {
     * centroidMemo pattern: the merge table is trained once per corpus
     * (billed to the bench build pass) and every apply/ids run consumes
     * the cached model instead of re-learning it. */
-  private val mergeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), Seq[String]]()
+  private val mergeMemo = new SessionMemo[(String, Int), Seq[String]]
   private def trainedMerges(s: SparkSession, d: String,
       n: Int): Seq[String] =
-    mergeMemo.computeIfAbsent((s, d, n), { case (sp, dir, nn) =>
-      SessionCleanup.onEnd(sp) { mergeMemo.remove((sp, dir, nn)) }
-      bpeMerges(Tables.documents(sp, dir), nn)
-    })
+    mergeMemo(s, (d, n)) { bpeMerges(Tables.documents(s, d), n) }
 
   /** Greedy left-to-right application of a merge list to one word,
     * as a pure codegen'd expression chain (no UDF). The classic BPE
@@ -1062,14 +1058,13 @@ object TermStats {
     * unrolled-recount oracle validates the output directly — the gate
     * is the proof that neither maintenance nor the driver-local loop
     * ever drifts from the recount they replace. */
-  private val iterMergeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, BpeMode), Seq[(String, String, Long)]]()
+  private val iterMergeMemo =
+    new SessionMemo[(String, BpeMode), Seq[(String, String, Long)]]
   private def trainedIterMerges(s: SparkSession, d: String,
       mode: BpeMode): Seq[(String, String, Long)] =
-    iterMergeMemo.computeIfAbsent((s, d, mode), { case (sp, dir, m) =>
-      SessionCleanup.onEnd(sp) { iterMergeMemo.remove((sp, dir, m)) }
-      bpeLearnAuto(m.corpus(Tables.documents(sp, dir)), 10, eow = m.eow)
-    })
+    iterMergeMemo(s, (d, mode)) {
+      bpeLearnAuto(mode.corpus(Tables.documents(s, d)), 10, eow = mode.eow)
+    }
 
   /** Apply the learned BPE merge table to re-encode every document —
     * the missing half of the tokenizer (VERDICT r7 "Next round" #4):
@@ -1685,23 +1680,16 @@ object TermStats {
   /** Tokenizer artifact written once per (session, sf dir, mode) from
     * the memoized model — billed to the build pass; steady state pays
     * the honest reload, and the decode keys consume BOTH model halves
-    * from here. The cleanup registers before the build, so a build
-    * that throws still leaves no temp dir behind. */
-  private val tokenizerDirMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, BpeMode), String]()
+    * from here. */
+  private val tokenizerDirMemo = new SessionMemo[(String, BpeMode), String]
   private def persistedTokenizerDir(s: SparkSession, d: String,
       mode: BpeMode): String =
-    tokenizerDirMemo.computeIfAbsent((s, d, mode), { case (sp, dir, m) =>
-      val out = java.nio.file.Files.createTempDirectory(
-        s"graft-tokenizer-${m.toString.toLowerCase}").toString
-      SessionCleanup.onEnd(sp) {
-        tokenizerDirMemo.remove((sp, dir, m))
-        SessionCleanup.deleteRecursively(out)
-      }
-      writeTokenizer(Tables.documents(sp, dir),
-        trainedIterMerges(sp, dir, m), out, m)
+    tokenizerDirMemo.inTempDir(s, (d, mode),
+        s"graft-tokenizer-${mode.toString.toLowerCase}") { out =>
+      writeTokenizer(Tables.documents(s, d),
+        trainedIterMerges(s, d, mode), out, mode)
       out
-    })
+    }
 
   // ------------------------------------------------------------------
   // TOKENIZER INTERCHANGE (VERDICT r14 "Next round" #5; GPT-2 alphabet
@@ -1932,21 +1920,14 @@ object TermStats {
     * + closed byte vocab → parquet artifact → GPT-2 file pair. The
     * gated keys then LOAD the file pair and must answer identically
     * to the parquet-loaded keys' oracles. */
-  private val interchangeDirMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val interchangeDirMemo = new SessionMemo[String, String]
   private def interchangeTokenizerDir(s: SparkSession, d: String): String =
-    interchangeDirMemo.computeIfAbsent((s, d), { case (sp, dir) =>
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-tokenizer-interchange").toString
-      SessionCleanup.onEnd(sp) {
-        interchangeDirMemo.remove((sp, dir))
-        SessionCleanup.deleteRecursively(out)
-      }
-      val pq = persistedTokenizerDir(sp, dir, BpeMode.Byte)
-      writeTokenizerInterchange(sp, loadTokenizerMerges(sp, pq),
-        loadTokenizerVocab(sp, pq), out, BpeMode.Byte)
+    interchangeDirMemo.inTempDir(s, d, "graft-tokenizer-interchange") { out =>
+      val pq = persistedTokenizerDir(s, d, BpeMode.Byte)
+      writeTokenizerInterchange(s, loadTokenizerMerges(s, pq),
+        loadTokenizerVocab(s, pq), out, BpeMode.Byte)
       out
-    })
+    }
 
   def bpeIdsWith(docs: DataFrame, merges: Seq[String]): DataFrame = {
     val toks = docs

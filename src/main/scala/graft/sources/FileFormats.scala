@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, concat, lit, when}
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
-import graft.ops.Manifest
+import graft.ops.{Manifest, SessionMemo}
 
 /** CSV and JSON-lines manifest sources — the interchange formats a real
   * ingestion pipeline receives manifests in (the reference consumes only
@@ -21,8 +21,7 @@ import graft.ops.Manifest
   * hash-gated against the same DuckDB manifest CTE as `source_jdbc`. */
 object FileFormats {
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val memo = new SessionMemo[String, String]
 
   val manifestSchema: StructType = StructType(Seq(
     StructField("id", LongType, nullable = false),
@@ -30,13 +29,8 @@ object FileFormats {
     StructField("uploaded", BooleanType, nullable = false)))
 
   private def ensureWritten(s: SparkSession, d: String): String =
-    memo.computeIfAbsent((s, d), { case (spark, dir) =>
-      val root = java.nio.file.Files.createTempDirectory("graft-fmt").toString
-      graft.ops.SessionCleanup.onEnd(spark) {
-        memo.remove((spark, dir))
-        graft.ops.SessionCleanup.deleteRecursively(root)
-      }
-      val m = Manifest.fromDocuments(spark, dir)
+    memo.inTempDir(s, d, "graft-fmt") { root =>
+      val m = Manifest.fromDocuments(s, d)
       m.write.mode("overwrite").option("header", "true").csv(s"$root/csv")
       m.write.mode("overwrite").json(s"$root/json")
       m.write.mode("overwrite").orc(s"$root/orc")
@@ -54,7 +48,7 @@ object FileFormats {
           lit("\t"), col("uploaded")).as("value"))
         .write.mode("overwrite").text(s"$root/lines")
       root
-    })
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "source_csv" -> ((s, d) => {
@@ -107,8 +101,7 @@ object FileFormats {
     })
   )
 
-  private val evoMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val evoMemo = new SessionMemo[String, String]
 
   /** Schema EVOLUTION fixture: the corpus written as two parquet
     * "generations" with different column sets — v1 (even doc_ids) has
@@ -122,13 +115,8 @@ object FileFormats {
     * merged schema in a catalog instead — semantics identical, which is
     * what the oracle checks.) */
   private def ensureEvolved(s: SparkSession, d: String): String =
-    evoMemo.computeIfAbsent((s, d), { case (spark, dir) =>
-      val root = java.nio.file.Files.createTempDirectory("graft-evo").toString
-      graft.ops.SessionCleanup.onEnd(spark) {
-        evoMemo.remove((spark, dir))
-        graft.ops.SessionCleanup.deleteRecursively(root)
-      }
-      val docs = graft.model.Tables.documents(spark, dir)
+    evoMemo.inTempDir(s, d, "graft-evo") { root =>
+      val docs = graft.model.Tables.documents(s, d)
       docs.filter(col("doc_id") % 2 === 0)
         .select("doc_id", "text", "lang")
         .write.mode("overwrite").parquet(s"$root/v1")
@@ -136,7 +124,7 @@ object FileFormats {
         .select("doc_id", "text", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$root/v2")
       root
-    })
+    }
 
   def oracle: Map[String, String] = Map(
     "source_csv" -> graft.model.OracleSql.manifestSelect,

@@ -60,28 +60,20 @@ object FsScan {
     }
   }
 
-  /** The materialized tree is memoized per sf dir: the registry query
-    * stays pure-after-first-call (ContractSpec runs it twice for
-    * determinism; Bench/Verify each run it once) instead of re-writing —
-    * and leaking — a fresh temp tree per invocation. */
-  private val treeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The materialized tree is memoized per (session, sf dir): the
+    * registry query stays pure-after-first-call (ContractSpec runs it
+    * twice for determinism; Bench/Verify each run it once) instead of
+    * re-writing — and leaking — a fresh temp tree per invocation. */
+  private val treeMemo = new graft.ops.SessionMemo[String, String]
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // write the docs as a nested file tree (once), then recursive-scan it
     // back: (basename, byte length) must round-trip exactly.
     "scan_fs_recursive" -> ((s, d) => {
-      val root = treeMemo.computeIfAbsent(d, { dir =>
-        val r = java.nio.file.Files.createTempDirectory("graft-fsscan").toString
-        // keyed by dir (not session): evict + delete when the session that
-        // materialized the tree ends — one session per JVM outside tests.
-        graft.ops.SessionCleanup.onEnd(s) {
-          treeMemo.remove(dir)
-          graft.ops.SessionCleanup.deleteRecursively(r)
-        }
-        writeDocsAsFiles(s, dir, r)
+      val root = treeMemo.inTempDir(s, d, "graft-fsscan") { r =>
+        writeDocsAsFiles(s, d, r)
         r
-      })
+      }
       scanRecursive(s, root)
         .select(element_at(split(col("path"), "/"), -1).as("base"),
           col("length").as("flen"))

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.Manifest
+import graft.ops.{Manifest, SessionMemo}
 
 /** JDBC manifest source (SURVEY §2.1 `source_jdbc`).
   *
@@ -22,9 +22,12 @@ object Jdbc {
 
   /** One Derby database per (session, sf dir), loaded once with the
     * deterministic manifest — the registry query is then a pure
-    * partitioned read. */
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+    * partitioned read. The value is the database dir; release is the
+    * clean Derby shutdown (which throws SQLException on success by
+    * contract) before the temp dir goes. */
+  private val memo = new SessionMemo[String, String](release = (_, dbDir) =>
+    try java.sql.DriverManager.getConnection(s"jdbc:derby:$dbDir;shutdown=true")
+    catch { case _: java.sql.SQLException => () })
 
   def derbyUrl(dbDir: String): String = s"jdbc:derby:$dbDir;create=true"
 
@@ -85,33 +88,21 @@ object Jdbc {
 
   /** One log append per (session, sf dir) — reruns of the registry query
     * (bench runs it 4×) must not re-append the same batch. */
-  private val logMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Unit]()
+  private val logMemo = new SessionMemo[String, Unit]
 
   private def ensureLogWritten(s: SparkSession, d: String, url: String): Unit =
-    logMemo.computeIfAbsent((s, d), { case (spark, dir) =>
-      val results = Manifest.fromDocuments(spark, dir)
+    logMemo(s, d) {
+      val results = Manifest.fromDocuments(s, d)
         .filter(!col("uploaded") && col("id") % 5 === 0)
         .select("id")
       appendResults(results, url)
-      graft.ops.SessionCleanup.onEnd(spark) { logMemo.remove((spark, dir)) }
-    })
+    }
 
   private def ensureLoaded(s: SparkSession, d: String): String =
-    memo.computeIfAbsent((s, d), { case (spark, dir) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft-derby")
-      val dbDir = tmp.resolve("manifestdb").toString
-      graft.ops.SessionCleanup.onEnd(spark) {
-        memo.remove((spark, dir))
-        // clean Derby shutdown (throws SQLException on success by contract)
-        try java.sql.DriverManager
-          .getConnection(s"jdbc:derby:$dbDir;shutdown=true")
-        catch { case _: java.sql.SQLException => () }
-        graft.ops.SessionCleanup.deleteRecursively(tmp.toString)
-      }
-      val url = derbyUrl(dbDir)
-      writeManifest(Manifest.fromDocuments(spark, dir), url)
-      url
+    derbyUrl(memo.inTempDir(s, d, "graft-derby") { tmp =>
+      val dbDir = s"$tmp/manifestdb"
+      writeManifest(Manifest.fromDocuments(s, d), derbyUrl(dbDir))
+      dbDir
     })
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

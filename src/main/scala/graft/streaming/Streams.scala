@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import graft.ops.{EventWindows, Sampling, TermStats}
+import graft.ops.{EventWindows, Sampling, SessionMemo, TermStats}
 import graft.ops.TermStats.BpeMode
 import graft.ops.Sampling.PackedSeq
 
@@ -27,7 +27,7 @@ object Streams {
     * convention as Tables.events. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = asStreamDir(s"$dir/events.parquet")
+    val path = asStreamDir(spark, s"$dir/events.parquet")
     val raw = spark.read.parquet(path).schema
     val src = spark.readStream.schema(raw).parquet(path)
     raw("ts").dataType match {
@@ -37,17 +37,18 @@ object Streams {
     }
   }
 
+  private val streamDirMemo = new SessionMemo[String, String]
+
   /** The streaming file source lists a directory; the testdata tables are
     * single parquet files — expose a file as a one-entry directory via a
-    * temp symlink. */
-  def asStreamDir(path: String): String = {
+    * temp symlink, made once per (session, file). */
+  private def asStreamDir(spark: SparkSession, path: String): String = {
     import java.nio.file.{Files, Paths}
     val p = Paths.get(path)
     if (Files.isDirectory(p)) path
-    else {
-      val d = Files.createTempDirectory("graft-streamsrc")
-      Files.createSymbolicLink(d.resolve(p.getFileName), p)
-      d.toString
+    else streamDirMemo.inTempDir(spark, path, "graft-streamsrc") { d =>
+      Files.createSymbolicLink(Paths.get(d).resolve(p.getFileName), p)
+      d
     }
   }
 

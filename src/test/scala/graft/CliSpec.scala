@@ -7,7 +7,7 @@ import java.nio.file.{Files, Paths}
 
 /** End-to-end reference-equivalence: the two CLIs, including the
   * re-prepare / resume behaviors the readme documents (readme.md:42). */
-class CliSpec extends AnyFunSuite {
+class CliSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def write(root: String, rel: String, content: String): Unit = {
@@ -17,9 +17,9 @@ class CliSpec extends AnyFunSuite {
   }
 
   test("prepare -> upload -> resume full cycle") {
-    val src = Files.createTempDirectory("graft-cli-src").toString
-    val mroot = Files.createTempDirectory("graft-cli-m").toString
-    val store = Files.createTempDirectory("graft-cli-store").toString
+    val src = tempDir("graft-cli-src")
+    val mroot = tempDir("graft-cli-m")
+    val store = tempDir("graft-cli-store")
     val cutoff = Paths.get(src).getFileName.toString
 
     write(src, "a/x.txt", "XX")
@@ -126,8 +126,8 @@ class CliSpec extends AnyFunSuite {
     // regression: max(id) over an empty manifest is NULL; a first run
     // against an empty source dir writes an empty snapshot, files appear
     // later, and the second run must continue from id 0.
-    val src = Files.createTempDirectory("graft-cli-empty").toString
-    val mroot = Files.createTempDirectory("graft-cli-empty-m").toString
+    val src = tempDir("graft-cli-empty")
+    val mroot = tempDir("graft-cli-empty-m")
     val p1 = PrepareUpload.run(spark, src, mroot)
     assert(p1.total == 0 && p1.appended == 0)
     write(src, "a.txt", "A")
@@ -154,7 +154,7 @@ class CliSpec extends AnyFunSuite {
     // the upload stage sees zero rows and every sum/max aggregate in the
     // report is null — the regression the null guards cover.
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-allup").toString
+    val dir = tempDir("graft-allup")
     Seq((0L, "s1", "alpha", 5L), (3L, "s1", "beta", 4L), (6L, "s2", "gamma", 5L))
       .toDF("doc_id", "source", "text", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-contract invariants over the whole query registry. */
-class ContractSpec extends AnyFunSuite {
+class ContractSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("every oracle entry has a query; keys are the SURVEY §2 names") {
@@ -524,8 +524,7 @@ class ContractSpec extends AnyFunSuite {
     // the last COMMITTED artifact — only a deliberate `git commit`
     // moves that — with the disk file as a git-less fallback and an
     // explicitly pinned path trumping both.
-    val dir = java.nio.file.Files.createTempDirectory("graft-benchbase")
-      .toFile
+    val dir = new java.io.File(tempDir("graft-benchbase"))
     def sh(cmd: String*): Unit = {
       val p = new ProcessBuilder(cmd: _*).directory(dir)
         .redirectErrorStream(true).start()
@@ -561,7 +560,6 @@ class ContractSpec extends AnyFunSuite {
     assert(Bench.baselineContent(full,
       Some(new java.io.File(dir, "absent.json").getPath))
       == (("pinned", None)))
-    graft.ops.SessionCleanup.deleteRecursively(dir.getPath)
   }
 
   test("events_sessionize accounts for every event and session, and " +

@@ -8,13 +8,12 @@ import graft.sources.Jdbc
 /** JDBC manifest source: write → partitioned read round-trip against
   * embedded Derby (the reference's MySQL manifest, olrcdb.py:9-52, with a
   * URL-swap away). */
-class JdbcSpec extends AnyFunSuite {
+class JdbcSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("manifest round-trips through Derby exactly; read is partitioned") {
     val m = Manifest.fromDocuments(spark, TestSpark.sf0001)
-    val dbDir = java.nio.file.Files.createTempDirectory("graft-derby-spec")
-      .resolve("db").toString
+    val dbDir = s"${tempDir("graft-derby-spec")}/db"
     val url = Jdbc.derbyUrl(dbDir)
     Jdbc.writeManifest(m, url)
     val maxId = m.agg(max("id")).head().getLong(0)
@@ -32,8 +31,7 @@ class JdbcSpec extends AnyFunSuite {
   test("upload results write back through JDBC and the re-read mark " +
       "equals the in-memory markUploaded (the uploader's state boundary)") {
     val m = Manifest.fromDocuments(spark, TestSpark.sf0001)
-    val dbDir = java.nio.file.Files.createTempDirectory("graft-derby-wb")
-      .resolve("db").toString
+    val dbDir = s"${tempDir("graft-derby-wb")}/db"
     val url = Jdbc.derbyUrl(dbDir)
     Jdbc.writeManifest(m, url)
     val results = m.filter(!col("uploaded") && col("id") % 5 === 0).select("id")

@@ -3,14 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sink.ManifestStore
-import java.nio.file.Files
 
-class ManifestStoreSpec extends AnyFunSuite {
+class ManifestStoreSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   test("swap writes a readable snapshot and replaces it atomically") {
-    val root = Files.createTempDirectory("graft-manifest").toString
+    val root = tempDir("graft-manifest")
     val v1 = Seq((1L, "a", false), (2L, "b", false)).toDF("id", "path", "uploaded")
     ManifestStore.swap(v1, root)
     assert(ManifestStore.exists(root))
@@ -30,7 +29,7 @@ class ManifestStoreSpec extends AnyFunSuite {
 
   test("retained generations: swap(retain) keeps readable history bounded " +
       "at retain snapshots; vacuum prunes to keep, never touching current") {
-    val root = Files.createTempDirectory("graft-manifest-gen").toString
+    val root = tempDir("graft-manifest-gen")
     def snap(n: Int) =
       (1 to n).map(i => (i.toLong, s"p$i", false)).toDF("id", "path", "uploaded")
     for (n <- 1 to 4) ManifestStore.swap(snap(n), root, retain = 2)
@@ -48,7 +47,7 @@ class ManifestStoreSpec extends AnyFunSuite {
   }
 
   test("uploaded-partitioned snapshot enables partition pruning for filter_pending") {
-    val root = Files.createTempDirectory("graft-manifest-part").toString
+    val root = tempDir("graft-manifest-part")
     val m = Seq((1L, "a", false), (2L, "b", true), (3L, "c", false))
       .toDF("id", "path", "uploaded")
     m.write.partitionBy("uploaded").parquet(s"$root/snap")
@@ -61,7 +60,7 @@ class ManifestStoreSpec extends AnyFunSuite {
   }
 
   test("snapshot-backed filter_pending reaches the parquet scan as a pushed filter") {
-    val root = Files.createTempDirectory("graft-manifest-push").toString
+    val root = tempDir("graft-manifest-push")
     val m = Seq((1L, "a", false), (2L, "b", true), (3L, "c", false))
       .toDF("id", "path", "uploaded")
     ManifestStore.swap(m, root)

@@ -2,10 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ops.{Profile, SessionCleanup}
+import graft.ops.Profile
 import graft.model.Tables
 
-class ProfileSpec extends AnyFunSuite {
+class ProfileSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -261,7 +261,7 @@ class ProfileSpec extends AnyFunSuite {
   test("dynamic partition overwrite rewrites ONLY the incoming partition: " +
       "other partitions keep their exact files, the target is replaced") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ovw-spec").toString
+    val tmp = tempDir("graft-ovw-spec")
     val base = Seq((1L, "en", "a"), (2L, "en", "b"), (3L, "de", "c"),
       (4L, "fr", "d")).toDF("id", "lang", "src")
     base.write.mode("overwrite").partitionBy("lang").parquet(tmp)
@@ -282,7 +282,6 @@ class ProfileSpec extends AnyFunSuite {
     val got = spark.read.parquet(tmp).select("id", "lang", "src")
       .as[(Long, String, String)].collect().toSet
     assert(got == Set((9L, "en", "patched"), (3L, "de", "c"), (4L, "fr", "d")))
-    SessionCleanup.deleteRecursively(tmp)
   }
 
   test("heavyHitters ranks by count with the value tie-break and never " +

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.sink.{LocalFsStore, Reports, RetryingStore}
 import java.nio.file.{Files, Paths}
 
-class ReportsSpec extends AnyFunSuite {
+class ReportsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -15,7 +15,7 @@ class ReportsSpec extends AnyFunSuite {
   }
 
   test("writeProgress overwrites in place (not append)") {
-    val dir = Files.createTempDirectory("graft-prog").toString
+    val dir = tempDir("graft-prog")
     val m1 = Seq((1L, "a", false), (2L, "b", true)).toDF("id", "path", "uploaded")
     Reports.writeProgress(m1, s"$dir/.upload.out", 1.0)
     val m2 = m1.withColumn("uploaded", lit(true))
@@ -26,7 +26,7 @@ class ReportsSpec extends AnyFunSuite {
   }
 
   test("writeReport carries totals and a UTC timestamp header") {
-    val dir = Files.createTempDirectory("graft-rep").toString
+    val dir = tempDir("graft-rep")
     val res = Seq((1L, true), (2L, true), (3L, false)).toDF("id", "ok")
     Reports.writeReport(res, s"$dir/report.log")
     val content = Files.readString(Paths.get(s"$dir/report.log"))

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ops.Segments
 
-class SegmentsSpec extends AnyFunSuite {
+class SegmentsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -68,7 +68,7 @@ class SegmentsSpec extends AnyFunSuite {
     val df = Seq((3L, "a/b/doc_3.txt", text)).toDF("doc_id", "path", "text")
     val segs = Segments.segmentBytes(df, col("doc_id"), col("path"),
       col("text").cast("binary"), 16)
-    val root = java.nio.file.Files.createTempDirectory("graft-segw").toString
+    val root = tempDir("graft-segw")
     Segments.writeSegmentFiles(segs, root)
     val files = java.nio.file.Files
       .list(java.nio.file.Paths.get(root, "doc_3"))
@@ -85,7 +85,7 @@ class SegmentsSpec extends AnyFunSuite {
       .toDF("doc_id", "path", "text")
     val segs = Segments.segmentBytes(df, col("doc_id"), col("path"),
       col("text").cast("binary"), 4)
-    val root = java.nio.file.Files.createTempDirectory("graft-segw2").toString
+    val root = tempDir("graft-segw2")
     Segments.writeSegmentFiles(segs, root)
     def bytes(doc: String) = java.nio.file.Files
       .list(java.nio.file.Paths.get(root, doc)).toArray.map(_.toString).sorted

@@ -9,7 +9,7 @@ import graft.ops.TermStats.BpeMode
 import graft.model.Tables
 import java.nio.file.Files
 
-class StreamsSpec extends AnyFunSuite {
+class StreamsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -971,7 +971,7 @@ class StreamsSpec extends AnyFunSuite {
 
   test("dropDuplicatesWithinWatermark removes duplicate event_ids") {
     val events = Tables.events(spark, TestSpark.sf0001).limit(100)
-    val dir = Files.createTempDirectory("graft-dup").toString
+    val dir = tempDir("graft-dup")
     events.union(events).write.parquet(s"$dir/events.parquet")
     // stream the doubled data back with the same schema convention
     val doubled = spark.readStream
@@ -1176,9 +1176,9 @@ class StreamsSpec extends AnyFunSuite {
   test("foreachBatch micro-batch upload marks the manifest transactionally") {
     import graft.ops.Manifest
     import graft.sink.{LocalFsStore, ManifestStore, Uploader}
-    val manifestRoot = Files.createTempDirectory("graft-mstream").toString
-    val storeRoot = Files.createTempDirectory("graft-sstream").toString
-    val checkpoint = Files.createTempDirectory("graft-ckpt").toString
+    val manifestRoot = tempDir("graft-mstream")
+    val storeRoot = tempDir("graft-sstream")
+    val checkpoint = tempDir("graft-ckpt")
 
     val m = Manifest.fromDocuments(spark, TestSpark.sf0001)
     ManifestStore.swap(m, manifestRoot)
@@ -1239,10 +1239,10 @@ class StreamsSpec extends AnyFunSuite {
     // replay it through the REAL file stream source: 10 sequential chunk
     // files, one micro-batch each (maxFilesPerTrigger=1), so Spark's
     // actual watermark machinery sees the same disorder the twin models
-    val streamDir = Files.createTempDirectory("graft-wm-replay")
+    val streamDir = java.nio.file.Paths.get(tempDir("graft-wm-replay"))
     val chunk = math.max(1, (arrival.length + 19) / 20)
     arrival.grouped(chunk).zipWithIndex.foreach { case (rows, i) =>
-      val tmp = Files.createTempDirectory("graft-wm-chunk")
+      val tmp = java.nio.file.Paths.get(tempDir("graft-wm-chunk"))
       rows.toSeq.toDF("event_id", "ts").coalesce(1)
         .write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).toArray.map(_.toString)
@@ -1287,7 +1287,6 @@ class StreamsSpec extends AnyFunSuite {
     val twinTotal = liveCounts.keys.toSeq.map(twin.getOrElse(_, 0L)).sum
     assert(liveTotal < rawTotal,
       s"no live drops: live=$liveTotal raw-on-emitted=$rawTotal twin=$twinTotal")
-    graft.ops.SessionCleanup.deleteRecursively(streamDir.toString)
   }
 
   test("blocked watermark-late survivors equal the single-global-window form " +

@@ -8,6 +8,8 @@ object TestSpark {
   lazy val spark: SparkSession = {
     val warehouse = java.nio.file.Files
       .createTempDirectory("graft-warehouse").toString
+    // the session lives until the test JVM exits; so does its warehouse
+    sys.addShutdownHook(graft.ops.SessionCleanup.deleteRecursively(warehouse))
     val s = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")

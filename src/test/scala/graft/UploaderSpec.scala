@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 import graft.sink.{FlakyStore, LocalFsStore, Uploader}
 import java.nio.file.{Files, Paths}
 
-class UploaderSpec extends AnyFunSuite {
+class UploaderSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp() = Files.createTempDirectory("graft-test").toString
+  private def tmp() = tempDir("graft-test")
 
   test("uploads all rows and writes bytes to the store") {
     val root = tmp()
