@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Manifest, PathFns}
 import graft.sink.{LocalFsStore, ManifestStore, ObjectStore, Reports, RetryingStore, Uploader}
@@ -11,19 +11,19 @@ import graft.sink.{LocalFsStore, ManifestStore, ObjectStore, Reports, RetryingSt
   *
   * Flow parity (SURVEY §3.2): provision container → plan pending (WHERE
   * uploaded=0, bulkupload.py:357) → fan out (partitioning replaces the
-  * locked shared queue) → per-file PUT with ≤5 attempts + reconnect
-  * backoff → mark uploaded (snapshot join-swap) → progress/report files.
+  * locked shared queue) → per-file open + PUT with ≤5 attempts +
+  * reconnect backoff → mark uploaded (snapshot join-swap) →
+  * progress/report files.
   * Object keys apply the documented cutoff-prefix + leading-slash rules
   * (bulkupload.py:48-56, both reference bugs fixed per SURVEY §2.8).
   * A re-run resumes: only still-pending rows upload (readme.md:42).
   *
-  * Spark actions per run, one per output: one aggregate over the cached
-  * upload results (this is the action that uploads) gives attempted and
-  * ok; the snapshot write materialises the marked manifest before the
-  * rename; one aggregate over the swapped-in snapshot gives (total,
-  * uploaded) for both `.upload.out` and the summary; the error log is
-  * appended only when some row failed. `.upload.report.log` is written
-  * from the counts already in hand.
+  * Spark actions per run: those of [[Uploader.step]] (one aggregate
+  * over the upload results — the action that uploads — the snapshot
+  * write that commits the marked manifest, one aggregate over the
+  * swapped-in snapshot), plus the error-log append when some row failed.
+  * `.upload.out` and `.upload.report.log` are written from the counts
+  * the step returns.
   */
 object BulkUpload {
 
@@ -33,12 +33,8 @@ object BulkUpload {
   def run(spark: SparkSession, storeRoot: String, manifestRoot: String,
       parallelism: Int, cutoff: Option[String] = None,
       mkStore: String => ObjectStore =
-        root => new RetryingStore(new LocalFsStore(root)),
-      retrySleepMs: Long = 0L): Summary = {
+        root => new RetryingStore(new LocalFsStore(root))): Summary = {
     import spark.implicits._
-
-    val store = mkStore(storeRoot)
-    store.ensureContainer() // create_container, bulkupload.py:110-124
 
     val m = ManifestStore.read(spark, manifestRoot)
     val keyCol = {
@@ -46,56 +42,28 @@ object BulkUpload {
         .getOrElse(col("path"))
       PathFns.stripLeadingSlash(cut)
     }
-    // the listing's paths are not URI-escaped (`file:/a b/c d%.txt`):
-    // Hadoop's Path parses them as written, java.net.URI would throw.
     val pending = Manifest.filterPending(m)
-      .select(col("id"), col("path"), keyCol.as("key"))
+      .select(col("id"), keyCol.as("key"), col("path"))
       .as[(Long, String, String)]
-      .map { case (id, path, key) =>
-        (id, key, java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-          new org.apache.hadoop.fs.Path(path).toUri.getPath)))
-      } // open(path, 'rb'), bulkupload.py:39 — executor-side per file
+    val o = Uploader.step(m, pending, readFile, () => mkStore(storeRoot),
+      parallelism, ManifestStore.swap(_, manifestRoot),
+      Uploader.writeErrorLog(_, s"$manifestRoot/.upload.error.log"))
 
-    // Accumulators feed live progress only; authoritative counts come from
-    // the results frame (task retries/speculation can inflate accumulator
-    // updates inside transformations). Wall-time around the materializing
-    // action gives uploads/second — the reference's set_speed
-    // (bulkupload.py:363-387).
-    val counters = Uploader.mkCounters(spark)
-    val t0 = System.nanoTime()
-    val results = Uploader.upload(pending, () => mkStore(storeRoot),
-      parallelism, maxAttempts = 5, retrySleepMs = retrySleepMs,
-      counters = Some(counters)).toDF().cache()
-    val (attempted, okCount) = countOf(results.agg(count(lit(1)), countIf(col("ok"))))
-    val elapsedSec = math.max((System.nanoTime() - t0) / 1e9, 1e-9)
-    val ratePerSec = okCount / elapsedSec
-
-    // all post-swap reads go through the swapped-in snapshot, never the
-    // pre-swap lineage (see ManifestStore.swap).
-    val current = ManifestStore.swap(
-      Manifest.markUploaded(m, results.filter(col("ok"))), manifestRoot)
-    val (total, totalUploaded) =
-      countOf(current.agg(count(lit(1)), countIf(col("uploaded"))))
-
-    val failed = attempted - okCount
-    if (failed > 0)
-      Uploader.writeErrorLog(results, s"$manifestRoot/.upload.error.log")
     Reports.overwrite(s"$manifestRoot/.upload.out",
-      Reports.progressLine(totalUploaded, total, ratePerSec))
+      Reports.progressLine(o.uploaded, o.total, o.ratePerSec))
     Reports.overwrite(s"$manifestRoot/.upload.report.log",
-      Reports.reportText(attempted, okCount, failed))
-    results.unpersist()
-    Summary(attempted = attempted, uploaded = okCount, failed = failed,
-      totalUploaded = totalUploaded, total = total)
+      Reports.reportText(o.attempted, o.ok, o.failed))
+    Summary(attempted = o.attempted, uploaded = o.ok, failed = o.failed,
+      totalUploaded = o.uploaded, total = o.total)
   }
 
-  private def countIf(c: Column): Column =
-    coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
-
-  private def countOf(agg: DataFrame): (Long, Long) = {
-    val r = agg.head()
-    (r.getLong(0), r.getLong(1))
-  }
+  /** open(path, 'rb'), bulkupload.py:39 — executor-side, inside each put
+    * attempt. The listing's paths are not URI-escaped (`file:/a b/c
+    * d%.txt`): Hadoop's Path parses them as written, java.net.URI would
+    * throw. */
+  private val readFile: String => Array[Byte] = path =>
+    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      new org.apache.hadoop.fs.Path(path).toUri.getPath))
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,

@@ -717,22 +717,4 @@ object Streams {
       .start()
     q.awaitTermination()
   }
-
-  /** Transactional micro-batch upload+mark (stream_foreachBatch_sink):
-    * each batch of pending rows is uploaded then the manifest snapshot is
-    * swapped; the checkpoint dir makes restarts resume exactly where the
-    * reference's `uploaded` flag would (at_least_once semantics — a crash
-    * between upload and swap re-uploads idempotently). */
-  def runMicroBatchUpload(
-      pending: DataFrame,
-      checkpointDir: String,
-      onBatch: (DataFrame, Long) => Unit): Unit = {
-    val q = pending.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(onBatch)
-      .start()
-    q.awaitTermination()
-  }
 }

@@ -1191,19 +1191,22 @@ class StreamsSpec extends AnyFunSuite with TempDirs {
       .parquet(ManifestStore.currentPath(manifestRoot))
       .filter(!col("uploaded"))
 
-    Streams.runMicroBatchUpload(pendingStream, checkpoint, (batch, _) => {
-      val withContent = batch.join(docs, Seq("path"))
-        .select(col("id"), col("path"), col("text"))
-        .as[(Long, String, String)]
-        .map { case (id, p, t) => (id, p, t.getBytes("UTF-8")) }
-      val results = Uploader.upload(withContent,
-        () => new LocalFsStore(storeRoot), 4)
-      val current = ManifestStore.read(spark, manifestRoot)
-      val marked = Manifest.markUploaded(current,
-        results.filter(col("ok")).toDF()).cache()
-      marked.count()
-      ManifestStore.swap(marked, manifestRoot)
-    })
+    // each batch runs the one upload route and commits by swapping the
+    // snapshot; the checkpoint makes a restart resume where it stopped
+    pendingStream.writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        val withContent = batch.join(docs, Seq("path"))
+          .select(col("id"), col("path"), col("text"))
+          .as[(Long, String, String)]
+        Uploader.step(ManifestStore.read(spark, manifestRoot), withContent,
+          (t: String) => t.getBytes("UTF-8"), () => new LocalFsStore(storeRoot), 4,
+          ManifestStore.swap(_, manifestRoot), _ => ())
+        ()
+      }
+      .start().awaitTermination()
 
     val after = ManifestStore.read(spark, manifestRoot)
     assert(after.filter(!col("uploaded")).count() == 0)
