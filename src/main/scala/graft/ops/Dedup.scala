@@ -163,13 +163,6 @@ object Dedup {
       .select("a_id", "b_id", "na", "nb").distinct()
   }
 
-  /** Candidate pairs of the replicable banding stage — the frame
-    * `nearDupSurvivors` verifies. Public for scale-trend observability:
-    * candidate count vs n·(n-1)/2 is THE number that shows the routing
-    * stays subquadratic as SF grows. */
-  def nearDupCandidates(docs: DataFrame, k: Int = 8, bands: Int = 4): DataFrame =
-    candidatePairs(docs, k, bands).select("a_id", "b_id")
-
   /** Candidate pairs that SURVIVE exact-Jaccard verification — the edge
     * set of the near-dup graph. Union sizes (na, nb) ride on the
     * candidate rows, so the verify stage is: two candidate-bounded
@@ -366,15 +359,6 @@ object Dedup {
       .select("a_id", "b_id", "na", "nb").distinct()
   }
 
-  /** Cross-set candidate pairs of the incremental dedup — public for
-    * scale-trend observability: candidate mass vs n_new × n_exist is THE
-    * number that shows the increment PROBES the corpus instead of
-    * re-joining it. */
-  def incrementalCandidates(docs: DataFrame, k: Int = 8, bands: Int = 4,
-      mod: Int = 5): DataFrame =
-    incrementalCandidatePairs(shingles(docs), k, bands, mod)
-      .select("a_id", "b_id")
-
   def nearDupSurvivors(docs: DataFrame, jacThreshold: Double = 0.5,
       k: Int = 8, bands: Int = 4): DataFrame = {
     val dropped = nearDupVerifiedPairs(docs, jacThreshold, k, bands)
@@ -547,9 +531,9 @@ object Dedup {
     * BMP-only corpora here they coincide with the character indices
     * `substr` uses on both engines.
     */
-  /** Pre-verify window-hash candidate pairs of [[substringSpans]] —
-    * public for scale-trend observability (candidate mass vs the
-    * n_windows² a naive all-pairs window compare would touch). */
+  /** Pre-verify window-hash candidate pairs — the hits [[substringSpans]]
+    * verifies and merges (candidate mass vs the n_windows² a naive
+    * all-pairs window compare would touch). */
   def substringWindowCandidates(docs: DataFrame, w: Int = 40): DataFrame = {
     val wins = docs.filter(length(col("text")) >= w)
       .select(col("doc_id"),
@@ -967,9 +951,9 @@ object Dedup {
     simhashPairsFrom(simhash(docs), maxHamming, 64)
 
   /** Pre-verify block-candidate pairs (a_id, b_id, fa, fb) — NOT deduped
-    * (a pair appears once per shared block). Exposed separately so
-    * scale-trend observability and specs measure candidate mass with the
-    * same construction the operator runs. */
+    * (a pair appears once per shared block) — the frame
+    * [[simhashPairsFrom]] verifies. Exposed separately so specs measure
+    * candidate mass with the same construction the operator runs. */
   def simhashBlockCandidates(fp: DataFrame, maxHamming: Int,
       bits: Int): DataFrame = {
     val nBlocks = maxHamming + 1

@@ -301,21 +301,20 @@ object Graphs {
   }
 
   /** Oriented edge list (src, dst, ddeg): each undirected edge pointed
-    * toward the higher endpoint in the chosen total order — (deg, id)
-    * when `byDegree` (the wedge-bounding orientation), plain id
-    * otherwise (the naive one [[wedgeCount]] measures against). `ddeg`
-    * carries the dst's degree so the wedge join can order its two
+    * toward the higher endpoint in the (deg, id) total order — the
+    * wedge-bounding orientation (id order would make every hub source
+    * its whole neighborhood, C(hub_deg, 2) wedges at the hottest nodes).
+    * `ddeg` carries the dst's degree so the wedge join can order its two
     * endpoints without a re-join. */
-  private[graft] def orientedEdges(docs: DataFrame, byDegree: Boolean): DataFrame = {
+  private def orientedEdges(docs: DataFrame): DataFrame = {
     val und = undirected(docs)
     val deg = und.select(col("u").as("id")).unionAll(und.select(col("v").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
     val withDeg = und
       .join(deg.select(col("id").as("u"), col("deg").as("du")), Seq("u"))
       .join(deg.select(col("id").as("v"), col("deg").as("dv")), Seq("v"))
-    val uFirst = if (byDegree)
+    val uFirst =
       col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
-    else col("u") < col("v")
     withDeg.select(
       when(uFirst,
         struct(col("u").as("src"), col("v").as("dst"), col("dv").as("ddeg")))
@@ -325,20 +324,10 @@ object Graphs {
       .select(col("e.src"), col("e.dst"), col("e.ddeg"))
   }
 
-  /** Wedge (open two-path) count under the chosen orientation —
-    * Σ_src C(outdeg(src), 2), the exact join volume triangle
-    * enumeration pays. The scale evidence for degree ordering: id
-    * ordering makes every hub source its whole neighborhood, paying
-    * C(hub_deg, 2) wedges at exactly the hottest nodes. */
-  private[graft] def wedgeCount(docs: DataFrame, byDegree: Boolean): Long =
-    orientedEdges(docs, byDegree)
-      .groupBy("src").agg(count(lit(1)).as("k"))
-      .agg(sum(expr("k * (k - 1) div 2"))).head().getLong(0)
-
   /** Per-node triangle counts over the undirected crawl graph,
     * degree-ordered wedge enumeration (nodes in ≥1 triangle only). */
   def triangleCounts(docs: DataFrame): DataFrame = {
-    val oriented = orientedEdges(docs, byDegree = true)
+    val oriented = orientedEdges(docs)
     val e1 = oriented.select(col("src").as("a"), col("dst").as("b"), col("ddeg").as("db"))
     val e2 = oriented.select(col("src").as("a"), col("dst").as("c"), col("ddeg").as("dc"))
     val wedges = e1.join(e2, Seq("a"))

@@ -480,8 +480,8 @@ object Relational {
     * by BOTH the corpus and the span, strictly tighter than the dense
     * grid's span × types at every density, and the 1-row bounds
     * collect (a driver job) is gone. Measured on the sf0.1 bench key:
-    * 20.5 s → see OPTIMIZATION_r16.md; dense regime re-measured with
-    * DenseWindowBench (same file). Output is bit-identical to
+    * 20.5 s → see OPTIMIZATION_r16.md; dense regime re-measured in
+    * SCALE_r16_densewindow_auto_sparse.jsonl. Output is bit-identical to
     * the r15 dense-grid compose over the same buckets: ContractSpec pins
     * blocked ≡ bucketed row-for-row, and the key shares the bucketed
     * oracle verbatim. */
@@ -630,8 +630,8 @@ object Relational {
     * since the r16 optimization round the SPARSE compose
     * ([[sparseTwoBlockCompose]] over the type-filtered buckets), so
     * the dense per-second grid, its per-type bounds machinery and the
-    * offset fan-out join are gone from this branch too (measured on
-    * DenseWindowBench: auto 3.65 → see OPTIMIZATION_r16.md). The
+    * offset fan-out join are gone from this branch too (auto 3.65 →
+    * 2.02 s at 1M events/day, OPTIMIZATION_r16.md). The
     * bucket table feeds the stats agg and both branches —
     * localCheckpoint at the triple-evaluation boundary (standing
     * convention). */

@@ -878,8 +878,8 @@ object Sampling {
 
   /** Single-global-window composed form of [[budgetPack]] — semantically
     * identical (SamplingSpec asserts equality; the DuckDB oracle runs
-    * this shape), kept as the executable spec and as ScaleTrend's
-    * baseline for what the one-partition sort costs as n grows. */
+    * this shape), kept as the executable spec and as the baseline for
+    * what the one-partition sort costs as n grows (SCALE_r06.md). */
   private[graft] def budgetPackGlobal(docs: DataFrame, budget: Long): DataFrame = {
     val w = Window.orderBy(col("n_chars").desc, col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

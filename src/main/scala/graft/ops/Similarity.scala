@@ -87,9 +87,9 @@ object Similarity {
     * this the 100 TB path (cross-join cost n·q → n·q·P(collision)).
     * bits/tables trade recall vs candidate count; 4/8 gives ~0.7 recall
     * even on near-random vectors (measured in SimilaritySpec). */
-  /** Distinct LSH candidate pairs (q_id, n_id) — the frame `lshTopK`
-    * scores. Public for scale-trend observability: candidate count vs
-    * n·q is the subquadratic-routing evidence. */
+  /** Distinct LSH candidate pairs (q_id, n_id) — the frame [[lshTopK]]
+    * scores. Candidate count vs n·q is the subquadratic-routing
+    * evidence. */
   def lshCandidates(emb: DataFrame, queryPred: Column,
       bits: Int = 4, tables: Int = 8): DataFrame = {
     val dim = 64

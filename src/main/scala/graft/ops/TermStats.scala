@@ -669,7 +669,7 @@ object TermStats {
     * shrinks fast with rank: the per-round explode volume falls from
     * the whole vocabulary to the merge's match set — the difference
     * between O(R · vocab) and O(vocab + Σ|matchedᵣ|) exploded rows
-    * over an R = 30k run (TrainerBench records both).
+    * over an R = 30k run (SCALE_r11 §3 records both at R = 10).
     *
     * DAG discipline (measured, the hard way): chaining picks lazily as
     * broadcast 1-row frames makes every pickᵢ a subplan referenced
@@ -761,12 +761,12 @@ object TermStats {
     * production case lands on the FAST path on production hardware.
     * The crossover is not close: at 4.4M words the local loop runs
     * 2.03 s/round against the distributed loop's 15.9 s/round
-    * (TrainerBench big-vocabulary mode, merge-identity required), so
+    * (SCALE_r13 §2, merge-identity required), so
     * the distributed loop is strictly the out-of-driver-memory
     * fallback. An explicit dial forces a route: `Long.MaxValue` the
     * in-memory loop, `1L` the distributed loop (for any vocabulary of
-    * two or more words) — how TermStatsSpec and TrainerBench hold both
-    * routes to the recount reference. */
+    * two or more words) — how TermStatsSpec holds both routes to the
+    * recount reference. */
   def bpeLearnAuto(docs: DataFrame, rounds: Int = 10,
       driverMaxWords: Long = 0L,
       eow: Boolean = false): Seq[(String, String, Long)] = {
@@ -800,95 +800,6 @@ object TermStats {
       i += 1
     }
     a.length - b.length
-  }
-
-  /** The in-memory trainer's whole state: per-word symbol arrays and
-    * counts, live pair counts, the pair → word-index occurrence index,
-    * and the lazy-deletion argmax heap. Built once by
-    * [[bpeLearnInMemory]]; [[trainerStateFootprint]] builds the same
-    * state to MEASURE it (the driverMaxWords dial's evidence). */
-  private final class TrainerState(words: Array[(String, Long)],
-      eow: Boolean) {
-    import scala.collection.mutable
-    // per-word symbol arrays (code points; in eow mode the last symbol
-    // carries the marker — the Sennrich </w> split) and counts
-    val syms = new Array[Array[String]](words.length)
-    val cnt = new Array[Long](words.length)
-    // live pair counts; pair → word indices currently containing it
-    val pc = mutable.HashMap[(String, String), Long]()
-    val occ = mutable.HashMap[(String, String), mutable.HashSet[Int]]()
-    // lazy-deletion heap: (count, lhs, rhs), max count first, ties by
-    // (lhs, rhs) ascending UTF-8 — the distributed argmax's exact pin
-    val heap = new java.util.PriorityQueue[(Long, String, String)](64,
-      new java.util.Comparator[(Long, String, String)] {
-        def compare(p: (Long, String, String),
-            q: (Long, String, String)): Int = {
-          if (p._1 != q._1) java.lang.Long.compare(q._1, p._1)
-          else {
-            val c = utf8Compare(p._2, q._2)
-            if (c != 0) c else utf8Compare(p._3, q._3)
-          }
-        }
-      })
-    def pairsOf(s: Array[String]): Iterator[(String, String)] =
-      (0 until s.length - 1).iterator.map(i => (s(i), s(i + 1)))
-    // init: split words, count P₀, index occurrences, seed the heap
-    locally {
-      var w = 0
-      while (w < words.length) {
-        syms(w) = words(w)._1.codePoints().toArray
-          .map(cp => new String(Character.toChars(cp)))
-        if (eow && syms(w).nonEmpty)
-          syms(w)(syms(w).length - 1) += EowMarker
-        cnt(w) = words(w)._2
-        pairsOf(syms(w)).foreach { p =>
-          pc.update(p, pc.getOrElse(p, 0L) + cnt(w))
-          occ.getOrElseUpdate(p, mutable.HashSet[Int]()).add(w)
-        }
-        w += 1
-      }
-      pc.foreach { case (p, v) => heap.add((v, p._1, p._2)) }
-    }
-  }
-
-  /** Build ONLY the trainer's initial state and report its MEASURED
-    * retained footprint plus its structural sizes — (retainedBytes,
-    * words, pcEntries, occKeys, occIndexEntries, heapEntries).
-    * GC-fenced before and after while the state is still strongly
-    * reachable, so the delta is the state's retained size within
-    * collector noise. Diagnostic-only (TrainerBench's big-vocabulary
-    * mode) — the numbers behind [[bpeLearnAuto]]'s driverMaxWords
-    * dial, replacing the r12 "~60 B/word" guess the judge flagged
-    * (VERDICT r12 "What's wrong" #2). */
-  private[graft] def trainerStateFootprint(
-      words: Array[(String, Long)],
-      eow: Boolean = false): (Long, Long, Long, Long, Long, Long) = {
-    def used(): Long = {
-      val rt = Runtime.getRuntime
-      var last = rt.totalMemory() - rt.freeMemory()
-      var stable = 0
-      var spins = 0
-      // bounded: a churning collector must not hang the probe — 40
-      // fences is far past any observed stabilization (typically 2-4)
-      while (stable < 2 && spins < 40) {
-        System.gc()
-        Thread.sleep(50)
-        val now = rt.totalMemory() - rt.freeMemory()
-        if (math.abs(now - last) < (1L << 20)) stable += 1 else stable = 0
-        last = now
-        spins += 1
-      }
-      last
-    }
-    val before = used()
-    val st = new TrainerState(words, eow)
-    val after = used()
-    val occIdx = st.occ.valuesIterator.map(_.size.toLong).sum
-    val out = (after - before, words.length.toLong, st.pc.size.toLong,
-      st.occ.size.toLong, occIdx, st.heap.size.toLong)
-    // keep the state reachable past the second fence
-    require(st.syms.length == words.length)
-    out
   }
 
   /** DRIVER-LOCAL BPE training (VERDICT r11 "Next round" #1 — what
@@ -929,21 +840,49 @@ object TermStats {
     * wide-vocabulary synthetic corpus); exhaustion is "no pairs left",
     * the same stop the recount's empty argmax gives. The 30k-merge
     * trajectory drops from ~3.5 h of per-round scheduler latency
-    * (0.42 s/round, SCALE_r11 §3) to in-memory minutes; TrainerBench
-    * records the measured wall-clock. For vocabularies that exceed
-    * driver memory, [[bpeLearnAuto]] routes to the distributed
-    * incremental loop instead. */
+    * (0.42 s/round, SCALE_r11 §3) to 3.1 s in memory (SCALE_r12 §3a).
+    * For vocabularies that exceed driver memory, [[bpeLearnAuto]]
+    * routes to the distributed incremental loop instead. */
   private[graft] def bpeLearnInMemory(words: Array[(String, Long)],
       rounds: Int, eow: Boolean = false): Seq[(String, String, Long)] = {
     import scala.collection.mutable
-    val state = new TrainerState(words, eow)
-    val syms = state.syms
-    val cnt = state.cnt
-    val pc = state.pc
-    val occ = state.occ
-    val heap = state.heap
+    // per-word symbol arrays (code points; in eow mode the last symbol
+    // carries the marker — the Sennrich </w> split) and counts
+    val syms = new Array[Array[String]](words.length)
+    val cnt = new Array[Long](words.length)
+    // live pair counts; pair → word indices currently containing it
+    val pc = mutable.HashMap[(String, String), Long]()
+    val occ = mutable.HashMap[(String, String), mutable.HashSet[Int]]()
+    // lazy-deletion heap: (count, lhs, rhs), max count first, ties by
+    // (lhs, rhs) ascending UTF-8 — the distributed argmax's exact pin
+    val heap = new java.util.PriorityQueue[(Long, String, String)](64,
+      new java.util.Comparator[(Long, String, String)] {
+        def compare(p: (Long, String, String),
+            q: (Long, String, String)): Int = {
+          if (p._1 != q._1) java.lang.Long.compare(q._1, p._1)
+          else {
+            val c = utf8Compare(p._2, q._2)
+            if (c != 0) c else utf8Compare(p._3, q._3)
+          }
+        }
+      })
     def pairsOf(s: Array[String]): Iterator[(String, String)] =
-      state.pairsOf(s)
+      (0 until s.length - 1).iterator.map(i => (s(i), s(i + 1)))
+    // init: split words, count P₀, index occurrences, seed the heap
+    var w = 0
+    while (w < words.length) {
+      syms(w) = words(w)._1.codePoints().toArray
+        .map(cp => new String(Character.toChars(cp)))
+      if (eow && syms(w).nonEmpty)
+        syms(w)(syms(w).length - 1) += EowMarker
+      cnt(w) = words(w)._2
+      pairsOf(syms(w)).foreach { p =>
+        pc.update(p, pc.getOrElse(p, 0L) + cnt(w))
+        occ.getOrElseUpdate(p, mutable.HashSet[Int]()).add(w)
+      }
+      w += 1
+    }
+    pc.foreach { case (p, v) => heap.add((v, p._1, p._2)) }
     // apply a per-word delta: -cnt over the old pairs, +cnt over the
     // new; push every changed live count; maintain occ by presence
     def reindex(idx: Int, old: Array[String], nw: Array[String]): Unit = {
@@ -1011,35 +950,6 @@ object TermStats {
       r += 1
     }
     learned.toSeq
-  }
-
-  /** Per-round RECOUNT-ROW volumes for the trainer A/B accounting
-    * (VERDICT r10 "Next round" #7 — TrainerBench's table): for each
-    * round r of a LEARNED merge table, (full, incremental) exploded
-    * pair-row counts over the distinct vocabulary — full = what the
-    * [[bpeLearnIter]] recount explodes that round (Σ_w symbols_r(w) − 1);
-    * incremental = what the delta explodes (matched words only, both
-    * their as-was and re-encoded forms). Diagnostic-only: one small
-    * vocab aggregate per round, replace chains at gate depth. */
-  private[graft] def recountVolumes(docs: DataFrame,
-      merges: Seq[(String, String, Long)]): Seq[(Long, Long)] = {
-    val vocab = tokens(docs).filter(length(col("word")) >= 2)
-      .select("word").distinct()
-    def rows(e: Column): Column =
-      greatest(size(split(e, " ")) - 1, lit(0)).cast("long")
-    merges.indices.map { r =>
-      val encPre = bpeEncodePairsExpr(col("word"),
-        merges.take(r).map { case (a, b, _) => (a, b) }, BpeMode.Char)
-      val encPost = bpeEncodePairsExpr(col("word"),
-        merges.take(r + 1).map { case (a, b, _) => (a, b) }, BpeMode.Char)
-      val (a, b, _) = merges(r)
-      val isM = concat(lit(" "), encPre, lit(" ")).contains(s" $a $b ")
-      val row = vocab.agg(
-        sum(rows(encPre)).as("full"),
-        sum(when(isM, rows(encPre) + rows(encPost))
-          .otherwise(lit(0L))).as("incr")).collect()(0)
-      (row.getLong(0), row.getLong(1))
-    }
   }
 
   /** The iterative 10-round model memoized per (session, sf dir,
@@ -1204,27 +1114,6 @@ object TermStats {
       mi += 1
     }
     cur.mkString(" ")
-  }
-
-  /** Deterministic synthetic merge table for scale specs — collision-
-    * free (every fused symbol is distinct) and multi-char-exercising:
-    * all 676 single-letter pairs first, then (two-letter symbol,
-    * letter) pairs, so a production-sized table exists without a
-    * production-sized training run. NOT a learned model — a plan-shape
-    * probe: the 10-merge gate keys stay the correctness story. */
-  private[graft] def syntheticMerges(n: Int): Seq[(String, String)] = {
-    val letters = ('a' to 'z').map(_.toString)
-    val l1 = for (a <- letters; b <- letters) yield (a, b)
-    val l2 = for (a <- letters; b <- letters; c <- letters) yield (a + b, c)
-    // level 3 (r16): 4-char fusions push the ceiling past the ≥50k
-    // production depth the interchange loader is exercised at —
-    // built only when actually needed (456,976 tuples)
-    def l3 = for (a <- letters; b <- letters; c <- letters; d <- letters)
-      yield (a + b + c, d)
-    val base = l1 ++ l2
-    val all = if (n <= base.size) base else base ++ l3
-    require(n <= all.size, s"syntheticMerges supports up to ${all.size}")
-    all.take(n)
   }
 
   /** The per-partition greedy encoder the scaled apply and the stream

@@ -45,6 +45,11 @@ final class LocalFsStore(root: String) extends ObjectStore {
   * SLEEP seconds, SLEEP += 1, recurse forever. We keep the linear ramp but
   * bound the attempts (the reference's unbounded recursion is a stack
   * overflow in waiting) and inject the sleeper for tests.
+  *
+  * The ramp guards the connect/provision step only. `put` goes to the
+  * delegate once: the uploader's ≤5 attempts per row (bulkupload.py:187-202)
+  * are the one put-retry layer, so a key that always fails costs 5 puts,
+  * not 5 × `maxConnectAttempts`.
   */
 final class RetryingStore(
     delegate: ObjectStore,
@@ -69,7 +74,7 @@ final class RetryingStore(
 
   override def ensureContainer(): Unit = withReconnect(delegate.ensureContainer())
   override def put(key: String, bytes: Array[Byte]): Unit =
-    withReconnect(delegate.put(key, bytes))
+    delegate.put(key, bytes)
 }
 
 /** Test double: fails the first `failTimes` puts of matching keys — used

@@ -40,14 +40,14 @@ class ReportsSpec extends AnyFunSuite with TempDirs {
     val sleeps = scala.collection.mutable.ArrayBuffer[Long]()
     var calls = 0
     val flaky = new graft.sink.ObjectStore {
-      override def ensureContainer(): Unit = ()
-      override def put(k: String, b: Array[Byte]): Unit = {
+      override def ensureContainer(): Unit = {
         calls += 1
         if (calls <= 3) throw new java.io.IOException(s"auth fail $calls")
       }
+      override def put(k: String, b: Array[Byte]): Unit = ()
     }
     new RetryingStore(flaky, maxConnectAttempts = 10, sleeper = sleeps += _)
-      .put("k", Array[Byte](1))
+      .ensureContainer()
     assert(calls == 4)
     assert(sleeps.toSeq == Seq(1000L, 2000L, 3000L)) // SLEEP += 1 each failure
   }
@@ -55,14 +55,14 @@ class ReportsSpec extends AnyFunSuite with TempDirs {
   test("RetryingStore rethrows after maxConnectAttempts (no infinite recursion)") {
     var calls = 0
     val dead = new graft.sink.ObjectStore {
-      override def ensureContainer(): Unit = ()
-      override def put(k: String, b: Array[Byte]): Unit = {
+      override def ensureContainer(): Unit = {
         calls += 1; throw new java.io.IOException("down")
       }
+      override def put(k: String, b: Array[Byte]): Unit = ()
     }
     val ex = intercept[java.io.IOException] {
       new RetryingStore(dead, maxConnectAttempts = 3, sleeper = _ => ())
-        .put("k", Array[Byte](1))
+        .ensureContainer()
     }
     assert(ex.getMessage == "down")
     assert(calls == 3)

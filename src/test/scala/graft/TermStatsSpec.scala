@@ -979,8 +979,7 @@ class TermStatsSpec extends AnyFunSuite {
 
   test("bpeLearnAuto on a wide-vocabulary corpus: the default dial " +
       "routes to the driver loop, the forced distributed route stays " +
-      "merge-identical on the shared prefix, and the state-footprint " +
-      "probe reports consistent structural sizes (r13 dial evidence)") {
+      "merge-identical on the shared prefix (r13 dial evidence)") {
     val docs = SynthCorpus.wideVocabDocs(spark, 30000, 2000L, 60)
     val auto = TermStats.bpeLearnAuto(docs, 12)
     assert(auto.size == 12)
@@ -990,22 +989,14 @@ class TermStatsSpec extends AnyFunSuite {
     // (the big-corpus route), reached by forcing the dial over
     assert(TermStats.bpeLearnAuto(docs, 6, driverMaxWords = 1L)
       == auto.take(6))
-    // the footprint probe's structural sizes on a hand corpus:
-    // abab×3 -> pairs (a,b)×2,(b,a); abc×2 -> (a,b),(b,c)
-    val (_, n, pcN, occK, occI, heapN) = TermStats.trainerStateFootprint(
-      Array(("abab", 3L), ("abc", 2L)))
-    assert(n == 2L)
-    assert(pcN == 3L && heapN == 3L, "P0 seeds the heap once per pair")
-    assert(occK == 3L && occI == 4L,
-      "occ index: (a,b)->{0,1}, (b,a)->{0}, (b,c)->{1}")
   }
 
   test("driver-local trainer at depth: 1,000 real merges on the " +
       "20k-word wide-vocabulary corpus are bit-identical to an " +
       "independent full-recount reference, and to the distributed " +
       "incremental loop at the depth it can afford in a spec") {
-    // the same deterministic corpus TrainerBench's long-run mode
-    // trains (SCALE_r11 §3); the driver corpus exhausts at 89 merges,
+    // the wide-vocabulary corpus of the 1,000- and 30,000-merge runs in
+    // SCALE_r12 §3a; the driver corpus exhausts at 89 merges,
     // so depth evidence needs this one's pair diversity
     val docs = SynthCorpus.wideVocabDocs(spark, 20000, 5000L, 60)
     // word counts recomputed INDEPENDENTLY from the collected text —
@@ -1024,8 +1015,8 @@ class TermStatsSpec extends AnyFunSuite {
     assert(local == want,
       "delta/lazy-heap maintenance drifted from the full recount")
     // distributed incremental ≡ local at 40 rounds (0.4 s/round of
-    // scheduler latency bounds what a spec should spend — TrainerBench
-    // long-run mode carries the full-depth distributed equality)
+    // scheduler latency bounds what a spec should spend; SCALE_r12 §3a
+    // records the distributed equality at 1,000 merges)
     assert(TermStats.bpeLearnAuto(docs, 40, driverMaxWords = 1L)
       == want.take(40))
   }
@@ -1071,7 +1062,7 @@ class TermStatsSpec extends AnyFunSuite {
     // the reference twin symbol-for-symbol at both depths.
     val words = vocab.collect().map(_.getString(0))
     for (n <- Seq(1000, 5000)) {
-      val m = TermStats.syntheticMerges(n)
+      val m = SynthCorpus.syntheticMerges(n)
       val fused = m.map { case (a, b) => (a, b, a + b) }.toArray
       val maxLen = fused.foldLeft(0)((x, f) => math.max(x, f._3.length))
       words.foreach { w =>
@@ -1081,7 +1072,7 @@ class TermStatsSpec extends AnyFunSuite {
     }
     // the full DISTRIBUTED path at 5,000 merges: one mapPartitions node
     // regardless of merge count — completes, deterministic, lossless.
-    val m5k = TermStats.syntheticMerges(5000)
+    val m5k = SynthCorpus.syntheticMerges(5000)
     val rows = TermStats.bpeApplyScaled(docs, m5k, BpeMode.Char).collect()
     assert(rows.nonEmpty)
     val again = TermStats.bpeApplyScaled(docs, m5k, BpeMode.Char).collect()
@@ -1123,7 +1114,7 @@ class TermStatsSpec extends AnyFunSuite {
       // operand: (a, b</w>) can only fuse at a word's end, (ab, c</w>)
       // chains a plain fusion into a marker-terminated one — the two
       // shapes a learned eow table is made of
-      val m = TermStats.syntheticMerges(n).zipWithIndex.map {
+      val m = SynthCorpus.syntheticMerges(n).zipWithIndex.map {
         case ((a, b), i) =>
           if (i % 2 == 1) (a, b + TermStats.EowMarker) else (a, b)
       }

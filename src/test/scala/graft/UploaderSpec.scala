@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.sink.{FlakyStore, LocalFsStore, Uploader}
+import graft.sink.{FlakyStore, LocalFsStore, RetryingStore, Uploader}
 import java.nio.file.{Files, Paths}
 
 class UploaderSpec extends AnyFunSuite with TempDirs {
@@ -46,6 +46,21 @@ class UploaderSpec extends AnyFunSuite with TempDirs {
     assert(!Files.exists(Paths.get(root, "dead.txt")))
   }
 
+  test("RetryingStore adds no put retries under the uploader: an always-failing " +
+      "key costs exactly 5 puts and no reconnect sleeps") {
+    val root = tmp()
+    FlakyStore.counts.clear()
+    UploaderSpec.sleeps.set(0)
+    val pending = Seq((1L, "dead.txt", "x".getBytes)).toDS()
+    val res = Uploader.upload(pending,
+      () => new RetryingStore(new FlakyStore(root, 99, "dead"),
+        sleeper = _ => { UploaderSpec.sleeps.incrementAndGet(); () }), 1)
+      .collect()
+    assert(!res(0).ok && res(0).attempts == 5)
+    assert(FlakyStore.counts.get("dead.txt") == 5)
+    assert(UploaderSpec.sleeps.get == 0)
+  }
+
   test("counters track uploaded/failed like the reference's Value counters") {
     val root = tmp()
     FlakyStore.counts.clear()
@@ -70,4 +85,10 @@ class UploaderSpec extends AnyFunSuite with TempDirs {
     val lines = spark.read.text(log).count()
     assert(lines == 2)
   }
+}
+
+object UploaderSpec {
+  /** Reconnect sleeps seen by the stores the executors build (local mode
+    * shares this JVM). */
+  val sleeps = new java.util.concurrent.atomic.AtomicInteger()
 }
