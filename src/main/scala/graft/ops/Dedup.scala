@@ -858,11 +858,6 @@ object Dedup {
       val next =
         if (round % checkpointEvery == 0) stepped.localCheckpoint()
         else { val c = stepped.cache(); c.count(); c }
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round=$round changedPrev=$changed " +
-          s"planNodes=${stepped.queryExecution.logical.collect { case _ => 1 }.sum} " +
-          s"nextPlan=${next.queryExecution.logical.getClass.getSimpleName}/" +
-          s"${next.queryExecution.logical.collect { case _ => 1 }.sum}")
       changed = acc.value
       toRelease += next
       lastCached = next

@@ -37,22 +37,19 @@ object Scale {
     * Manifest.fromDocuments use) the RESULT frame is cached and
     * materialized here and the intermediate sorted RDD is released
     * immediately — the data is never stored twice. With the default, the
-    * intermediate stays pinned so the returned lazy frame stays cheap,
-    * and is released when the owning session ends ([[SessionCleanup]]);
-    * callers that know when they are done use [[assignIdsByRangeCounted]]
-    * and release it themselves.
+    * intermediate stays persisted so the returned lazy frame stays cheap;
+    * `persist` registers it with Spark's ContextCleaner, which drops it
+    * once the returned frame is unreachable. Callers that know when they
+    * are done use [[assignIdsByRangeCounted]] and release it themselves.
     */
   def assignIdsByRange(df: DataFrame, key: String, idCol: String = "id",
       partitions: Int = 0, cacheResult: Boolean = false): DataFrame = {
     val AssignedIds(out, _, release) = assignIdsByRangeCounted(df, key, idCol, partitions)
-    val spark = df.sparkSession
     if (cacheResult) {
       out.cache()
       out.count() // materialize the id'd frame, then drop the intermediate
       release()
-      SessionCleanup.onEnd(spark) { out.unpersist(blocking = false) }
-    } else {
-      SessionCleanup.onEnd(spark) { release() }
+      SessionCleanup.onEnd(df.sparkSession) { out.unpersist(blocking = false) }
     }
     out
   }

@@ -2119,15 +2119,13 @@ object Similarity {
     })
   )
 
-  /** Registered-key IVF-dedup dials, env-overridable so bench/scale runs
-    * can sweep them without code edits. Production sizing: candidate mass
+  /** Registered-key IVF-dedup dials. Production sizing: candidate mass
     * is Σ|list|² ≈ m²·n²/nlist at fixed nlist — grow nlist ∝ √n to keep
-    * per-list size (and thus candidate mass per vector) constant; the
-    * defaults suit the sf0.01 gate corpus (~2k vectors). */
-  private[graft] def ivfDedupNlist: Int =
-    sys.env.getOrElse("SPARK_GRAFT_IVF_NLIST", "16").toInt
-  private[graft] def ivfDedupMemberships: Int =
-    sys.env.getOrElse("SPARK_GRAFT_IVF_MEMBERSHIPS", "2").toInt
+    * per-list size (and thus candidate mass per vector) constant (the
+    * dedup_embedding_ivf_auto key); these values suit the sf0.01 gate
+    * corpus (~2k vectors). */
+  private[graft] val ivfDedupNlist: Int = 16
+  private[graft] val ivfDedupMemberships: Int = 2
 
   /** Shared CTE chain for the cosine-component clustering oracles
     * (requires WITH RECURSIVE at the call site): `labs` carries

@@ -464,7 +464,7 @@ object Streams {
     * unbounded state across batches. The model (merge table) rides a
     * broadcast; works unchanged on a batch frame (the spec's equality
     * harness runs it both ways). In every [[BpeMode]] it is the live
-    * twin of the batch scaled apply in that mode: the mode splits the
+    * twin of the batch apply in that mode: the mode splits the
     * words ([[BpeMode.streamWords]]) and sets the greedy encoder's
     * marker, nothing else changes. */
   def encodeStream(docs: DataFrame,
@@ -479,7 +479,7 @@ object Streams {
         it.flatMap { case (id, text) =>
           val words = mode.streamWords(text)
           // Empty/whitespace-only docs are DROPPED, matching the batch
-          // twin exactly: bpeApplyScaled's inner join + groupBy over
+          // twin exactly: bpeApplyPairs' inner join + groupBy over
           // the exploded token stream never produces a row for a doc
           // with zero non-empty tokens, and the stream ≡ batch
           // row-for-row guarantee must hold on such docs too

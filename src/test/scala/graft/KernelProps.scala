@@ -180,10 +180,11 @@ object KernelProps extends Properties("graft.kernels") {
     }
   }
 
-  // --- scaled BPE encoder vs the literal-replace reference ----------
-  // The reference IS the expression chain's semantics (left-to-right
-  // non-overlapping literal replace on the doubled-space string, scan
-  // resuming after each replacement), built over CODE POINTS so a
+  // --- greedy BPE encoder vs the literal-replace reference ----------
+  // The reference IS BPE apply's literal-replace definition, the one the
+  // DuckDB oracles replay (left-to-right non-overlapping literal replace
+  // on the doubled-space string, scan resuming after each
+  // replacement), built over CODE POINTS so a
   // supplementary char is one symbol — the property pins
   // bpeGreedyEncode against it for arbitrary words and arbitrary merge
   // tables, including merges whose operands never occur, repeat

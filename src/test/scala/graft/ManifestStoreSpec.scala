@@ -27,23 +27,26 @@ class ManifestStoreSpec extends AnyFunSuite with TempDirs {
     assert(stray.isEmpty, stray.mkString(","))
   }
 
-  test("retained generations: swap(retain) keeps readable history bounded " +
-      "at retain snapshots; vacuum prunes to keep, never touching current") {
-    val root = tempDir("graft-manifest-gen")
+  test("a swap that crashed between its two renames is rolled forward: " +
+      "the completed snapshot reads back, and the next swap sweeps the " +
+      "leftovers") {
+    val root = tempDir("graft-manifest-crash")
     def snap(n: Int) =
       (1 to n).map(i => (i.toLong, s"p$i", false)).toDF("id", "path", "uploaded")
-    for (n <- 1 to 4) ManifestStore.swap(snap(n), root, retain = 2)
-    // 4 swaps with retain=2: history holds exactly 2 generations
-    val gens = ManifestStore.generations(root)
-    assert(gens.size == 2, gens.mkString(","))
-    // newest retained generation is the PREVIOUS current (3 rows), and
-    // history stays directly readable — the time-travel contract
-    assert(spark.read.parquet(gens.head.toString).count() == 3)
-    assert(ManifestStore.read(spark, root).count() == 4)
-    // vacuum to zero: history gone, current untouched
-    assert(ManifestStore.vacuum(root, keep = 0) == 2)
-    assert(ManifestStore.generations(root).isEmpty)
-    assert(ManifestStore.read(spark, root).count() == 4)
+    ManifestStore.swap(snap(1), root)
+    // replay swap's steps up to a crash after the FIRST rename: the new
+    // snapshot is fully written, `current` is renamed away, and the
+    // rename of _tmp into current never happens
+    snap(2).write.parquet(s"$root/_tmp_7")
+    java.nio.file.Files.move(java.nio.file.Paths.get(root, "current"),
+      java.nio.file.Paths.get(root, "_old_7"))
+    // an unrelated half-written snapshot from an even earlier crash
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "_tmp_3"))
+    assert(ManifestStore.exists(root))
+    assert(ManifestStore.read(spark, root).count() == 2)
+    ManifestStore.swap(snap(3), root)
+    assert(ManifestStore.read(spark, root).count() == 3)
+    assert(new java.io.File(root).list().toSeq == Seq("current"))
   }
 
   test("uploaded-partitioned snapshot enables partition pruning for filter_pending") {

@@ -44,6 +44,15 @@ class ScaleSpec extends AnyFunSuite {
     assert(scans == 5, s"sorted partitions materialized $scans times, want 5")
   }
 
+  test("assignIdsByRange registers nothing for session end: repeated " +
+      "calls pin no sorted RDD until the session ends") {
+    val docs = (1 to 100).map(i => s"k$i").toDF("key")
+    val before = graft.ops.SessionCleanup.pending(spark)
+    for (_ <- 1 to 3)
+      assert(Scale.assignIdsByRange(docs, "key", partitions = 2).count() == 100L)
+    assert(graft.ops.SessionCleanup.pending(spark) == before)
+  }
+
   test("tokenize_vocab_ids' range-form vocab ids equal the global-window " +
       "form end-to-end") {
     val docs = Tables.documents(spark, TestSpark.sf0001)

@@ -33,8 +33,8 @@ class StreamsSpec extends AnyFunSuite with TempDirs {
       Seq((900001L, ""), (900002L, "   ")).toDF("doc_id", "text"))
     val merges = graft.ops.TermStats.bpeLearnIter(base, 10)
       .map { case (a, b, _) => (a, b) }
-    // the batch truth: the gated scaled-encode key's machinery
-    val want = graft.ops.TermStats.bpeApplyScaled(docs, merges, BpeMode.Char)
+    // the batch truth: the gated apply keys' machinery
+    val want = graft.ops.TermStats.bpeApplyPairs(docs, merges, BpeMode.Char)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getString(3))).toSeq
@@ -379,9 +379,9 @@ class StreamsSpec extends AnyFunSuite with TempDirs {
     val docs = Tables.documents(spark, TestSpark.sf0001)
     val pairs = graft.ops.TermStats.bpeLearnIter(docs, 10, eow = true)
       .map { case (a, b, _) => (a, b) }
-    // encode twin: stream ≡ the batch marker-mode scaled apply
+    // encode twin: stream ≡ the batch marker-mode apply
     val wantEnc = graft.ops.TermStats
-      .bpeApplyScaled(docs, pairs, BpeMode.Eow)
+      .bpeApplyPairs(docs, pairs, BpeMode.Eow)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getString(3))).toSeq
     val rows = docs.select("doc_id", "text").as[(Long, String)]
@@ -452,7 +452,7 @@ class StreamsSpec extends AnyFunSuite with TempDirs {
       .bpeLearnIter(graft.ops.TermStats.byteDocs(docs), 10)
       .map { case (a, b, _) => (a, b) }
     // encode twin: the STREAM takes raw text and does the remap itself
-    val wantEnc = graft.ops.TermStats.bpeApplyScaled(docs, pairs, BpeMode.Byte)
+    val wantEnc = graft.ops.TermStats.bpeApplyPairs(docs, pairs, BpeMode.Byte)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getString(3))).toSeq
     val rows = docs.select("doc_id", "text").as[(Long, String)]

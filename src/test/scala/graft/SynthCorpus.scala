@@ -30,13 +30,10 @@ object SynthCorpus {
       while (k >= 0) { cs(k) = ('a' + (x % 26)).toChar; x /= 26; k -= 1 }
       new String(cs)
     }
-    // the index half must be injective: 26⁴ covers 456,976 indexes; a
-    // BIG-vocabulary run (the r13 >4M-word crossover corpus) widens it
-    // to 26⁵ ≈ 11.8M — existing ≤456k callers keep the exact r11 words
-    val iw = if (nWords <= 456976) 4 else 5
-    require(nWords <= 11881376, s"wideVocabDocs caps at 26^5 words")
+    // the index half must be injective: 26⁴ covers 456,976 indexes
+    require(nWords <= 456976, s"wideVocabDocs caps at 26^4 words")
     val vocabArr = Array.tabulate(nWords)(i =>
-      b26f(i, iw) + b26f((i.toLong * 2654435761L) & 0xfffffL, 4))
+      b26f(i, 4) + b26f((i.toLong * 2654435761L) & 0xfffffL, 4))
     val bc = spark.sparkContext.broadcast(vocabArr)
     spark.range(nDocs).as[Long].mapPartitions { it =>
       val v = bc.value
@@ -57,13 +54,7 @@ object SynthCorpus {
     val letters = ('a' to 'z').map(_.toString)
     val l1 = for (a <- letters; b <- letters) yield (a, b)
     val l2 = for (a <- letters; b <- letters; c <- letters) yield (a + b, c)
-    // level 3 (r16): 4-char fusions push the ceiling past the ≥50k
-    // production depth the interchange loader is exercised at —
-    // built only when actually needed (456,976 tuples)
-    def l3 = for (a <- letters; b <- letters; c <- letters; d <- letters)
-      yield (a + b + c, d)
-    val base = l1 ++ l2
-    val all = if (n <= base.size) base else base ++ l3
+    val all = l1 ++ l2
     require(n <= all.size, s"syntheticMerges supports up to ${all.size}")
     all.take(n)
   }

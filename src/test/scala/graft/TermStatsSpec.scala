@@ -128,29 +128,22 @@ class TermStatsSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, TestSpark.sf0001)
     val merges = TermStats.bpeMerges(docs, 10)
     assert(merges.size == 10 && merges.forall(_.length == 2))
-    val vocab = docs
-      .select(explode(split(col("text"), " ")).as("word"))
-      .filter(length(col("word")) > 0).distinct()
-    val enc = vocab.select(col("word"),
-      TermStats.bpeEncodeExpr(col("word"), merges).as("enc"))
+    val encode = TermStats.greedyEncoder(
+      TermStats.charPairs(merges).toArray, BpeMode.Char)
+    val enc = corpusWords(docs).map(w => (w, encode(w)))
     // lossless: concatenating a word's symbols reproduces the word
-    assert(enc.filter(
-      regexp_replace(col("enc"), " ", "") =!= col("word")).count() == 0L)
+    enc.foreach { case (w, e) => assert(e.replace(" ", "") == w, w) }
     // the defining property of a completed merge round: after applying
     // the table, NO adjacent pair of single-char symbols equals any
     // merged pair — greedy replace consumed every occurrence, and later
     // rounds only create longer symbols, never new single-char
     // adjacencies.
-    val syms = enc.select(posexplode(split(col("enc"), " "))
-      .as(Seq("pos", "sym")), col("word"))
-    val adj = syms.alias("a").join(syms.alias("b"),
-        col("a.word") === col("b.word") &&
-          col("b.pos") === col("a.pos") + 1)
-      .select(col("a.sym").as("s1"), col("b.sym").as("s2"))
-      .filter(length(col("s1")) === 1 && length(col("s2")) === 1)
-      .select(concat(col("s1"), col("s2")).as("pair"))
-    val leftover = adj.filter(col("pair").isin(merges: _*)).count()
-    assert(leftover == 0L, s"unconsumed merge-pair adjacencies: $leftover")
+    val leftover = enc.toSeq.flatMap { case (_, e) =>
+      e.split(" ").sliding(2).collect {
+        case Array(a, b) if a.length == 1 && b.length == 1 => a + b
+      }
+    }.filter(merges.toSet)
+    assert(leftover.isEmpty, s"unconsumed merge-pair adjacencies: $leftover")
     // and the registered key's totals are consistent: symbols never
     // exceed tokens' character count, never undercut token count
     val out = TermStats.bpeApply(docs).collect()
@@ -165,12 +158,10 @@ class TermStatsSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, TestSpark.sf0001)
     val merges = TermStats.bpeMerges(docs, 10)
     // rebuild the id→symbol map exactly as the operator builds sym→id
-    val symVocab = docs
-      .select(explode(split(col("text"), " ")).as("word"))
-      .filter(length(col("word")) > 0).distinct()
-      .select(TermStats.bpeEncodeExpr(col("word"), merges).as("enc"))
-      .select(explode(split(col("enc"), " ")).as("sym")).distinct()
-      .orderBy("sym").collect().map(_.getString(0))
+    val encode = TermStats.greedyEncoder(
+      TermStats.charPairs(merges).toArray, BpeMode.Char)
+    val symVocab = corpusWords(docs).flatMap(w => encode(w).split(" "))
+      .distinct.sorted
     val out = TermStats.bpeIds(docs).collect()
     val decoded = out.map { r =>
       r.getLong(0) -> r.getString(2).split(" ")
@@ -199,21 +190,23 @@ class TermStatsSpec extends AnyFunSuite {
     assert(TermStats.bpeLearnIter(tiny, 2) ==
       Seq(("h", "e", 3L), ("t", "he", 3L)))
     // real corpus: re-derive every round's argmax INDEPENDENTLY — apply
-    // the first r merges with the generalized public encoder (the
-    // single-space trimmed form, a different code path from the
-    // training loop's double-space accumulator), recount adjacent
-    // pairs, and the argmax must be exactly the recorded (lhs, rhs, n).
+    // the first r merges with the greedy encoder (a different code
+    // path from the training loop's double-space accumulator), recount
+    // adjacent pairs, and the argmax must be exactly the recorded
+    // (lhs, rhs, n).
     val docs = Tables.documents(spark, TestSpark.sf0001)
     val learned = TermStats.bpeLearnIter(docs, 4)
     assert(learned.size == 4)
     val freq = docs.select(explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) >= 2)
       .groupBy("word").agg(count(lit(1)).as("cnt"))
+      .collect().map(r => (r.getString(0), r.getLong(1)))
     for (r <- 0 until 4) {
       val prefix = learned.take(r).map { case (a, b, _) => (a, b) }
-      val syms = split(
-        TermStats.bpeEncodePairsExpr(col("word"), prefix, BpeMode.Char), " ")
-      val top = freq.select(col("cnt"), syms.as("s"))
+      val encode = TermStats.greedyEncoder(prefix.toArray, BpeMode.Char)
+      val top = freq.toSeq.map { case (w, c) => (c, encode(w)) }
+        .toDF("cnt", "enc")
+        .select(col("cnt"), split(col("enc"), " ").as("s"))
         .filter(size(col("s")) >= 2)
         .select(col("cnt"), explode(transform(
           sequence(lit(1), size(col("s")) - 1),
@@ -228,17 +221,14 @@ class TermStatsSpec extends AnyFunSuite {
     }
     // lossless at full depth: applying all learned merges and deleting
     // spaces reproduces every word
-    val full = learned.map { case (a, b, _) => (a, b) }
-    val vocab = docs.select(explode(split(col("text"), " ")).as("word"))
-      .filter(length(col("word")) > 0).distinct()
-    assert(vocab.filter(regexp_replace(
-      TermStats.bpeEncodePairsExpr(col("word"), full, BpeMode.Char), " ", "")
-        =!= col("word")).count() == 0L)
+    val encode = TermStats.greedyEncoder(
+      learned.map { case (a, b, _) => (a, b) }.toArray, BpeMode.Char)
+    corpusWords(docs).foreach(w => assert(encode(w).replace(" ", "") == w, w))
   }
 
-  test("bpeGreedyEncode (scaled encoder) equals the expression chain " +
-      "on the learned table, and both bpeLearnAuto routes are " +
-      "bit-identical to the sequential loop") {
+  test("bpeGreedyEncode equals the literal-replace reference on the " +
+      "learned table, the apply reassembles it per doc, and both " +
+      "bpeLearnAuto routes are bit-identical to the sequential loop") {
     val docs = Tables.documents(spark, TestSpark.sf0001)
     // both routes match the recount at production settings (rounds=10):
     // the distributed incremental loop (dial forced to 1) — its
@@ -250,25 +240,28 @@ class TermStatsSpec extends AnyFunSuite {
     assert(TermStats.bpeLearnAuto(docs, 10,
       driverMaxWords = Long.MaxValue) == seqM)
     assert(TermStats.bpeLearnAuto(docs, 10) == seqM)
-    // scaled apply == expression-chain apply on the learned table
+    // the kernel equals the literal-replace reference on every corpus
+    // word, and the apply reassembles those encodings per doc in token
+    // order (empty docs emit no row)
     val pairs = seqM.map { case (a, b, _) => (a, b) }
-    val want = TermStats.bpeApplyPairs(docs, pairs, BpeMode.Char).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-      .toSeq
-    val got = TermStats.bpeApplyScaled(docs, pairs, BpeMode.Char).collect()
+    val encode = TermStats.greedyEncoder(pairs.toArray, BpeMode.Char)
+    corpusWords(docs).foreach(w =>
+      assert(encode(w) == refStringEncode(w, pairs), w))
+    val want = docs.select("doc_id", "text").collect().toSeq.flatMap { r =>
+      val ws = r.getString(1).split(" ").filter(_.nonEmpty)
+      val es = ws.map(refStringEncode(_, pairs))
+      if (ws.isEmpty) None
+      else Some((r.getLong(0), ws.length.toLong,
+        es.map(_.split(" ").length.toLong).sum, es.mkString(" ")))
+    }.sortBy(_._1)
+    val got = TermStats.bpeApplyPairs(docs, pairs, BpeMode.Char).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
       .toSeq
     assert(got == want)
     // supplementary chars: initial symbols are CODE POINTS (the
-    // expression chain's regexp_replace("(.)") consumes a surrogate
-    // pair whole) — a code-UNIT split would emit 4 symbols here
-    val emoji = "a😀b"
-    val viaExpr = Seq(Tuple1(emoji)).toDF("word")
-      .select(TermStats.bpeEncodePairsExpr(col("word"), Seq.empty,
-        BpeMode.Char).as("e"))
-      .collect().head.getString(0)
-    assert(viaExpr.split(" ").length == 3)
-    assert(TermStats.bpeGreedyEncode(emoji, Array.empty, 0) == viaExpr)
+    // trainers' regexp_replace("(.)") consumes a surrogate pair whole)
+    // — a code-UNIT split would emit 4 symbols here
+    assert(TermStats.bpeGreedyEncode("a😀b", Array.empty, 0) == "a 😀 b")
   }
 
   test("ids_unk: every enriched doc counts at least one UNK, the id " +
@@ -369,12 +362,8 @@ class TermStatsSpec extends AnyFunSuite {
     val pairs = seqM.map { case (a, b, _) => (a, b) }
     // encode property: exactly the final symbol carries the marker,
     // and the symbol concatenation is word + marker (lossless)
-    val enc = docs.select(explode(split(col("text"), " ")).as("word"))
-      .filter(length(col("word")) > 0).distinct().limit(200)
-      .select(col("word"),
-        TermStats.bpeEncodePairsExpr(col("word"), pairs, BpeMode.Eow)
-          .as("enc"))
-      .collect().map(r => (r.getString(0), r.getString(1)))
+    val enc = corpusWords(docs).take(200)
+      .map(w => (w, refStringEncode(w, pairs, TermStats.EowMarker)))
     assert(enc.nonEmpty)
     enc.foreach { case (w, e) =>
       val syms = e.split(" ")
@@ -382,7 +371,7 @@ class TermStatsSpec extends AnyFunSuite {
       assert(syms.init.forall(!_.contains(TermStats.EowMarker)), s"$w: $e")
       assert(syms.mkString("") == w + TermStats.EowMarker, s"$w: $e")
     }
-    // the scaled greedy encoder in marker mode == the expression chain
+    // the greedy encoder in marker mode == the marker-mode reference
     val fused = pairs.map { case (a, b) => (a, b, a + b) }.toArray
     val maxLen = fused.foldLeft(0)((m, f) => math.max(m, f._3.length))
     enc.foreach { case (w, e) =>
@@ -446,13 +435,9 @@ class TermStatsSpec extends AnyFunSuite {
       (a + b).forall(c => c >= 0x100 && c <= 0x1ff) })
     val pairs = seqM.map { case (a, b, _) => (a, b) }
     // encode property over byte words: lossless in byte-char space,
-    // and the scaled greedy encoder is bit-identical to the chain
-    val enc = bdocs.select(explode(split(col("text"), " ")).as("word"))
-      .filter(length(col("word")) > 0).distinct().limit(200)
-      .select(col("word"),
-        TermStats.bpeEncodePairsExpr(col("word"), pairs, BpeMode.Byte)
-          .as("enc"))
-      .collect().map(r => (r.getString(0), r.getString(1)))
+    // and the greedy encoder is bit-identical to the reference
+    val enc = corpusWords(bdocs).take(200)
+      .map(w => (w, refStringEncode(w, pairs)))
     assert(enc.nonEmpty)
     val fused = pairs.map { case (a, b) => (a, b, a + b) }.toArray
     val maxLen = fused.foldLeft(0)((m, f) => math.max(m, f._3.length))
@@ -1021,46 +1006,37 @@ class TermStatsSpec extends AnyFunSuite {
       == want.take(40))
   }
 
-  /** The literal string-replace twin of [[TermStats.bpeEncodePairsExpr]]
-    * — the EXACT semantics the expression chain compiles to
-    * (UTF8String.replace and java.lang.String.replace are both
-    * left-to-right non-overlapping literal replaces, scan resuming
-    * after each replacement), evaluated driver-side so it exists at
-    * merge counts the expression chain cannot reach: at 1,000 merges
-    * the Column→Expression conversion itself overflows the JVM stack
-    * (measured in this suite's environment r10) — the chain dies
-    * before the optimizer even sees it. */
+  /** BPE apply's literal string-replace definition — the semantics the
+    * DuckDB oracles replay: the word's CODE POINTS (the marker glued to
+    * the last) as a DOUBLE-space-joined string, each merge one
+    * left-to-right non-overlapping literal replace, scan resuming after
+    * each replacement. Evaluated driver-side, so it exists at any merge
+    * count; [[TermStats.bpeGreedyEncode]] must equal it. */
   private def refStringEncode(word: String,
-      merges: Seq[(String, String)]): String = {
-    var s = word.map(c => "  " + c).mkString + "  "
+      merges: Seq[(String, String)], marker: String = ""): String = {
+    var s = word.codePoints().toArray
+      .map(cp => "  " + new String(Character.toChars(cp))).mkString +
+      marker + "  "
     merges.foreach { case (a, b) =>
       s = s.replace(" " + a + "  " + b + " ", " " + a + b + " ")
     }
     s.replace("  ", " ").trim
   }
 
+  /** The distinct non-empty space-split words of `docs`' text, sorted. */
+  private def corpusWords(docs: org.apache.spark.sql.DataFrame): Array[String] =
+    docs.select(explode(split(col("text"), " ")).as("word"))
+      .filter(length(col("word")) > 0).distinct()
+      .collect().map(_.getString(0)).sorted
+
   test("scaled encoder at production merge counts: equality with the " +
       "string-replace reference at 1,000 and 5,000 merges, bounded-" +
       "plan completion, losslessness, determinism") {
     val docs = Tables.documents(spark, TestSpark.sf0001)
-    // sanity: the reference twin reproduces the expression chain at an
-    // expressible depth (the learned-table equality in the previous
-    // test already pins bpeApplyScaled == bpeApplyPairs end-to-end)
-    val m10 = TermStats.bpeLearnIter(docs, 4).map { case (a, b, _) => (a, b) }
-    val vocab = docs.select(explode(split(col("text"), " ")).as("word"))
-      .filter(length(col("word")) > 0).distinct()
-    vocab.select(col("word"),
-        TermStats.bpeEncodePairsExpr(col("word"), m10, BpeMode.Char)
-          .as("enc"))
-      .collect().foreach(r =>
-        assert(refStringEncode(r.getString(0), m10) == r.getString(1),
-          r.getString(0)))
-    // 1,000 and 5,000 merges: inexpressible as a plan (the 1,000-deep
-    // Column tree stack-overflows during conversion in this
-    // environment; the repo's earlier measurement pegs ~16k nodes as
-    // the optimizer ceiling elsewhere) — the scaled encoder matches
-    // the reference twin symbol-for-symbol at both depths.
-    val words = vocab.collect().map(_.getString(0))
+    // 1,000 and 5,000 merges: a chain of one Catalyst replace per merge
+    // stack-overflows near 1,000 — the greedy encoder matches the
+    // reference symbol-for-symbol at both depths.
+    val words = corpusWords(docs)
     for (n <- Seq(1000, 5000)) {
       val m = SynthCorpus.syntheticMerges(n)
       val fused = m.map { case (a, b) => (a, b, a + b) }.toArray
@@ -1070,12 +1046,13 @@ class TermStatsSpec extends AnyFunSuite {
           == refStringEncode(w, m), s"$n merges: $w")
       }
     }
-    // the full DISTRIBUTED path at 5,000 merges: one mapPartitions node
-    // regardless of merge count — completes, deterministic, lossless.
+    // every DISTRIBUTED stage at 5,000 merges: one mapPartitions encode
+    // node regardless of merge count — completes, deterministic,
+    // lossless.
     val m5k = SynthCorpus.syntheticMerges(5000)
-    val rows = TermStats.bpeApplyScaled(docs, m5k, BpeMode.Char).collect()
+    val rows = TermStats.bpeApplyPairs(docs, m5k, BpeMode.Char).collect()
     assert(rows.nonEmpty)
-    val again = TermStats.bpeApplyScaled(docs, m5k, BpeMode.Char).collect()
+    val again = TermStats.bpeApplyPairs(docs, m5k, BpeMode.Char).collect()
     assert(rows.map(_.toString).toSeq == again.map(_.toString).toSeq)
     val docText = docs.collect().map(r =>
       r.getAs[Long]("doc_id") -> r.getAs[String]("text")).toMap
@@ -1084,20 +1061,23 @@ class TermStatsSpec extends AnyFunSuite {
         .mkString("")
       assert(r.getString(3).replace(" ", "") == want, r.getLong(0))
     }
-  }
-
-  /** [[refStringEncode]]'s marker-mode twin: the eow expression chain
-    * glues the marker after the last code point's symbol text before
-    * the merge folds. */
-  private def refStringEncodeEow(word: String,
-      merges: Seq[(String, String)]): String = {
-    var s = word.codePoints().toArray
-      .map(cp => "  " + new String(Character.toChars(cp))).mkString +
-      TermStats.EowMarker + "  "
-    merges.foreach { case (a, b) =>
-      s = s.replace(" " + a + "  " + b + " ", " " + a + b + " ")
+    // the vocabulary: every applied symbol once, alphabetic dense ids,
+    // corpus counts
+    val symCount = rows.toSeq.flatMap(_.getString(3).split(" "))
+      .groupBy(identity).map { case (s, xs) => s -> xs.length.toLong }
+    val vocab = TermStats.bpeVocab(docs, m5k, BpeMode.Char).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+    assert(vocab.map(_._1).toSeq == (1L to vocab.length).toSeq)
+    assert(vocab.map(_._2).toSeq == symCount.keys.toSeq.sorted)
+    assert(vocab.map(v => v._2 -> v._3).toMap == symCount)
+    // the ids decode through that vocabulary to the applied symbols
+    val applied = rows.map(r => r.getLong(0) -> r.getString(3)).toMap
+    val ids = TermStats.bpeIdsTensor(docs, m5k).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](2)).toMap
+    assert(ids.keySet == applied.keySet)
+    ids.foreach { case (d, xs) =>
+      assert(xs.map(i => vocab(i.toInt - 1)._2).mkString(" ") == applied(d), d)
     }
-    s.replace("  ", " ").trim
   }
 
   test("scaled encoder at production depth in EOW mode (VERDICT r13 " +
@@ -1122,7 +1102,8 @@ class TermStatsSpec extends AnyFunSuite {
       val maxLen = fused.foldLeft(0)((x, f) => math.max(x, f._3.length))
       words.foreach { w =>
         assert(TermStats.bpeGreedyEncode(w, fused, maxLen,
-          eowMarker = TermStats.EowMarker) == refStringEncodeEow(w, m),
+          eowMarker = TermStats.EowMarker) ==
+          refStringEncode(w, m, TermStats.EowMarker),
           s"$n merges: $w")
       }
     }
