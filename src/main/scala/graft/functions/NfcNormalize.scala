@@ -74,9 +74,6 @@ object Nfc {
       java.text.Normalizer.Form.NFC))
   }
 
-  def nfc(c: Column): Column =
-    GraftBridge.column(NfcExpr(GraftBridge.expression(c)))
-
   /** Locale-pinned lowercase fused with NFC — what [[graft.ops.Text
     * .normalizeUnicode]] uses instead of Spark's default-locale
     * `lower()`. */

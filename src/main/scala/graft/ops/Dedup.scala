@@ -57,18 +57,6 @@ object Dedup {
         graft.functions.MinHashSig.minhash_sig(col("text"), k).as("sig"))
       .filter(col("sig").isNotNull)
 
-  /** The composed (explode shingles + k min-aggregates) form the native
-    * expression replaced — kept as the executable specification; DedupSpec
-    * asserts both produce identical signatures. */
-  private[graft] def minhashSignaturesComposed(docs: DataFrame, k: Int): DataFrame = {
-    val sh = shingles(docs)
-    val mins = (0 until k).map(i =>
-      min(xxhash64(lit(i), col("shingle"))).as(s"_m$i"))
-    sh.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"),
-        array((0 until k).map(i => col(s"_m$i")): _*).as("sig"))
-  }
-
   /** LSH banding: split the k-wide signature into `bands` buckets; docs
     * sharing any band bucket are near-dup candidates. */
   def minhashBands(sigs: DataFrame, k: Int, bands: Int): DataFrame = {
@@ -890,39 +878,13 @@ object Dedup {
     * hash → bit-vote partial aggregates (map-side combined). */
   def simhashReplicable(docs: DataFrame, bits: Int = 30): DataFrame =
     // native one-pass kernel (map-only, codegen'd) — same upgrade the
-    // production simhash got; the composed bit-vote form below is kept
-    // as the executable spec (equality-asserted in DedupSpec). The trim
+    // production simhash got; DedupSpec keeps the composed bit-vote form
+    // as the executable spec and asserts equality. The trim
     // filter matches the composed groupBy, which emits no row for
     // wordless docs.
     docs.filter(trim(col("text")) =!= "")
       .select(col("doc_id"),
         graft.functions.SimHash.simhash_rolling(col("text"), bits).as("simhash"))
-
-  private[graft] def simhashReplicableComposed(docs: DataFrame,
-      bits: Int = 30): DataFrame =
-    bitVoteFingerprint(docs,
-      w => graft.functions.RollingHash.rolling_hash(w), bits)
-
-  /** Shared bit-vote SimHash pipeline: explode words → per-word hash →
-    * ±1 vote per bit → sign-pack. Parameterized by the word-hash column
-    * so the production 64-bit form ([[simhashComposed]], xxhash64) and
-    * the 30-bit replicable form share one implementation. */
-  private def bitVoteFingerprint(docs: DataFrame,
-      hashOf: Column => Column, bits: Int): DataFrame = {
-    val wh = docs
-      .select(col("doc_id"), explode(wordsOf(col("text"))).as("word"))
-      .filter(length(col("word")) > 0)
-      .select(col("doc_id"), hashOf(col("word")).as("h"))
-    val votes = (0 until bits).map { j =>
-      sum(when(shiftright(col("h"), j).bitwiseAND(1) === 1, 1).otherwise(-1))
-        .as(s"v$j")
-    }
-    val voted = wh.groupBy("doc_id").agg(votes.head, votes.tail: _*)
-    val packed = (0 until bits).map { j =>
-      when(col(s"v$j") > 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
-    }.reduce(_.bitwiseOR(_))
-    voted.select(col("doc_id"), packed.as("simhash"))
-  }
 
   /** Hamming-close pairs at scale via bit-BLOCK candidate routing: split
     * the fingerprint into `maxHamming + 1` disjoint blocks — by
@@ -992,12 +954,6 @@ object Dedup {
     docs.filter(trim(col("text")) =!= "")
       .select(col("doc_id"),
         graft.functions.SimHash.simhash64(col("text")).as("simhash"))
-
-  /** The composed (explode + bit-vote aggregate) form the expression
-    * replaced — kept as the executable specification; DedupSpec asserts
-    * both produce identical fingerprints. */
-  private[graft] def simhashComposed(docs: DataFrame): DataFrame =
-    bitVoteFingerprint(docs, w => xxhash64(w), 64)
 
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

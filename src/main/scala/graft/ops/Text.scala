@@ -23,45 +23,33 @@ object Text {
   def tokenCount(text: Column): Column =
     regexp_count(text, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"))
 
-  private[ops] val stop = Seq("the", "a", "of", "and", "to", "in")
+  private[graft] val stop = Seq("the", "a", "of", "and", "to", "in")
 
   /** Stopword ratio — a standard cheap quality signal. Counting uses the
     * native [[graft.functions.WordSetCount]] expression (one compiled
     * pass; the size(filter(...)) composition evaluates interpreted —
-    * [[stopwordRatioComposed]] keeps it as the executable spec). */
+    * TextSpec keeps it as the executable spec). */
   def stopwordRatio(text: Column): Column = {
     val n = size(words(text))
     val nStop = graft.functions.WordSetCount.word_set_count(text, stop)
     when(n > 0, nStop.cast("double") / n).otherwise(lit(0.0))
   }
 
-  private[graft] def stopwordRatioComposed(text: Column): Column = {
-    val ws = words(text)
-    val n = size(ws)
-    val nStop = size(filter(ws, w => w.isInCollection(stop)))
-    when(n > 0, nStop.cast("double") / n).otherwise(lit(0.0))
-  }
-
   /** Per-language stopword hit counts → argmax language guess.
     * Deterministic tie-break: fixed language order (en,de,es,fr,zh). */
-  private val langStops: Seq[(String, Seq[String])] = Seq(
+  private[graft] val langStops: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "and", "of", "to", "is"),
     "de" -> Seq("der", "die", "und", "das", "ist"),
     "es" -> Seq("el", "la", "de", "que", "es"),
     "fr" -> Seq("le", "la", "et", "les", "est"),
     "zh" -> Seq("的", "是", "了", "在", "我"))
 
-  /** Native one-pass count ([[langScoreComposed]] is the interpreted
-    * HOF spec — langIdExpr evaluates five of these per document, so the
+  /** Native one-pass count (TextSpec keeps the interpreted HOF
+    * composition as its spec — langIdExpr evaluates five of these per document, so the
     * closure-per-word cost multiplied). */
   def langScore(text: Column, lang: String): Column =
     graft.functions.WordSetCount
       .word_set_count(text, langStops.toMap.apply(lang)).cast("long")
-
-  private[graft] def langScoreComposed(text: Column, lang: String): Column = {
-    val stops = langStops.toMap.apply(lang)
-    size(filter(words(text), w => w.isInCollection(stops))).cast("long")
-  }
 
   /** argmax over the fixed language order: first language whose score is
     * >= every other score. Mirrors the oracle SQL CASE chain exactly. */

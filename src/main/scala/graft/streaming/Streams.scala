@@ -61,10 +61,6 @@ object Streams {
   def slidingRate(events: DataFrame): DataFrame =
     EventWindows.sliding(events.withWatermark("ts", "10 minutes"))
 
-  /** Per-user session windows over the stream. */
-  def sessionize(events: DataFrame): DataFrame =
-    EventWindows.sessions(events.withWatermark("ts", "30 minutes"))
-
   /** Exactly-once-ish event dedup within the watermark
     * (stream_dedup_state). */
   def dedupEvents(events: DataFrame): DataFrame =
@@ -664,10 +660,12 @@ object Streams {
 
   /** STREAMING ANN-index ingest (r12) — FAISS `add()` on a stream: each
     * micro-batch of embeddings routes through the persisted artifact's
-    * FROZEN model and lands in the codes table via the IDEMPOTENT
-    * batch-stamped append, so a crash-redelivered batch is a no-op and
-    * the index never holds duplicate codes (effectively-once on
-    * foreachBatch's at-least-once channel — see
+    * current generation's FROZEN model and lands in that generation's
+    * codes table via the IDEMPOTENT batch-stamped append (a generation
+    * committed mid-batch takes the batch forward — copied on the same
+    * model, recoded on a new one), so a crash-redelivered batch is a
+    * no-op and the index never holds duplicate codes (effectively-once
+    * on foreachBatch's at-least-once channel — see
     * [[graft.ops.Similarity.appendToIvfPqIndexIdempotent]]). The
     * checkpoint dir resumes exactly where the last marker landed.
     * After any trigger completes, queries against the artifact see
@@ -698,8 +696,8 @@ object Streams {
     * ([[graft.ops.Similarity.deleteFromIvfPqIndexIdempotent]] — the
     * exact ingest protocol pointed at the tombstones dir), so a
     * crash-redelivered batch is a no-op, queries exclude the ids the
-    * moment the batch's marker lands, and the markers ride compaction
-    * per generation. Ordering vs re-ingest of the same id is the
+    * moment the batch's marker lands, and every newly committed
+    * generation carries the markers as its ledger. Ordering vs re-ingest of the same id is the
     * documented tombstone contract: the delete wins until the next
     * compaction (StreamsSpec pins stream-deleted ≡ batch-deleted,
     * redelivery no-op, and the delete-then-ingest ordering). */

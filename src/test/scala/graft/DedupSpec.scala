@@ -230,7 +230,7 @@ class DedupSpec extends AnyFunSuite {
     val docs = corpus.union(edge)
     val native = Dedup.simhashReplicable(docs)
       .as[(Long, Long)].collect().toMap
-    val composed = Dedup.simhashReplicableComposed(docs)
+    val composed = DedupRefs.simhashReplicableComposed(docs)
       .as[(Long, Long)].collect().toMap
     assert(native == composed)
     assert(!native.contains(9001L) && !native.contains(9002L))
@@ -240,14 +240,14 @@ class DedupSpec extends AnyFunSuite {
       "bit-for-bit (sf0.001 corpus + edge cases)") {
     val corpus = graft.model.Tables.documents(spark, TestSpark.sf0001)
     val viaExpr = Dedup.simhash(corpus).as[(Long, Long)].collect().toMap
-    val viaComposed = Dedup.simhashComposed(corpus).as[(Long, Long)].collect().toMap
+    val viaComposed = DedupRefs.simhashComposed(corpus).as[(Long, Long)].collect().toMap
     assert(viaExpr == viaComposed)
     assert(viaExpr.nonEmpty)
     // edge cases: repeated spaces, single word, unicode words
     val edge = Seq((1L, "a  b   c"), (2L, "solo"), (3L, "中文 词语 混合 content"))
       .toDF("doc_id", "text")
     val e1 = Dedup.simhash(edge).as[(Long, Long)].collect().toMap
-    val e2 = Dedup.simhashComposed(edge).as[(Long, Long)].collect().toMap
+    val e2 = DedupRefs.simhashComposed(edge).as[(Long, Long)].collect().toMap
     assert(e1 == e2)
   }
 
@@ -256,7 +256,7 @@ class DedupSpec extends AnyFunSuite {
     val corpus = graft.model.Tables.documents(spark, TestSpark.sf0001)
     val viaExpr = Dedup.minhashSignatures(corpus, 16)
       .as[(Long, Seq[Long])].collect().toMap
-    val viaComposed = Dedup.minhashSignaturesComposed(corpus, 16)
+    val viaComposed = DedupRefs.minhashSignaturesComposed(corpus, 16)
       .as[(Long, Seq[Long])].collect().toMap
     assert(viaExpr == viaComposed)
     assert(viaExpr.nonEmpty)
@@ -264,7 +264,7 @@ class DedupSpec extends AnyFunSuite {
     val edge = Seq((1L, "a b c"), (2L, "too short"),
       (3L, "x y z x y z x y z")).toDF("doc_id", "text")
     val e1 = Dedup.minhashSignatures(edge, 8).as[(Long, Seq[Long])].collect().toMap
-    val e2 = Dedup.minhashSignaturesComposed(edge, 8)
+    val e2 = DedupRefs.minhashSignaturesComposed(edge, 8)
       .as[(Long, Seq[Long])].collect().toMap
     assert(e1 == e2)
     assert(!e1.contains(2L))
@@ -637,5 +637,49 @@ class DedupSpec extends AnyFunSuite {
     assert(Dedup.prefixDuplicates(
       Seq((1L, "a" * 80), (2L, "b" * 80)).toDF("doc_id", "text"))
       .count() == 0)
+  }
+}
+
+/** The composed Spark-SQL forms the native dedup expressions replaced —
+  * kept as the executable specifications DedupSpec compares against. */
+private object DedupRefs {
+  import org.apache.spark.sql.{Column, DataFrame}
+
+  /** MinHash signatures as explode shingles + k min-aggregates. */
+  def minhashSignaturesComposed(docs: DataFrame, k: Int): DataFrame = {
+    val mins = (0 until k).map(i =>
+      min(xxhash64(lit(i), col("shingle"))).as(s"_m$i"))
+    Dedup.shingles(docs).groupBy("doc_id").agg(mins.head, mins.tail: _*)
+      .select(col("doc_id"),
+        array((0 until k).map(i => col(s"_m$i")): _*).as("sig"))
+  }
+
+  /** The 64-bit xxhash64 SimHash (Dedup.simhash). */
+  def simhashComposed(docs: DataFrame): DataFrame =
+    bitVoteFingerprint(docs, w => xxhash64(w), 64)
+
+  /** The 30-bit replicable SimHash (Dedup.simhashReplicable). */
+  def simhashReplicableComposed(docs: DataFrame,
+      bits: Int = 30): DataFrame =
+    bitVoteFingerprint(docs,
+      w => graft.functions.RollingHash.rolling_hash(w), bits)
+
+  /** Shared bit-vote SimHash pipeline: explode words → per-word hash →
+    * ±1 vote per bit → sign-pack. */
+  private def bitVoteFingerprint(docs: DataFrame,
+      hashOf: Column => Column, bits: Int): DataFrame = {
+    val wh = docs
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
+      .filter(length(col("word")) > 0)
+      .select(col("doc_id"), hashOf(col("word")).as("h"))
+    val votes = (0 until bits).map { j =>
+      sum(when(shiftright(col("h"), j).bitwiseAND(1) === 1, 1).otherwise(-1))
+        .as(s"v$j")
+    }
+    val voted = wh.groupBy("doc_id").agg(votes.head, votes.tail: _*)
+    val packed = (0 until bits).map { j =>
+      when(col(s"v$j") > 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
+    }.reduce(_.bitwiseOR(_))
+    voted.select(col("doc_id"), packed.as("simhash"))
   }
 }

@@ -9,6 +9,11 @@ class SimilaritySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  // every spec read of a persisted index goes through Similarity.IndexGen
+  private def genOf(dir: String) = Similarity.currentGen(spark, dir)
+  private def codesCount(dir: String): Long =
+    spark.read.parquet(genOf(dir).codes.toString).count()
+
   test("cosine of identical vectors is 1, orthogonal is 0") {
     val df = Seq(
       (Array(1f, 0f, 2f), Array(1f, 0f, 2f)),
@@ -226,9 +231,10 @@ class SimilaritySpec extends AnyFunSuite {
       Similarity.writeIvfPqIndex(emb, seeds, dir)
       // the artifact has all three tables, and codes cover the corpus
       val s2 = spark.newSession()
-      assert(s2.read.parquet(s"$dir/centroids").count() == 16L)
-      assert(s2.read.parquet(s"$dir/books").count() == 8L * 16L)
-      assert(s2.read.parquet(s"$dir/codes").count() == emb.count())
+      val gen = Similarity.currentGen(s2, dir)
+      assert(s2.read.parquet(gen.centroids.toString).count() == 16L)
+      assert(s2.read.parquet(gen.books.toString).count() == 8L * 16L)
+      assert(s2.read.parquet(gen.codes.toString).count() == emb.count())
       // the production contract: a LATER session loads the artifact
       // and must return the identical top-k — no memo, no in-session
       // state, only the parquet index + the corpus table for re-rank.
@@ -276,12 +282,11 @@ class SimilaritySpec extends AnyFunSuite {
       .createTempDirectory("graft-annappend-b").toString
     try {
       Similarity.writeIvfPqIndex(base, baseSeeds, dirA)
-      val beforeCodes = spark.read.parquet(s"$dirA/codes").count()
-      assert(beforeCodes == base.count())
+      assert(codesCount(dirA) == base.count())
       Similarity.appendToIvfPqIndex(spark, dirA, batch)
       // the merged codes table covers the full corpus exactly once,
       // and only files were ADDED (base codes untouched)
-      val codes = spark.read.parquet(s"$dirA/codes")
+      val codes = spark.read.parquet(genOf(dirA).codes.toString)
       assert(codes.count() == emb.count())
       assert(codes.select("n_id").distinct().count() == emb.count())
       // rebuild-from-scratch with the SAME frozen model
@@ -326,8 +331,7 @@ class SimilaritySpec extends AnyFunSuite {
           col("vec_id") < 10, 5)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getDouble(3))).toSeq
-      def parts() = new java.io.File(
-          Similarity.currentCodesPath(spark, dir)).listFiles()
+      def parts() = new java.io.File(genOf(dir).codes.toString).listFiles()
         .count(_.getName.endsWith(".parquet"))
       val before = topk()
       val filesBefore = parts()
@@ -339,23 +343,25 @@ class SimilaritySpec extends AnyFunSuite {
         col("vec_id") < 10, 5)
       Similarity.compactIvfPqIndexCodes(spark, dir)
       assert(parts() == 1)
-      // the pointer moved to generation 1; generation 0 is RETAINED
-      // one cycle as reader grace
-      assert(Similarity.currentCodesPath(spark, dir).endsWith("codes-v1"))
-      assert(new java.io.File(s"$dir/codes").exists(),
+      // generation 1 is committed; generation 0 is RETAINED one cycle
+      // as reader grace
+      assert(genOf(dir).n == 1)
+      assert(new java.io.File(
+          Similarity.IndexGen(dir, 0).codes.toString).exists(),
         "old generation must survive the swap for in-flight readers")
       assert(midReader.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getLong(2), r.getDouble(3))).toSeq == before,
         "a mid-compaction reader must succeed on the old generation")
-      assert(spark.read.parquet(
-        Similarity.currentCodesPath(spark, dir)).count() == emb.count())
+      assert(codesCount(dir) == emb.count())
       assert(topk() == before)
       // the NEXT compaction GC's generation 0 and retains generation 1
       Similarity.compactIvfPqIndexCodes(spark, dir)
-      assert(Similarity.currentCodesPath(spark, dir).endsWith("codes-v2"))
-      assert(!new java.io.File(s"$dir/codes").exists(),
+      assert(genOf(dir).n == 2)
+      assert(!new java.io.File(
+          Similarity.IndexGen(dir, 0).root.toString).exists(),
         "generation 0 is GC'd one full cycle after its retirement")
-      assert(new java.io.File(s"$dir/codes-v1").exists())
+      assert(new java.io.File(
+        Similarity.IndexGen(dir, 1).root.toString).exists())
       assert(topk() == before)
       val s2 = spark.newSession()
       val got2 = Similarity.ivfPqTopKFromIndex(s2, dir,
@@ -398,17 +404,14 @@ class SimilaritySpec extends AnyFunSuite {
       }
       // codes still hold the full corpus rows (delete is a tombstone,
       // not a rewrite) until compaction physically drops them
-      assert(spark.read.parquet(s"$dirA/codes").count() == emb.count())
+      assert(codesCount(dirA) == emb.count())
       Similarity.compactIvfPqIndexCodes(spark, dirA)
-      assert(spark.read.parquet(
-        Similarity.currentCodesPath(spark, dirA)).count() == live.count())
+      assert(codesCount(dirA) == live.count())
       // the NEW generation starts tombstone-free (the rows were folded
       // into its rewrite); the old generation's tombstones survive one
       // cycle beside its codes for in-flight readers
-      assert(!new java.io.File(
-        Similarity.currentTombstonesPath(spark, dirA)).exists())
-      assert(new java.io.File(
-          Similarity.currentCodesPath(spark, dirA)).listFiles()
+      assert(!new java.io.File(genOf(dirA).tombstones.toString).exists())
+      assert(new java.io.File(genOf(dirA).codes.toString).listFiles()
         .count(_.getName.endsWith(".parquet")) == 1)
       assert(topk(dirA) == delAnswer)
       // and a FRESH session answers the same from the compacted artifact
@@ -425,17 +428,20 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
-  test("compaction crash states SELF-HEAL: a crash BEFORE the pointer " +
-      "swap leaves generation N current and intact (the half-written " +
-      "N+1 is swept on retry); a crash MID-pointer-swap (pointer " +
-      "parked as .old) resolves to the old generation and restores " +
-      "the pointer file") {
+  test("generation commit crash boundaries: (a) a written but " +
+      "unmarked generation, (b) a marker created before GC ran, (c) a " +
+      "GC stopped mid-delete and (d) a rebuild rolled back by its " +
+      "post-commit straggler check all answer as if nothing crashed, " +
+      "and the next commit leaves only the current and previous " +
+      "generation dirs") {
     val d = TestSpark.sf0001
     val emb = Tables.embeddings(spark, d)
     val live = emb.filter(!Similarity.deletePred)
     val seeds = Similarity.ivfCentroids(emb, 16, 0)
     val dir = java.nio.file.Files
-      .createTempDirectory("graft-anncrash-spec").toString
+      .createTempDirectory("graft-anncommit-spec").toString
+    val aside = java.nio.file.Files
+      .createTempDirectory("graft-anncommit-aside").toString
     try {
       Similarity.writeIvfPqIndex(emb, seeds, dir, writeResiduals = false)
       Similarity.deleteFromIvfPqIndex(spark, dir,
@@ -446,42 +452,70 @@ class SimilaritySpec extends AnyFunSuite {
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getDouble(3))).toSeq
       val want = topk()
-      // crash BEFORE the swap: a half-written codes-v1 exists but the
-      // pointer never moved — readers resolve generation 0 untouched
-      val halfV1 = new java.io.File(s"$dir/codes-v1")
-      assert(halfV1.mkdirs())
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/codes-v1/part-garbage.parquet"),
-        Array[Byte](1, 2, 3))
-      assert(Similarity.currentCodesPath(spark, dir).endsWith("/codes"))
-      assert(topk() == want,
-        "crash-before-swap must leave generation N answering correctly")
-      // the RETRY sweeps the half-written target and completes
+      def file(p: org.apache.hadoop.fs.Path) = new java.io.File(p.toString)
+      def genDirs(): Set[Int] = new java.io.File(dir).listFiles().toSet
+        .filter(_.isDirectory).map(_.getName)
+        .collect { case s"gen-$n" => n.toInt }
+      def afterNextCommit(n: Int): Unit = {
+        assert(genOf(dir).n == n)
+        assert(topk() == want)
+        assert(genDirs() == Set(n - 1, n), genDirs().toString)
+      }
+      // (a) generation 1 written in full, the writer dies before its
+      // marker: generation 0 stays current
+      intercept[IllegalStateException] {
+        Similarity.compactIvfPqIndexCodes(spark, dir, onBeforeSwap = () =>
+          throw new IllegalStateException("crash before the marker"))
+      }
+      assert(file(Similarity.IndexGen(dir, 1).codes).exists())
+      assert(!file(Similarity.IndexGen(dir, 1).marker).exists())
+      assert(genOf(dir).n == 0)
+      assert(topk() == want)
       Similarity.compactIvfPqIndexCodes(spark, dir)
-      assert(Similarity.currentCodesPath(spark, dir).endsWith("codes-v1"))
-      assert(spark.read.parquet(
-        Similarity.currentCodesPath(spark, dir)).count() == live.count())
-      assert(topk() == want)
-      // crash MID-pointer-swap (LEGACY pre-r14 park layout — the r14
-      // overwriting rename never parks, so this state can only come
-      // from an old crash): readers resolve THROUGH the parked file
-      // without renaming it (a reader-side rename raced the writer's
-      // own, ADVICE r13 #2); the park is swept by the NEXT swap
-      val ptr = new java.io.File(s"$dir/codes_gen")
-      val old = new java.io.File(s"$dir/codes_gen.old")
-      assert(ptr.renameTo(old), "crash simulation rename failed")
-      assert(!ptr.exists() && old.exists())
-      assert(Similarity.currentCodesPath(spark, dir).endsWith("codes-v1"))
-      assert(!ptr.exists() && old.exists(),
-        "readers must resolve the parked pointer WITHOUT touching it")
-      assert(topk() == want)
-      // the next swap (another compaction) heals the legacy park state
+      afterNextCommit(1)
+      // (b) generation 2's marker is created but its GC never ran:
+      // generation 0 is back beside its marker
+      val g0 = Similarity.IndexGen(dir, 0)
+      org.apache.commons.io.FileUtils.copyDirectory(file(g0.root),
+        new java.io.File(aside, "gen-0"))
       Similarity.compactIvfPqIndexCodes(spark, dir)
-      assert(Similarity.currentCodesPath(spark, dir).endsWith("codes-v2"))
-      assert(ptr.exists() && !old.exists(),
-        "the next swap must sweep the legacy parked pointer")
+      org.apache.commons.io.FileUtils.moveDirectory(
+        new java.io.File(aside, "gen-0"), file(g0.root))
+      assert(file(g0.marker).createNewFile())
+      assert(genDirs() == Set(0, 1, 2))
+      assert(genOf(dir).n == 2)
       assert(topk() == want)
-    } finally graft.ops.SessionCleanup.deleteRecursively(dir)
+      Similarity.compactIvfPqIndexCodes(spark, dir)
+      afterNextCommit(3)
+      // (c) GC stopped inside generation 1: its marker is gone and only
+      // part of its dir (the model) is left
+      org.apache.commons.io.FileUtils.copyDirectory(
+        file(Similarity.IndexGen(dir, 2).model),
+        file(Similarity.IndexGen(dir, 1).model))
+      assert(genOf(dir).n == 3)
+      assert(topk() == want)
+      Similarity.compactIvfPqIndexCodes(spark, dir)
+      afterNextCommit(4)
+      // (d) a stamped ingest lands between the rebuild's final check and
+      // its commit: the post-commit check deletes generation 5's marker
+      // and aborts, leaving generation 4 current
+      val ex = intercept[IllegalStateException] {
+        Similarity.rebuildIvfPqIndex(spark, dir, live, seeds,
+          onAfterFinalCheck = () => assert(
+            Similarity.appendToIvfPqIndexIdempotent(spark, dir,
+              emb.filter(col("vec_id") % 5 === 0), 31L)))
+      }
+      assert(ex.getMessage.contains("quiesce"))
+      assert(file(Similarity.IndexGen(dir, 5).root).exists())
+      assert(!file(Similarity.IndexGen(dir, 5).marker).exists())
+      assert(genOf(dir).n == 4)
+      // the retry defines the corpus again (`live`), superseding the batch
+      Similarity.rebuildIvfPqIndex(spark, dir, live, seeds)
+      afterNextCommit(5)
+    } finally {
+      graft.ops.SessionCleanup.deleteRecursively(dir)
+      graft.ops.SessionCleanup.deleteRecursively(aside)
+    }
   }
 
   test("concurrent stamped ingest during compaction is ADOPTED, not " +
@@ -500,22 +534,19 @@ class SimilaritySpec extends AnyFunSuite {
       val batchN = batch.count()
       val baseN = emb.count() - batchN
       // the batch lands INSIDE compaction's worst race window (the
-      // test seam runs between the final pre-swap adoption pass and
-      // the pointer swap)
+      // test seam runs between the pre-commit adoption passes)
       Similarity.compactIvfPqIndexCodes(spark, dir, onBeforeSwap = () =>
         assert(Similarity.appendToIvfPqIndexIdempotent(spark, dir,
           batch, 42L)))
-      assert(Similarity.currentCodesPath(spark, dir).endsWith("codes-v1"))
+      assert(genOf(dir).n == 1)
       // rows adopted: the new generation answers with the batch present
-      assert(spark.read.parquet(
-        Similarity.currentCodesPath(spark, dir)).count()
+      assert(codesCount(dir)
         == baseN + batchN,
         "the racing batch's rows must ride into the new generation")
       // marker adopted: redelivery of the same batchId is a no-op
       assert(!Similarity.appendToIvfPqIndexIdempotent(spark, dir,
         batch, 42L))
-      assert(spark.read.parquet(
-        Similarity.currentCodesPath(spark, dir)).count()
+      assert(codesCount(dir)
         == baseN + batchN)
     } finally graft.ops.SessionCleanup.deleteRecursively(dir)
   }
@@ -560,8 +591,7 @@ class SimilaritySpec extends AnyFunSuite {
         pred, 5)
       // REBUILD: full corpus, retrained (full-seed) model
       Similarity.rebuildIvfPqIndex(spark, dirR, emb, fullSeeds)
-      assert(Similarity.currentCodesPath(spark, dirR)
-        .endsWith("codes-v1"))
+      assert(genOf(dirR).n == 1)
       // equals the from-scratch build — model AND codes are new
       assert(topkOf(dirR, pred) == want)
       // ...and the answers genuinely changed (the base model differs),
@@ -579,12 +609,10 @@ class SimilaritySpec extends AnyFunSuite {
         .filter(col("n_id") % 7 === 3)
         .count() == 0)
       // pre-rebuild ingest marker carried: redelivery is a no-op
-      val liveN = spark.read.parquet(
-        Similarity.currentCodesPath(spark, dirR)).count()
+      val liveN = codesCount(dirR)
       assert(!Similarity.appendToIvfPqIndexIdempotent(spark, dirR,
         emb.filter(col("vec_id") % 5 === 0), 7L))
-      assert(spark.read.parquet(
-        Similarity.currentCodesPath(spark, dirR)).count() == liveN)
+      assert(codesCount(dirR) == liveN)
       // CONCURRENT stamped ingest in the pre-swap window: the rebuild
       // must ABORT (old-model codes cannot be adopted), leave the
       // index answering on the current generation, and succeed on a
@@ -605,13 +633,37 @@ class SimilaritySpec extends AnyFunSuite {
       // them: rebuild semantics, pinned here
       Similarity.rebuildIvfPqIndex(spark, dirR,
         emb.filter(!Similarity.deletePred), fullSeeds)
-      assert(Similarity.currentCodesPath(spark, dirR)
-        .endsWith("codes-v2"))
+      assert(genOf(dirR).n == 2)
       assert(topkOf(dirR, pred) == want)
     } finally {
       graft.ops.SessionCleanup.deleteRecursively(dirT)
       graft.ops.SessionCleanup.deleteRecursively(dirR)
     }
+  }
+
+  test("residual top-k from a REBUILT index never answers with the " +
+      "pre-rebuild model: it throws, or equals the in-session residual " +
+      "composition on the new centroids") {
+    val d = TestSpark.sf0001
+    val emb = Tables.embeddings(spark, d)
+    val newSeeds = Similarity.ivfCentroids(emb, 16, 0)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-annresid-rebuild").toString
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).toSeq
+    try {
+      Similarity.writeIvfPqIndex(emb, Similarity.ivfCentroids(emb, 8, 0),
+        dir)
+      Similarity.rebuildIvfPqIndex(spark, dir, emb, newSeeds)
+      val want = rows(Similarity.ivfPqResidualTopK(emb, newSeeds,
+        col("vec_id") < 10, 5))
+      try {
+        val got = rows(Similarity.ivfPqResidualTopKFromIndex(spark, dir,
+          emb, col("vec_id") < 10, 5))
+        assert(got == want, "answered with the pre-rebuild model")
+      } catch { case _: IllegalArgumentException => () }
+    } finally graft.ops.SessionCleanup.deleteRecursively(dir)
   }
 
   test("a crashed rebuild's orphan half-model cannot be captured by a " +
@@ -629,20 +681,21 @@ class SimilaritySpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getDouble(3))).toSeq
       val want = topk()
-      // the exact crash state: a rebuild wrote its versioned model
-      // dirs (v1 — garbage here) and died before writing codes or
-      // swapping the pointer
-      val cen1 = new java.io.File(s"$dir/centroids-v1")
-      val books1 = new java.io.File(s"$dir/books-v1")
+      // the exact crash state: a rebuild wrote generation 1's model
+      // (garbage here) and died before writing codes or its marker
+      val g1 = Similarity.IndexGen(dir, 1)
+      val cen1 = new java.io.File(g1.centroids.toString)
+      val books1 = new java.io.File(g1.books.toString)
       assert(cen1.mkdirs() && books1.mkdirs())
-      java.nio.file.Files.write(java.nio.file.Paths.get(
-        s"$dir/centroids-v1/part-garbage.parquet"), Array[Byte](9))
-      // a compaction now bumps codes to v1 — without the sweep,
-      // modelVersionFor(1) would resolve the orphan half-model
+      val garbage = java.nio.file.Paths.get(
+        s"$cen1/part-garbage.parquet")
+      java.nio.file.Files.write(garbage, Array[Byte](9))
+      // a compaction now writes generation 1 — without the sweep, its
+      // model copy would land beside the orphan half-model
       Similarity.compactIvfPqIndexCodes(spark, dir)
-      assert(Similarity.currentCodesPath(spark, dir).endsWith("codes-v1"))
-      assert(!cen1.exists() && !books1.exists(),
-        "the orphan model dirs must be swept by the generation bump")
+      assert(genOf(dir).n == 1)
+      assert(!java.nio.file.Files.exists(garbage),
+        "the orphan model files must be swept by the generation bump")
       assert(topk() == want,
         "answers must stay on the intact base model")
     } finally graft.ops.SessionCleanup.deleteRecursively(dir)
@@ -675,13 +728,13 @@ class SimilaritySpec extends AnyFunSuite {
             col("vec_id") < 10, 5)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getDouble(3))).toSeq
-      // the ingest's marker lands, THEN a rebuild swaps the pointer
+      // the ingest's marker lands, THEN a rebuild commits generation 1
       // before the ingest's re-check. If the rebuild's snapshot SAW
       // the marker it carries it forward and the batch is SUPERSEDED
       // (content = whatever the rebuild corpus says — the documented
       // contract); the recode branch exists for the marker the rebuild
-      // NEVER saw (landed after its post-swap re-check — the lost-
-      // batch spec below covers the pre-swap window the re-check
+      // NEVER saw (landed after its post-commit re-check — the lost-
+      // batch spec below covers the pre-commit window the re-check
       // closes), so the spec simulates exactly that state by dropping
       // the carried marker after the rebuild: the ingest must then
       // detect the model change and RECODE itself into generation 1
@@ -690,22 +743,20 @@ class SimilaritySpec extends AnyFunSuite {
         batch, 13L, onAfterMarker = () => {
           Similarity.rebuildIvfPqIndex(spark, dirR, base, fullSeeds)
           val carried = new java.io.File(
-            s"$dirR/codes-v1/_ingest-${"%020d".format(13)}")
+            s"${Similarity.IndexGen(dirR, 1).codes}/_ingest-" +
+              "%020d".format(13))
           assert(carried.exists(), "fixture: the snapshot carried it")
           assert(carried.delete())
         }))
-      assert(Similarity.currentCodesPath(spark, dirR)
-        .endsWith("codes-v1"))
+      assert(genOf(dirR).n == 1)
       assert(topk(dirR) == topk(dirT),
         "the recoded batch must answer through the NEW model exactly " +
           "as a plain post-rebuild append")
       // and the batch's marker protects it in the new generation too
-      val n = spark.read.parquet(
-        Similarity.currentCodesPath(spark, dirR)).count()
+      val n = codesCount(dirR)
       assert(!Similarity.appendToIvfPqIndexIdempotent(spark, dirR,
         batch, 13L))
-      assert(spark.read.parquet(
-        Similarity.currentCodesPath(spark, dirR)).count() == n)
+      assert(codesCount(dirR) == n)
     } finally {
       graft.ops.SessionCleanup.deleteRecursively(dirR)
       graft.ops.SessionCleanup.deleteRecursively(dirT)
@@ -729,11 +780,11 @@ class SimilaritySpec extends AnyFunSuite {
     try {
       Similarity.writeIvfPqIndex(base,
         Similarity.ivfCentroids(emb, 8, 0), dir, writeResiduals = false)
-      // the r13 form checked stragglers only BEFORE the swap: this
+      // the r13 form checked stragglers only BEFORE the commit: this
       // ingest's marker lands after that check, and its own post-marker
-      // pointer re-check ALSO runs pre-swap (the seam runs before
-      // writeGenPointer), so the ingest side observes nothing and does
-      // not recode — the interleaving r13 lost silently
+      // generation re-check ALSO runs pre-commit (the seam runs before
+      // the commit marker), so the ingest side observes nothing and
+      // does not recode — the interleaving r13 lost silently
       var landed = false
       val ex = intercept[IllegalStateException] {
         Similarity.rebuildIvfPqIndex(spark, dir, base, fullSeeds,
@@ -746,22 +797,20 @@ class SimilaritySpec extends AnyFunSuite {
         "fixture: the full ingest cycle must complete inside the window")
       // loud, and names the batch
       assert(ex.getMessage.contains("ingest-" + "%020d".format(21)))
-      // the pointer rolled BACK: the generation holding the batch is
+      // the commit rolled BACK: the generation holding the batch is
       // current again
-      assert(Similarity.currentCodesPath(spark, dir).endsWith("/codes"))
-      assert(spark.read.parquet(
-        Similarity.currentCodesPath(spark, dir)).count() == emb.count(),
+      assert(genOf(dir).n == 0)
+      assert(codesCount(dir) == emb.count(),
         "the batch's rows must be live in the resolved generation")
-      // the marker is durable where the pointer resolves: redelivery
+      // the marker is durable in the current generation: redelivery
       // no-ops
       assert(!Similarity.appendToIvfPqIndexIdempotent(spark, dir,
         batch, 21L))
       // and a quiesced retry succeeds, sweeping the superseded
       // generation the aborted swap left as reader grace
       Similarity.rebuildIvfPqIndex(spark, dir, emb, fullSeeds)
-      assert(Similarity.currentCodesPath(spark, dir).endsWith("codes-v1"))
-      assert(spark.read.parquet(
-        Similarity.currentCodesPath(spark, dir)).count() == emb.count())
+      assert(genOf(dir).n == 1)
+      assert(codesCount(dir) == emb.count())
     } finally graft.ops.SessionCleanup.deleteRecursively(dir)
   }
 
@@ -1019,50 +1068,5 @@ class SimilaritySpec extends AnyFunSuite {
     val got = Similarity.bruteForceTopK(emb, col("vec_id") === 0, 5)
       .orderBy("rnk").select("n_id").as[Long].collect()
     assert(got.toSeq == expectTop)
-  }
-
-  test("currentGenName (r15 ADVICE #1 tightened in r16): with no " +
-      "v-generations an absent pointer resolves gen 0 immediately; " +
-      "with a v-generation HOLDING DATA an unresolvable pointer THROWS " +
-      "whether or not gen 0 also holds data (post-one-compaction gen-0 " +
-      "grace copy is indistinguishable from crash-before-first-swap); " +
-      "a data-free v-dir plus gen-0 data still resolves gen 0") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-genptr").toString
-    try {
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // plain generation-0 state: no pointer, no v-dirs
-      assert(Similarity.currentGenName(fs, dir) == "codes")
-      // a v-generation with data, no pointer, no gen-0 data: the
-      // pointer is LOST — guessing would read a stale generation
-      assert(new java.io.File(s"$dir/codes-v1").mkdirs())
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/codes-v1/part-0.parquet"),
-        Array[Byte](1))
-      val e = intercept[IllegalStateException] {
-        Similarity.currentGenName(fs, dir)
-      }
-      assert(e.getMessage.contains("refusing to guess"))
-      // gen-0 data appears WHILE codes-v1 still holds data: this is
-      // exactly the post-one-compaction reader-grace state (gen-0 dir
-      // survives until the NEXT compaction's GC) with a lost pointer —
-      // resolving gen 0 here would silently serve the STALE generation,
-      // so it must throw too (ADVICE r15 #1).
-      assert(new java.io.File(s"$dir/codes").mkdirs())
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/codes/part-0.parquet"),
-        Array[Byte](1))
-      val e2 = intercept[IllegalStateException] {
-        Similarity.currentGenName(fs, dir)
-      }
-      assert(e2.getMessage.contains("refusing to guess"))
-      // …but a v-dir that holds NO data files (compaction crashed
-      // before writing anything) is the true crash-before-first-swap
-      // shape: gen 0 is the sole data and remains the intact answer.
-      java.nio.file.Files.delete(
-        java.nio.file.Paths.get(s"$dir/codes-v1/part-0.parquet"))
-      assert(Similarity.currentGenName(fs, dir) == "codes")
-    } finally graft.ops.SessionCleanup.deleteRecursively(dir)
   }
 }

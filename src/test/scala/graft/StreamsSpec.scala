@@ -338,21 +338,24 @@ class StreamsSpec extends AnyFunSuite with TempDirs {
             r.getDouble(3))).toSeq
       assert(topk(dirS) == topk(dirB))
       val fullCount = emb.count()
-      assert(spark.read.parquet(s"$dirS/codes").count() == fullCount)
+      def codesCount() = spark.read.parquet(
+        Similarity.currentGen(spark, dirS).codes.toString).count()
+      assert(codesCount() == fullCount)
       // redelivery: batchId 0 already carries its marker — no-op
       assert(!Similarity.appendToIvfPqIndexIdempotent(spark, dirS,
         emb.filter(col("vec_id") % 10 === 0), 0L))
-      assert(spark.read.parquet(s"$dirS/codes").count() == fullCount)
+      assert(codesCount() == fullCount)
       // crash-before-marker: drop batch 1's marker (its part files
       // remain — the exact mid-move/pre-marker state); the retry must
       // sweep them, redo the batch, and land at the same count
-      val codesDir = new java.io.File(s"$dirS/codes")
+      val codesDir = new java.io.File(
+        Similarity.currentGen(spark, dirS).codes.toString)
       val marker = codesDir.listFiles()
         .filter(f => f.getName.startsWith("_ingest-")).minBy(_.getName)
       assert(marker.delete())
       assert(Similarity.appendToIvfPqIndexIdempotent(spark, dirS,
         emb.filter(col("vec_id") % 10 === 0), 0L))
-      assert(spark.read.parquet(s"$dirS/codes").count() == fullCount)
+      assert(codesCount() == fullCount)
       assert(topk(dirS) == topk(dirB))
       // COMPACTION preserves the idempotence ledger: the rewrite folds
       // the ingested rows in, and a post-compaction redelivery must
@@ -360,8 +363,7 @@ class StreamsSpec extends AnyFunSuite with TempDirs {
       Similarity.compactIvfPqIndexCodes(spark, dirS)
       assert(!Similarity.appendToIvfPqIndexIdempotent(spark, dirS,
         emb.filter(col("vec_id") % 10 === 0), 0L))
-      assert(spark.read.parquet(
-        Similarity.currentCodesPath(spark, dirS)).count() == fullCount)
+      assert(codesCount() == fullCount)
       assert(topk(dirS) == topk(dirB))
     } finally {
       graft.ops.SessionCleanup.deleteRecursively(dirS)
@@ -601,13 +603,13 @@ class StreamsSpec extends AnyFunSuite with TempDirs {
       Similarity.compactIvfPqIndexCodes(spark, dirS)
       assert(topk(dirS) == want)
       val liveN = emb.filter(!deadPred).count()
-      assert(spark.read.parquet(
-        Similarity.currentCodesPath(spark, dirS)).count() == liveN)
+      def codesCount() = spark.read.parquet(
+        Similarity.currentGen(spark, dirS).codes.toString).count()
+      assert(codesCount() == liveN)
       // ...and an ingest AFTER the compaction genuinely re-adds
       assert(Similarity.appendToIvfPqIndexIdempotent(spark, dirS,
         emb.filter(deadPred), 101L))
-      assert(spark.read.parquet(
-        Similarity.currentCodesPath(spark, dirS)).count() == emb.count())
+      assert(codesCount() == emb.count())
       assert(Similarity.ivfPqTopKFromIndex(spark, dirS, emb,
           col("vec_id") < 10, 5)
         .filter(col("n_id") % 7 === 3).count() > 0,

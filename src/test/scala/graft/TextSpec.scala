@@ -55,8 +55,8 @@ class TextSpec extends AnyFunSuite {
         langs.map(l => Text.langScore(col("text"), l).as(s"s_$l")): _*)
       .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
     val composed = docs.select(col("doc_id") +:
-        round(Text.stopwordRatioComposed(col("text")), 9).as("sr") +:
-        langs.map(l => Text.langScoreComposed(col("text"), l).as(s"s_$l")): _*)
+        round(TextRefs.stopwordRatioComposed(col("text")), 9).as("sr") +:
+        langs.map(l => TextRefs.langScoreComposed(col("text"), l).as(s"s_$l")): _*)
       .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
     assert(native == composed)
     // sanity on the edge rows: occurrences (not distinct words) count
@@ -297,5 +297,24 @@ class TextSpec extends AnyFunSuite {
     out.filter(_._1 % 5 == 0).foreach { case (id, n, nRaw) =>
       assert(n >= 2 && nRaw >= 2, s"group $id")
     }
+  }
+}
+
+/** The interpreted higher-order-function forms the native
+  * WordSetCount-based Text operators replaced — kept as the executable
+  * specifications TextSpec compares against. */
+private object TextRefs {
+  import org.apache.spark.sql.Column
+
+  def stopwordRatioComposed(text: Column): Column = {
+    val ws = Text.words(text)
+    val n = size(ws)
+    val nStop = size(filter(ws, w => w.isInCollection(Text.stop)))
+    when(n > 0, nStop.cast("double") / n).otherwise(lit(0.0))
+  }
+
+  def langScoreComposed(text: Column, lang: String): Column = {
+    val stops = Text.langStops.toMap.apply(lang)
+    size(filter(Text.words(text), w => w.isInCollection(stops))).cast("long")
   }
 }
