@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Manifest, PathFns}
 import graft.sink.{LocalFsStore, ManifestStore, ObjectStore, Reports, RetryingStore, Uploader}
@@ -34,19 +34,10 @@ object BulkUpload {
       parallelism: Int, cutoff: Option[String] = None,
       mkStore: String => ObjectStore =
         root => new RetryingStore(new LocalFsStore(root))): Summary = {
-    import spark.implicits._
-
     val m = ManifestStore.read(spark, manifestRoot)
-    val keyCol = {
-      val cut = cutoff.map(c => PathFns.pathCutoff(col("path"), c))
-        .getOrElse(col("path"))
-      PathFns.stripLeadingSlash(cut)
-    }
-    val pending = Manifest.filterPending(m)
-      .select(col("id"), keyCol.as("key"), col("path"))
-      .as[(Long, String, String)]
-    val o = Uploader.step(m, pending, readFile, () => mkStore(storeRoot),
-      parallelism, ManifestStore.swap(_, manifestRoot),
+    val o = Uploader.step(m, pending(m, cutoff), readFile,
+      () => mkStore(storeRoot), parallelism,
+      ManifestStore.swap(_, manifestRoot),
       Uploader.writeErrorLog(_, s"$manifestRoot/.upload.error.log"))
 
     Reports.overwrite(s"$manifestRoot/.upload.out",
@@ -57,11 +48,24 @@ object BulkUpload {
       totalUploaded = o.uploaded, total = o.total)
   }
 
+  /** The pending `(id, key, path)` rows of manifest `m` (WHERE
+    * uploaded=0, bulkupload.py:357), keyed by the cutoff-prefix and
+    * leading-slash rules. */
+  private[graft] def pending(m: DataFrame,
+      cutoff: Option[String]): Dataset[(Long, String, String)] = {
+    import m.sparkSession.implicits._
+    val cut = cutoff.map(c => PathFns.pathCutoff(col("path"), c))
+      .getOrElse(col("path"))
+    Manifest.filterPending(m)
+      .select(col("id"), PathFns.stripLeadingSlash(cut).as("key"), col("path"))
+      .as[(Long, String, String)]
+  }
+
   /** open(path, 'rb'), bulkupload.py:39 — executor-side, inside each put
     * attempt. The listing's paths are not URI-escaped (`file:/a b/c
     * d%.txt`): Hadoop's Path parses them as written, java.net.URI would
     * throw. */
-  private val readFile: String => Array[Byte] = path =>
+  private[graft] val readFile: String => Array[Byte] = path =>
     java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
       new org.apache.hadoop.fs.Path(path).toUri.getPath))
 

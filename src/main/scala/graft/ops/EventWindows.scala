@@ -6,10 +6,16 @@ import org.apache.spark.sql.functions._
 import graft.model.Tables
 
 /** Stream-shaped window aggregations (SURVEY §2.12), expressed as batch
-  * queries over `events` so they are DuckDB-oracle-checkable. The
-  * streaming runner (`graft.streaming.Streams`) applies the same
-  * transformations to a `readStream` DataFrame — logic is shared, only the
-  * source/sink differ (this is the Structured Streaming unification).
+  * queries over `events` so they are DuckDB-oracle-checkable.
+  *
+  * One definition per operator, for both modes: each operator with a
+  * live form declares its own event-time watermark and returns an
+  * unsorted frame; its registry key adds the ORDER BY, and
+  * `graft.streaming.Streams` runs the same function on a `readStream`
+  * source. On a batch frame the watermark is a no-op — the analyzer's
+  * `EliminateEventTimeWatermark` drops it — so the batch plan is the
+  * one an unwatermarked operator would have (StreamsSpec pins that for
+  * every such key).
   *
   * Grounding: the reference's `set_speed` poll loop (bulkupload.py:363-387)
   * is a 5-second tumbling rate; `.out` progress files are an
@@ -18,18 +24,23 @@ import graft.model.Tables
 object EventWindows {
 
   /** events per 5-second tumbling window (epoch-aligned, as Spark's
-    * `window()` and DuckDB's `time_bucket` both are). */
+    * `window()` and DuckDB's `time_bucket` both are). Live, it is the
+    * uploads-per-5s rate with a 10 min watermark. */
   def tumbling(events: DataFrame): DataFrame =
-    events.groupBy(window(col("ts"), "5 seconds"))
+    events.withWatermark("ts", "10 minutes")
+      .groupBy(window(col("ts"), "5 seconds"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("w_start"), col("n"))
 
   /** 60-second window sliding every 5 seconds (smoothed rate).
     * Single-aggregation form — the one a watermarked STREAM can run
     * (chained aggregations are not allowed in append mode); its Expand
-    * emits 12 rows per EVENT. */
+    * emits 12 rows per EVENT. Live, stragglers more than 10 min behind
+    * the watermark are dropped (stream_watermark_late models that drop;
+    * the reference counts whatever arrives). */
   def sliding(events: DataFrame): DataFrame =
-    events.groupBy(window(col("ts"), "60 seconds", "5 seconds"))
+    events.withWatermark("ts", "10 minutes")
+      .groupBy(window(col("ts"), "60 seconds", "5 seconds"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("w_start"), col("n"))
 
@@ -115,28 +126,46 @@ object EventWindows {
       .select(col("window.start").as("w_start"), col("n"))
   }
 
-  /** Purchase→click attribution within a lookback window — the batch
-    * twin of a stream-stream INTERVAL JOIN (two watermarked streams
-    * joined on user_id with a time-bound condition; StreamsSpec runs
-    * the live form on the same data and asserts equality). Shape at
-    * 100 TB: an equi-join keyed on user_id — both sides shuffle (or
-    * co-partition from the source) by key, never a cartesian; the time
-    * bound lives IN the join condition, which is what lets the stream
-    * engine bound its state to `lookback` worth of clicks per key
-    * instead of the whole history. */
-  def intervalJoin(events: DataFrame, lookbackHours: Int = 6): DataFrame = {
+  /** Hours a click may precede the purchase it is attributed to. */
+  private val lookbackHours = 6
+
+  /** Purchase→click pairs within the lookback window: a stream-stream
+    * INTERVAL JOIN (two watermarked streams joined on user_id with a
+    * time-bound condition). `joinType` "inner" keeps matched pairs;
+    * "left" also keeps each UNATTRIBUTED purchase as a NULL-click row
+    * (conversion without a preceding click is the organic-traffic line
+    * of a marketing report). Shape at 100 TB: an equi-join keyed on
+    * user_id — both sides shuffle (or co-partition from the source) by
+    * key, never a cartesian; the time bound lives IN the join
+    * condition, which is what lets the stream engine bound its state to
+    * `lookback` worth of clicks per key instead of the whole history.
+    *
+    * Watermarks: purchases `lookback`, clicks `lookback` + 1 h. With
+    * exactly `lookback` on the click side, click state could be evicted
+    * at the bound and a purchase arriving up to 1 h late relative to its
+    * clicks would silently miss pairs; with the 1 h disorder allowance,
+    * completeness holds for any purchase no more than 1 h disordered
+    * against its click stream, and a later one may under-join (emitted ⊆
+    * batch still holds). Live, a left-outer NULL-click row is
+    * watermark-finalized: it is emitted only once the click watermark
+    * passes the end of the purchase's lookback window (before that a
+    * matching click could still arrive), so near the final watermark
+    * unmatched purchases emit nothing — the subset bound StreamsSpec
+    * asserts. */
+  def intervalJoin(events: DataFrame, joinType: String = "inner"): DataFrame = {
     val p = events.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id"),
         col("ts").as("p_ts"))
+      .withWatermark("p_ts", s"$lookbackHours hours")
     val c = events.filter(col("event_type") === "click")
       .select(col("event_id").as("c_id"), col("user_id").as("c_user"),
         col("ts").as("c_ts"))
+      .withWatermark("c_ts", s"${lookbackHours + 1} hours")
     p.join(c, col("user_id") === col("c_user") &&
         col("c_ts") >= col("p_ts") - expr(s"INTERVAL $lookbackHours HOURS") &&
-        col("c_ts") < col("p_ts"))
+        col("c_ts") < col("p_ts"), joinType)
       .select(col("p_id"), col("user_id"), col("p_ts"), col("c_id"),
         col("c_ts"))
-      .orderBy("p_id", "c_id")
   }
 
   /** LINEAR (equal-credit) attribution — completes the attribution
@@ -147,9 +176,8 @@ object EventWindows {
     * PARTITIONED by purchase id (no global sort); the credit sum is a
     * keyed day aggregate with map-side partials. Rounding at 6 dp
     * absorbs the sum's reassociation noise (~1e-13 relative). */
-  def linearAttribution(events: DataFrame,
-      lookbackHours: Int = 6): DataFrame = {
-    val pairs = intervalJoin(events, lookbackHours)
+  def linearAttribution(events: DataFrame): DataFrame = {
+    val pairs = intervalJoin(events)
     val perPurchase = Window.partitionBy("p_id")
     pairs.withColumn("n_clicks", count(lit(1)).over(perPurchase))
       .withColumn("credit", lit(1.0) / col("n_clicks"))
@@ -261,32 +289,6 @@ object EventWindows {
       .orderBy("variant")
   }
 
-  /** LEFT-OUTER interval join — [[intervalJoin]] keeping UNATTRIBUTED
-    * purchases as NULL-click rows (the rows a marketing report actually
-    * needs: conversion WITHOUT a preceding click is the organic-traffic
-    * line). Same equi-join shape and state story; in the streaming form
-    * the unmatched row can only be emitted once the click-side
-    * watermark passes the end of the purchase's lookback window — the
-    * outer-join-finalization semantics Structured Streaming ties to the
-    * watermark ([[graft.streaming.Streams.intervalJoinLeftStream]] is
-    * the live twin, StreamsSpec asserts the equivalence). NULL ordering
-    * is pinned explicitly (nulls first, matching the oracle's
-    * NULLS FIRST) so the row order hashes identically. */
-  def intervalJoinLeft(events: DataFrame, lookbackHours: Int = 6): DataFrame = {
-    val p = events.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_id"), col("user_id"),
-        col("ts").as("p_ts"))
-    val c = events.filter(col("event_type") === "click")
-      .select(col("event_id").as("c_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-    p.join(c, col("user_id") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr(s"INTERVAL $lookbackHours HOURS") &&
-        col("c_ts") < col("p_ts"), "left")
-      .select(col("p_id"), col("user_id"), col("p_ts"), col("c_id"),
-        col("c_ts"))
-      .orderBy(col("p_id"), col("c_id").asc_nulls_first)
-  }
-
   /** FIRST-TOUCH attribution: each purchase attributed to the user's
     * EARLIEST click inside the lookback window — the marketing twin of
     * [[intervalJoin]] (all pairs) and join_asof (latest-before). Reuses
@@ -296,9 +298,8 @@ object EventWindows {
     * deterministic). The aggregate is keyed by purchase id, so the
     * per-key state is one struct, map-side combinable; no window over
     * the pair stream. */
-  def firstTouchAttribution(events: DataFrame,
-      lookbackHours: Int = 6): DataFrame =
-    intervalJoin(events, lookbackHours)
+  def firstTouchAttribution(events: DataFrame): DataFrame =
+    intervalJoin(events)
       .groupBy(col("p_id"), col("user_id"), col("p_ts"))
       .agg(min(struct(col("c_ts"), col("c_id"))).as("ft"))
       .select(col("p_id"), col("user_id"), col("p_ts"),
@@ -332,25 +333,34 @@ object EventWindows {
     * aggregation per (user, day) — the shuffle carries user-day rows,
     * never the event stream — then a tiny per-day rollup. Ordering uses
     * the per-day MIN timestamp per stage (strict <, so a stage must
-    * happen strictly after the previous one to count). Factored out so
-    * the streaming twin ([[graft.streaming.Streams.funnelDailyStream]])
-    * and the registered batch query share one definition. */
+    * happen strictly after the previous one to count).
+    *
+    * Both levels are windowed aggregations on a 1 h watermark, so the
+    * stream runs them as two CHAINED stateful operators: a (user, day)
+    * row finalizes when the watermark passes its day, then re-windows
+    * into the per-day rollup. The second groupBy windows ON the first's
+    * window column (window-of-window), which is what lets the engine
+    * chain the two. Day windows are epoch-aligned, i.e. the UTC date
+    * `to_date(ts)` gives under the UTC session. */
   def funnelDaily(events: DataFrame): DataFrame = {
-    val e = events.filter(col("event_type").isin("view", "click", "purchase"))
+    val e = events.withWatermark("ts", "1 hour")
+      .filter(col("event_type").isin("view", "click", "purchase"))
     val perUserDay = e
-      .groupBy(col("user_id"), to_date(col("ts")).as("day"))
+      .groupBy(window(col("ts"), "1 day"), col("user_id"))
       .agg(
         min(when(col("event_type") === "view", col("ts"))).as("t_v"),
         min(when(col("event_type") === "click", col("ts"))).as("t_c"),
         min(when(col("event_type") === "purchase", col("ts"))).as("t_p"))
-    perUserDay.groupBy(col("day"))
+    perUserDay
+      .groupBy(window(col("window"), "1 day"))
       .agg(
         sum(when(col("t_v").isNotNull, 1L).otherwise(0L)).as("n_view"),
         sum(when(col("t_c") > col("t_v"), 1L).otherwise(0L))
           .as("n_click_after_view"),
         sum(when(col("t_c") > col("t_v") && col("t_p") > col("t_c"), 1L)
           .otherwise(0L)).as("n_purchase_funnel"))
-      .orderBy("day")
+      .select(col("window.start").cast("date").as("day"),
+        col("n_view"), col("n_click_after_view"), col("n_purchase_funnel"))
   }
 
   /** Day-0 cohort retention matrix — the product-analytics staple over
@@ -421,12 +431,13 @@ object EventWindows {
       .orderBy("day")
   }
 
-  /** Windowed (1 h wide / 15 min slide) per-type counts in the
-    * SINGLE-aggregation form a watermarked stream can run (chained
-    * aggregations are not allowed in append mode). The live twin
-    * ([[graft.streaming.Streams.trendingStream]]) runs exactly this. */
+  /** Windowed (1 h wide / 15 min slide) per-type counts on a 30 min
+    * watermark, the live form of [[trendingTopK]]: the top-k rank over
+    * each window's handful of type rows runs downstream of the sink,
+    * since a rank window cannot chain onto a streaming aggregation in
+    * append mode. */
   def trendingCounts(events: DataFrame): DataFrame =
-    events
+    events.withWatermark("ts", "30 minutes")
       .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("w_start"), col("event_type"), col("n"))
@@ -484,19 +495,22 @@ object EventWindows {
     * (six equal baseline counts) yields NULL z / false flag on both. */
   def anomalyZscore(events: DataFrame, trailing: Int = 6,
       zThreshold: Double = 2.0): DataFrame =
-    anomalyFromHourly(
-      events
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour"))
-        .agg(count(lit(1)).as("n")),
-      trailing, zThreshold)
+    anomalyFromHourly(hourlyCounts(events), trailing, zThreshold)
+
+  /** Per-(event_type, hour) counts on a 30 min watermark — the stage of
+    * [[anomalyZscore]] a stream runs. Hour windows are epoch-aligned,
+    * the same hours `date_trunc('hour', ts)` gives under the UTC
+    * session. */
+  def hourlyCounts(events: DataFrame): DataFrame =
+    events.withWatermark("ts", "30 minutes")
+      .groupBy(col("event_type"), window(col("ts"), "1 hour"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("event_type"), col("window.start").as("hour"), col("n"))
 
   /** The z-score stage of [[anomalyZscore]] over an ALREADY-hourly
-    * (event_type, hour, n) frame — split out so the live twin
-    * ([[graft.streaming.Streams.anomalyStream]]) can run the identical
-    * arithmetic downstream of its sink: a rank/frame window cannot chain
-    * onto a streaming aggregation in append mode (same constraint as
-    * trendingStream's top-k), so the stream emits the hourly counts and
-    * this stage scores them wherever they land. */
+    * (event_type, hour, n) frame. Live, it scores the rows
+    * [[hourlyCounts]] emitted, downstream of the sink: a frame window
+    * cannot chain onto a streaming aggregation in append mode. */
   def anomalyFromHourly(hourly: DataFrame, trailing: Int = 6,
       zThreshold: Double = 2.0): DataFrame = {
     val w = Window.partitionBy("event_type").orderBy("hour")
@@ -511,13 +525,15 @@ object EventWindows {
       .withColumn("is_anomaly", coalesce(abs(col("z")) > zThreshold,
         lit(false)))
       .select("event_type", "hour", "n", "mean_n", "sd_n", "z", "is_anomaly")
-      .orderBy("event_type", "hour")
   }
 
   /** Per-user session windows with a 30-minute gap; end = last event +
-    * gap, exactly Spark's session_window semantics. */
+    * gap, exactly Spark's session_window semantics. Live, on a 10 min
+    * watermark, append mode emits each session once the watermark
+    * passes its end. */
   def sessions(events: DataFrame): DataFrame =
-    events.groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+    events.withWatermark("ts", "10 minutes")
+      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n"))
       .select(col("user_id"), col("session_window.start").as("s_start"),
         col("session_window.end").as("s_end"), col("n"))
@@ -549,24 +565,28 @@ object EventWindows {
       .orderBy("event_type")
   }
 
-  /** Stream-static ENRICHMENT join — the most common structured-
-    * streaming pattern after windowed aggregation: the event stream
-    * joins a slowly-changing dimension (here customer market segment,
-    * keyed c_custkey = user_id + 1) and rolls up per (hour, segment).
-    * Stateless on the stream side (each micro-batch hash-joins the
-    * broadcast dim — no stream state at all), which is why it scales
-    * to any rate; the batch form here is the oracle-gated twin and
-    * [[graft.streaming.Streams.enrichStaticStream]] is the live form
-    * (StreamsSpec asserts live ≡ batch on finalized hours). */
-  def enrichStatic(events: DataFrame, customer: DataFrame): DataFrame =
-    events.join(broadcast(customer.select(
+  /** The stream-static ENRICHMENT join — the most common structured-
+    * streaming pattern after windowed aggregation: events (on a 30 min
+    * watermark) join a slowly-changing dimension, here customer market
+    * segment keyed c_custkey = user_id + 1. Stateless on the stream
+    * side: each micro-batch hash-joins the BROADCAST dim, which is why
+    * it scales to any rate. */
+  def withSegment(events: DataFrame, customer: DataFrame): DataFrame =
+    events.withWatermark("ts", "30 minutes")
+      .join(broadcast(customer.select(
         (col("c_custkey") - 1).as("user_id"), col("c_mktsegment"))),
-      Seq("user_id"))
+        Seq("user_id"))
+
+  /** [[withSegment]] rolled up per (hour, segment). Its live form,
+    * [[graft.streaming.Streams.enrichStaticStream]], shares the join but
+    * not this rollup: countDistinct cannot run in a streaming
+    * aggregation. */
+  def enrichStatic(events: DataFrame, customer: DataFrame): DataFrame =
+    withSegment(events, customer)
       .groupBy(date_trunc("hour", col("ts")).as("hour"),
         col("c_mktsegment"))
       .agg(count(lit(1)).as("n"),
         countDistinct(col("user_id")).as("n_users"))
-      .orderBy("hour", "c_mktsegment")
 
   /** Event-type co-occurrence with LIFT over sessions — the
     * market-basket association rollup (\"users who view in a session
@@ -820,10 +840,12 @@ object EventWindows {
     "stream_watermark_late" -> ((s, d) =>
       watermarkLateSurvivors(Tables.events(s, d)).orderBy("w_start")),
     "stream_interval_join" -> ((s, d) =>
-      intervalJoin(Tables.events(s, d))),
-    // left-outer form: unattributed purchases survive as NULL-click rows.
+      intervalJoin(Tables.events(s, d)).orderBy("p_id", "c_id")),
+    // left-outer form: unattributed purchases survive as NULL-click rows;
+    // nulls first, matching the oracle's NULLS FIRST.
     "stream_interval_join_left" -> ((s, d) =>
-      intervalJoinLeft(Tables.events(s, d))),
+      intervalJoin(Tables.events(s, d), "left")
+        .orderBy(col("p_id"), col("c_id").asc_nulls_first)),
     // hash-assigned A/B experiment readout.
     "events_ab_test" -> ((s, d) => abTest(Tables.events(s, d))),
     // incremental aggregate maintenance: materialized base + last-day
@@ -841,8 +863,9 @@ object EventWindows {
     "events_decay_weighted" -> ((s, d) =>
       decayWeightedValue(Tables.events(s, d))),
     // per-day view → click → purchase conversion funnel (see funnelDaily;
-    // the streaming twin runs the same two-level aggregation live).
-    "funnel_daily_conversion" -> ((s, d) => funnelDaily(Tables.events(s, d))),
+    // a stream runs the same two-level aggregation live).
+    "funnel_daily_conversion" -> ((s, d) =>
+      funnelDaily(Tables.events(s, d)).orderBy("day")),
     // TIME-to-convert: per converting user, seconds from first view to
     // first purchase (integer epoch-second difference — exact), rolled
     // up by conversion day with exact interpolated percentiles. Two
@@ -902,7 +925,7 @@ object EventWindows {
       activeUsers(Tables.events(s, d))),
     // trailing-6-hour z-score per (event_type, hour) — the alerting op.
     "events_anomaly_zscore" -> ((s, d) =>
-      anomalyZscore(Tables.events(s, d))),
+      anomalyZscore(Tables.events(s, d)).orderBy("event_type", "hour")),
     // top-3 event types per sliding hour window (15-min slide).
     "stream_trending_topk" -> ((s, d) =>
       trendingTopK(Tables.events(s, d))),
@@ -919,9 +942,10 @@ object EventWindows {
     // session-level event-type co-occurrence with lift (market-basket).
     "events_cooccurrence_lift" -> ((s, d) =>
       cooccurrenceLift(Tables.events(s, d))),
-    // stream-static enrichment join (batch twin; live form in Streams).
+    // stream-static enrichment join (the live form shares withSegment).
     "stream_enrich_static" -> ((s, d) =>
-      enrichStatic(Tables.events(s, d), Tables.customer(s, d))),
+      enrichStatic(Tables.events(s, d), Tables.customer(s, d))
+        .orderBy("hour", "c_mktsegment")),
     // seasonal-naive (t-168h) backtest MAE per type on the final week.
     "events_forecast_snaive" -> ((s, d) =>
       seasonalNaiveBacktest(Tables.events(s, d)))

@@ -640,10 +640,11 @@ object Similarity {
     * — the fresh-session contract for the residual composition. The
     * residual CODES are per-(query, probed-list) artifacts built
     * in-plan by [[ivfPqResidualTopK]] (corpus-code persistence is
-    * demonstrated by the plain path's `codes` table). A generation
-    * without residual books — written with `writeResiduals = false`, on
-    * a corpus too small for them, or by [[rebuildIvfPqIndex]] — fails
-    * the require rather than answer with another model's books. */
+    * demonstrated by the plain path's `codes` table). Builds and
+    * rebuilds write residual books; a generation without them — written
+    * with `writeResiduals = false`, a compaction of such a generation,
+    * or a corpus too small for the second-stride seed rule — fails the
+    * require rather than answer with another model's books. */
   def ivfPqResidualTopKFromIndex(spark: SparkSession, dir: String,
       emb: DataFrame, queryPred: Column, k: Int, nprobe: Int = 4,
       m: Int = 8, cands: Int = 32): DataFrame = {
@@ -652,8 +653,8 @@ object Similarity {
     val gen = currentGen(spark, dir)
     require(fsOf(spark, dir).exists(gen.residualBooks),
       s"no residual_books in generation ${gen.n} of index artifact " +
-        s"$dir — it was written without residuals, by a rebuild, or " +
-        "for a corpus too small for the second-stride seed rule")
+        s"$dir — it was written without residuals or for a corpus too " +
+        "small for the second-stride seed rule")
     ivfPqResidualTopK(emb, readCentroids(spark, gen), queryPred, k,
       nprobe, m, cands, booksOpt = Some(readBooks(spark,
         gen.residualBooks, m)))
@@ -1012,8 +1013,9 @@ object Similarity {
   /** REBUILD the index with a RETRAINED model (r13 — the drift
     * response that completes the lifecycle: build → ingest → delete →
     * compact → REBUILD): write the caller's model (`centroids`, seeded
-    * from the CURRENT corpus exactly as [[writeIvfPqIndex]] takes them;
-    * no residual books) and recode the whole corpus as generation N+1 —
+    * from the CURRENT corpus exactly as [[writeIvfPqIndex]] takes them,
+    * with residual books trained on the new corpus the way the build
+    * trains them) and recode the whole corpus as generation N+1 —
     * model and codes commit TOGETHER, so a reader that resolved N keeps
     * a CONSISTENT (old model, old codes) pair and a reader after the
     * commit gets the new pair.
@@ -1060,8 +1062,16 @@ object Similarity {
       onAfterFinalCheck: () => Unit = () => ()): Unit = {
     val fs = fsOf(spark, dir)
     val books = pqBooks(centroids, m)
+    // deletes survive the rebuild: the new corpus is emb MINUS the live
+    // tombstones of `prev`, the generation the rebuild supersedes
+    def corpus(prev: IndexGen): DataFrame =
+      if (hasDataFiles(fs, prev.tombstones))
+        emb.join(spark.read.parquet(prev.tombstones.toString)
+            .select(col("vec_id")).distinct(), Seq("vec_id"), "left_anti")
+      else emb
     writeGeneration(spark, dir, carry = true,
-      Some(writeModel(spark, _, centroids, books, None)),
+      Some(next => writeModel(spark, next, centroids, books,
+        Some(corpus(IndexGen(dir, next.n - 1))))),
       onStragglers = (s, next, committed) => {
         val seen = s.stragglers(fs).map(_._2)
         if (seen.nonEmpty) {
@@ -1078,15 +1088,8 @@ object Similarity {
       },
       onBeforeCommit = onBeforeSwap,
       onAfterFinalCheck = onAfterFinalCheck) { snap =>
-      // deletes survive the rebuild: the new corpus is emb MINUS the
-      // current generation's live tombstones
-      val tomb = snap.get.gen.tombstones
-      val live =
-        if (hasDataFiles(fs, tomb))
-          emb.join(spark.read.parquet(tomb.toString)
-              .select(col("vec_id")).distinct(), Seq("vec_id"), "left_anti")
-        else emb
-      codedFrame(live, centroids, books, m).repartition(targetFiles)
+      codedFrame(corpus(snap.get.gen), centroids, books, m)
+        .repartition(targetFiles)
     }
   }
 

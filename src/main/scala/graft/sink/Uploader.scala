@@ -53,8 +53,7 @@ object Uploader {
       commit: DataFrame => DataFrame, logFailed: DataFrame => Unit): Outcome = {
     mkStore().ensureContainer() // create_container, bulkupload.py:110-124
     val t0 = System.nanoTime()
-    val results = uploadFrom(pending, read, mkStore, parallelism,
-      counters = Some(mkCounters(pending.sparkSession))).toDF().cache()
+    val results = uploadFrom(pending, read, mkStore, parallelism).toDF().cache()
     try {
       val r = results.agg(count(lit(1)), countIf(col("ok")),
         coalesce(max(col("attempts")), lit(0))).head()

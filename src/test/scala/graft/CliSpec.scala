@@ -95,6 +95,75 @@ class CliSpec extends AnyFunSuite with TempDirs {
     assert(Files.readString(Paths.get(mroot, ".upload.out")).startsWith("100.00000000% Uploaded"))
   }
 
+  test("a crash after the puts but before the commit, and one after the " +
+      "swap but before the report files, both resume to the no-fault " +
+      "manifest") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import graft.sink.{ManifestStore, Uploader}
+    val src = tempDir("graft-crash-src")
+    val cutoff = Some(Paths.get(src).getFileName.toString)
+    val files = Map("a/x.txt" -> "XX", "fail/p.txt" -> "PP",
+      "fail/q/r.txt" -> "RR", "z.txt" -> "ZZ")
+    files.foreach { case (rel, c) => write(src, rel, c) }
+    def manifest(root: String) = ManifestStore.read(spark, root)
+      .select("id", "path", "uploaded").as[(Long, String, Boolean)]
+      .collect().toSet
+
+    // the no-fault run over the same tree
+    val refRoot = tempDir("graft-crash-ref-m")
+    PrepareUpload.run(spark, src, refRoot)
+    BulkUpload.run(spark, tempDir("graft-crash-ref-store"), refRoot,
+      parallelism = 2, cutoff = cutoff)
+    val want = manifest(refRoot)
+    assert(want.size == files.size && want.forall(_._3))
+
+    // a first run whose fail/ puts all fail leaves those rows pending
+    val mroot = tempDir("graft-crash-m")
+    val store = tempDir("graft-crash-store")
+    PrepareUpload.run(spark, src, mroot)
+    FlakyStore.counts.clear()
+    val u0 = BulkUpload.run(spark, store, mroot, parallelism = 2,
+      cutoff = cutoff,
+      mkStore = root => new FlakyStore(root, failTimes = 99, "fail/"))
+    assert(u0.uploaded == 2 && u0.failed == 2)
+
+    // (a) the upload route puts every pending row, then dies in commit
+    val m = ManifestStore.read(spark, mroot)
+    val uncommitted = BulkUpload.pending(m, cutoff).collect().map(_._2).toSet
+    assert(uncommitted == Set("fail/p.txt", "fail/q/r.txt"))
+    intercept[IllegalStateException](Uploader.step(m,
+      BulkUpload.pending(m, cutoff), BulkUpload.readFile,
+      () => new LocalFsStore(store), 2,
+      _ => throw new IllegalStateException("crash before the commit"),
+      _ => ()))
+    assert(uncommitted.forall(k => Files.exists(Paths.get(store, k))))
+    assert(manifest(mroot).count(!_._3) == 2)
+    // the resume re-puts exactly those rows, once each (a FlakyStore
+    // matching every key and failing none counts every put)
+    FlakyStore.counts.clear()
+    val u1 = BulkUpload.run(spark, store, mroot, parallelism = 2,
+      cutoff = cutoff, mkStore = root => new FlakyStore(root, 0, ""))
+    assert(u1.attempted == 2 && u1.failed == 0 && u1.totalUploaded == 4)
+    assert(FlakyStore.counts.asScala.view.mapValues(_.intValue).toMap ==
+      uncommitted.map(_ -> 1).toMap)
+
+    // (b) the swap committed, the report files were never written
+    Seq(".upload.out", ".upload.report.log")
+      .foreach(f => Files.delete(Paths.get(mroot, f)))
+    val u2 = BulkUpload.run(spark, store, mroot, parallelism = 2,
+      cutoff = cutoff)
+    assert(u2.attempted == 0 && u2.totalUploaded == 4)
+    assert(Files.readString(Paths.get(mroot, ".upload.out"))
+      .startsWith("100.00000000% Uploaded"))
+    assert(Files.readString(Paths.get(mroot, ".upload.report.log"))
+      .contains("Total attempted: 0\nUploaded: 0\nFailed: 0\n"))
+
+    assert(manifest(mroot) == want)
+    files.foreach { case (rel, c) =>
+      assert(Files.readString(Paths.get(store, rel)) == c, rel) }
+  }
+
   test("a file that vanished after indexing is a failed row, not an aborted job") {
     import spark.implicits._
     val src = tempDir("graft-cli-gone")

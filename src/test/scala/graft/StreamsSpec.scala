@@ -621,8 +621,37 @@ class StreamsSpec extends AnyFunSuite with TempDirs {
     }
   }
 
+  test("each shared event operator declares its watermark, and batch " +
+      "input drops it: no registry key's analyzed plan holds one") {
+    def watermarks(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.queryExecution.analyzed.collect {
+        case p if p.nodeName.contains("EventTimeWatermark") => p.nodeName
+      }
+    Seq("stream_rate_tumbling", "stream_sliding", "stream_session",
+      "stream_interval_join", "stream_interval_join_left",
+      "events_attribution", "events_attribution_linear",
+      "funnel_daily_conversion", "events_anomaly_zscore",
+      "stream_trending_topk", "stream_enrich_static").foreach { k =>
+      val found = watermarks(EventWindows.queries(k)(spark, TestSpark.sf0001))
+      assert(found.isEmpty, s"$k: $found")
+    }
+    // the same functions on the stream keep their watermarks
+    val ev = Streams.eventsStream(spark, TestSpark.sf0001)
+    val customer = Tables.customer(spark, TestSpark.sf0001)
+    Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "tumbling" -> EventWindows.tumbling, "sliding" -> EventWindows.sliding,
+      "sessions" -> EventWindows.sessions,
+      "intervalJoin" -> (EventWindows.intervalJoin(_)),
+      "funnelDaily" -> EventWindows.funnelDaily,
+      "hourlyCounts" -> EventWindows.hourlyCounts,
+      "trendingCounts" -> EventWindows.trendingCounts,
+      "withSegment" -> (EventWindows.withSegment(_, customer))).foreach {
+      case (name, op) => assert(watermarks(op(ev)).nonEmpty, name)
+    }
+  }
+
   test("streaming tumbling counts equal the batch (oracle-checked) query") {
-    val stream = Streams.tumblingRate(Streams.eventsStream(spark, TestSpark.sf0001))
+    val stream = EventWindows.tumbling(Streams.eventsStream(spark, TestSpark.sf0001))
     runToMemory(stream, "tumbling_out")
     val got = spark.table("tumbling_out")
       .select(col("w_start").cast("long"), col("n")).as[(Long, Long)]
@@ -643,7 +672,7 @@ class StreamsSpec extends AnyFunSuite with TempDirs {
   }
 
   test("streaming sliding counts equal the batch (oracle-checked) query") {
-    val stream = Streams.slidingRate(Streams.eventsStream(spark, TestSpark.sf0001))
+    val stream = EventWindows.sliding(Streams.eventsStream(spark, TestSpark.sf0001))
     runToMemory(stream, "sliding_out")
     val got = spark.table("sliding_out")
       .select(col("w_start").cast("long"), col("n")).as[(Long, Long)]
@@ -672,7 +701,7 @@ class StreamsSpec extends AnyFunSuite with TempDirs {
   }
 
   test("stream-stream interval join equals the batch (oracle-checked) twin") {
-    val stream = Streams.intervalJoinStream(
+    val stream = EventWindows.intervalJoin(
       Streams.eventsStream(spark, TestSpark.sf0001))
     runToMemory(stream, "ivj_out")
     val got = spark.table("ivj_out")
@@ -695,14 +724,14 @@ class StreamsSpec extends AnyFunSuite with TempDirs {
   test("left-outer stream-stream interval join: matched pairs are batch " +
       "pairs, and emitted NULL-click rows are exactly batch's unmatched " +
       "purchases (watermark-finalized outer results)") {
-    val stream = Streams.intervalJoinLeftStream(
-      Streams.eventsStream(spark, TestSpark.sf0001))
+    val stream = EventWindows.intervalJoin(
+      Streams.eventsStream(spark, TestSpark.sf0001), "left")
     runToMemory(stream, "ivjl_out")
     val got = spark.table("ivjl_out")
       .select(col("p_id"), col("c_id")).collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
       .toSet
-    val want = EventWindows.intervalJoinLeft(Tables.events(spark, TestSpark.sf0001))
+    val want = EventWindows.intervalJoin(Tables.events(spark, TestSpark.sf0001), "left")
       .select(col("p_id"), col("c_id")).collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
       .toSet
@@ -713,7 +742,7 @@ class StreamsSpec extends AnyFunSuite with TempDirs {
     // 2x lookback + allowance must appear, matched or not
     val maxTs = Tables.events(spark, TestSpark.sf0001)
       .agg(max(col("ts")).cast("long")).as[Long].collect().head
-    val mustHave = EventWindows.intervalJoinLeft(Tables.events(spark, TestSpark.sf0001))
+    val mustHave = EventWindows.intervalJoin(Tables.events(spark, TestSpark.sf0001), "left")
       .filter(col("p_ts").cast("long") < maxTs - (2 * 6 + 1) * 3600)
       .select(col("p_id"), col("c_id")).collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
@@ -723,7 +752,7 @@ class StreamsSpec extends AnyFunSuite with TempDirs {
 
   test("streaming daily funnel equals the batch (oracle-checked) twin on " +
       "every finalized day") {
-    val stream = Streams.funnelDailyStream(
+    val stream = EventWindows.funnelDaily(
       Streams.eventsStream(spark, TestSpark.sf0001))
     runToMemory(stream, "funnel_out")
     val got = spark.table("funnel_out")
@@ -761,7 +790,7 @@ class StreamsSpec extends AnyFunSuite with TempDirs {
   test("streaming trending counts, ranked downstream, equal the batch " +
       "(oracle-checked) trendingTopK on every emitted window") {
     import org.apache.spark.sql.expressions.Window
-    val stream = Streams.trendingStream(
+    val stream = EventWindows.trendingCounts(
       Streams.eventsStream(spark, TestSpark.sf0001))
     runToMemory(stream, "trending_out")
     val w = Window.partitionBy("w_start").orderBy(desc("n"),
@@ -933,7 +962,7 @@ class StreamsSpec extends AnyFunSuite with TempDirs {
 
   test("streaming hourly counts, scored downstream by anomalyFromHourly, " +
       "equal the batch anomalyZscore on every emitted hour") {
-    val stream = Streams.anomalyStream(
+    val stream = EventWindows.hourlyCounts(
       Streams.eventsStream(spark, TestSpark.sf0001))
     runToMemory(stream, "anomaly_out")
     def keyed(df: org.apache.spark.sql.DataFrame) = df
@@ -1145,26 +1174,33 @@ class StreamsSpec extends AnyFunSuite with TempDirs {
     assert(last.getAs[Long]("droppedLate") == 1L)
   }
 
-  test("flatMapGroupsWithState sessions agree with session_window on closed sessions") {
-    runToMemory(Streams.sessionizeWithState(
-      Streams.eventsStream(spark, TestSpark.sf0001)).toDF(), "fmgs_out")
-    val got = spark.table("fmgs_out")
-      .select(col("userId"), col("firstTs").cast("long"), col("nEvents"))
-      .as[(Long, Long, Long)].collect().toSet
-    val want = EventWindows.sessions(Tables.events(spark, TestSpark.sf0001))
-      .select(col("user_id"), col("s_start").cast("long"), col("n"))
-      .as[(Long, Long, Long)].collect().toSet
-    // append-mode state emits only *closed* sessions (watermark tail stays
-    // open) — every emitted session must match the batch result exactly.
+  test("live sessions are stream_session rows, complete before the final " +
+      "watermark") {
+    runToMemory(EventWindows.sessions(
+      Streams.eventsStream(spark, TestSpark.sf0001)), "sessions_out")
+    def keyed(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("user_id"), unix_micros(col("s_start")),
+        unix_micros(col("s_end")), col("n"))
+      .as[(Long, Long, Long, Long)].collect().toSet
+    val got = keyed(spark.table("sessions_out"))
+    val want = keyed(EventWindows.queries("stream_session")(
+      spark, TestSpark.sf0001))
+    // append mode emits a session once the watermark (max ts - 10 min)
+    // passes its end; every emitted session equals a batch session
     assert(got.nonEmpty)
     assert(got.subsetOf(want), (got -- want).take(3).toString)
+    val maxUs = Tables.events(spark, TestSpark.sf0001)
+      .agg(max(unix_micros(col("ts")))).as[Long].collect().head
+    val mustHave = want.filter(_._3 < maxUs - 600L * 1000000L)
+    assert(mustHave.nonEmpty && mustHave.subsetOf(got),
+      (mustHave -- got).take(3).toString)
   }
 
   test("RateMonitor captures processedRowsPerSecond like set_speed") {
     val mon = new Streams.RateMonitor
     spark.streams.addListener(mon)
     try {
-      runToMemory(Streams.tumblingRate(
+      runToMemory(EventWindows.tumbling(
         Streams.eventsStream(spark, TestSpark.sf0001)), "rate_out")
       // listener events are delivered asynchronously
       val deadline = System.currentTimeMillis() + 10000
